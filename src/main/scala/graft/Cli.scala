@@ -246,164 +246,10 @@ object Cli {
     // exit rules, ONE JSON object on stdout — what a fleet monitor
     // over a 100 TB store parses, instead of grepping the table.
     case "doctor" :: "--index" :: idxDir :: "--json" :: Nil =>
-      indexDoctorJson(spark, idxDir)
+      indexDoctorJson(idxDir, indexFacts(spark, idxDir))
 
     case "doctor" :: "--index" :: idxDir :: Nil =>
-      // a VERSIONED STORE base (CURRENT pointer / v<N> generations)
-      // resolves to its live generation first — the doctor audits what
-      // readers actually scan
-      val store = scala.util.Try(
-        operators.ProductQuant.currentGeneration(spark, idxDir))
-        .toOption.flatten
-      val resolved = store match {
-        case Some((g, dir)) =>
-          println(s"versioned store: auditing live generation v$g")
-          dir
-        case None => idxDir
-      }
-      val audit = scala.util.Try(
-        operators.ProductQuant.indexLayoutAudit(spark, resolved).collect())
-      audit match {
-        case scala.util.Failure(e) =>
-          System.err.println(
-            s"not a readable ccid-partitioned index at '$idxDir': " +
-              firstLine(e))
-          2
-        case scala.util.Success(rows) =>
-          println(f"${"ccid"}%6s ${"n_rows"}%10s ${"n_files"}%8s " +
-            f"${"bytes"}%12s flag")
-          rows.foreach { r =>
-            println(f"${r.getInt(0)}%6d ${r.getLong(1)}%10d " +
-              f"${r.getLong(2)}%8d ${r.getLong(3)}%12d ${r.getString(4)}")
-          }
-          // tombstone observability (VERDICT r16 #2): the sidecar rides
-          // into every store probe's anti-join but no probe plan prints
-          // it — the doctor is where its growth must surface, with the
-          // compaction remedy named (compactStore applies the deletes
-          // physically, folds the sidecar to one file, and GCs the ids
-          // no retained generation still contains). Store-only: a bare
-          // index has no delete verb.
-          // tracks an interrupted tombstone GC: a state where every
-          // probe and delete refuses, which MUST flip the doctor's
-          // exit to 1 even over a clean layout (round-17 review-2 #3
-          // — a health check scripted on the exit code would
-          // otherwise report healthy on a store whose every probe is
-          // bricked)
-          var tombInconsistent = false
-          var booksUnreadable = false
-          if (store.nonEmpty) {
-            // cost note: the permille denominator is a distinct count
-            // over the live generation's vec_id column — one
-            // column-pruned scan, on top of the audit's own. The
-            // doctor is a maintenance diagnostic and prices like one;
-            // no probe path pays this. An INTERRUPTED GC (sidecar
-            // parked at .gc_old) makes tombstones() refuse loudly —
-            // surface that as the finding it is, with the recovering
-            // remedy named, instead of crashing the doctor.
-            scala.util.Try {
-              operators.ProductQuant.tombstoneFsStats(spark, idxDir)
-                .foreach { case (files, bytes) =>
-                  val n = operators.ProductQuant.tombstones(spark, idxDir)
-                    .map(_.count()).getOrElse(0L)
-                  val liveVecs = spark.read.parquet(resolved)
-                    .select("vec_id").distinct().count()
-                  val pm = if (liveVecs == 0) 0L else 1000L * n / liveVecs
-                  val over =
-                    if (bytes >
-                      operators.ProductQuant.TombstoneBroadcastBytes)
-                      " [past the broadcast budget: probes anti-join " +
-                        "un-broadcast]"
-                    else ""
-                  // versioned-sidecar layout (round 20): which fold
-                  // generation is live and how many loose appends
-                  // stack on it — the growth compact's GC will fold
-                  val layout = operators.ProductQuant
-                    .tombstoneLayout(spark, idxDir)
-                    .flatMap(_._1 match {
-                      case Some(v) => Some(s", fold v$v")
-                      case None    => None
-                    }).getOrElse("")
-                  println(s"tombstones: $n ids in $files file(s)$layout, " +
-                    s"$bytes B, ~$pm permille of live vectors$over" +
-                    " — remedy: compact --index")
-                }
-            }.failed.foreach { e =>
-              tombInconsistent = true
-              println(s"tombstones: INCONSISTENT — ${firstLine(e)}")
-            }
-            // self-description check (r17): a bookless live generation
-            // is a probe-only hazard — ivfadcProbeStore fails loudly
-            // on it, and the operator should learn that here, not
-            // from the failed probe. ABSENT (NoSuchElementException —
-            // tolerated, the bookless contract) and UNREADABLE (any
-            // other failure — a corrupt sidecar, the case compaction
-            // and retrain deliberately FAIL on) are different findings
-            // and must not share a line or an exit code (ADVICE r17)
-            scala.util.Try(
-              operators.ProductQuant.loadQuantizersMeta(spark, resolved))
-            match {
-              case scala.util.Success(((coarse, bySub), meta)) =>
-                println(s"books: present (scheme ${meta.scheme}, " +
-                  s"coarse ${coarse.length}, fine ${bySub.size} sub x " +
-                  s"${bySub.headOption.map(_._2.length).getOrElse(0)})")
-              case scala.util.Failure(_: java.util.NoSuchElementException) =>
-                println("books: ABSENT — store probes need " +
-                  "explicitly-held quantizers; republish with books")
-              case scala.util.Failure(e) =>
-                booksUnreadable = true
-                println(s"books: UNREADABLE — ${firstLine(e)}")
-            }
-            // writer-lease observability (VERDICT r18 #7): only
-            // mutators could see a standing _lease; the doctor is the
-            // fleet-monitoring view of a stuck writer. Informational —
-            // a lease never blocks readers, and a stale one reclaims
-            // on the next mutation — so the exit code is unchanged.
-            operators.StoreLease.holder(spark, idxDir).foreach {
-              case (id, op, mtime) =>
-                val age = (System.currentTimeMillis() - mtime) / 1000L
-                if (age * 1000L > operators.StoreLease.staleMillis)
-                  println(s"lease: STALE — held by $id ($op, ${age}s " +
-                    "old, past the " +
-                    s"${operators.StoreLease.staleMillis / 60000} min " +
-                    "TTL): the holder crashed or lost its heartbeat; " +
-                    "the next mutation reclaims it")
-                else
-                  println(s"lease: held by $id ($op, ${age}s old) — " +
-                    "a writer is active; concurrent mutations refuse")
-            }
-          }
-          val bad = rows.map(_.getString(4)).filter(_ != "ok")
-          // a hot list past the salt clamp's 128x-mean boundary can
-          // NEVER clear by salting (deriveHotLists scaladoc) — naming
-          // the salted rewrite for it would send the operator into the
-          // doctor->compact ping-pong the boundary doc warns about;
-          // the remedy there is coarse-quantizer retraining
-          val mean = rows.map(_.getLong(1)).sum.toDouble /
-            math.max(1, rows.length)
-          val pastClamp = rows.filter(r => r.getString(4) == "hot_list"
-            && r.getLong(1) > 128.0 * mean).map(_.getInt(0))
-          if (bad.isEmpty && (tombInconsistent || booksUnreadable)) {
-            val findings = Seq(
-              if (tombInconsistent) Some("tombstone sidecar " +
-                "inconsistent (compact --index recovers it)") else None,
-              if (booksUnreadable) Some("quantizer sidecar unreadable " +
-                "(republish with books — compaction/retrain refuse on " +
-                "it)") else None).flatten
-            println(s"index needs maintenance: ${findings.mkString("; ")}")
-            1
-          } else if (bad.isEmpty) { println("index layout ok"); 0 }
-          else {
-            println(s"index needs maintenance: " +
-              bad.groupBy(identity).map { case (f, v) =>
-                s"${v.length}x $f" }.toSeq.sorted.mkString(", ") +
-              " (split_files -> compactIndex; hot_list -> salted rewrite)")
-            if (pastClamp.nonEmpty)
-              println(s"list(s) ${pastClamp.sorted.mkString(",")} exceed " +
-                "128x the mean — past the salt clamp, salting cannot " +
-                "clear them: remedy is retrain --index")
-            1
-          }
-      }
+      indexDoctorText(idxDir, indexFacts(spark, idxDir))
 
     // The remedy `doctor --index` names for split_files, executable
     // from the same shell: compact, then re-print the audit. Exit
@@ -717,112 +563,249 @@ object Cli {
     Option(e.getMessage).flatMap(_.linesIterator.nextOption())
       .getOrElse(e.getClass.getSimpleName)
 
+  /** Tombstone sidecar facts of a store (VERDICT r16 #2; the versioned
+    * layout of round 20): the sidecar rides into every store probe's
+    * anti-join but no probe plan prints it, so the doctor is where its
+    * growth surfaces, with the compaction remedy named. `foldVersion`
+    * is None pre-fold or on a legacy flat layout; `looseFiles` counts
+    * the unconsumed appends stacked on it.
+    */
+  private case class TombFacts(ids: Long, files: Long, bytes: Long,
+                               foldVersion: Option[Int], looseFiles: Int,
+                               permille: Long) {
+    def overBudget: Boolean =
+      bytes > operators.ProductQuant.TombstoneBroadcastBytes
+  }
+
+  /** The live generation's quantizer sidecar: book sizes and the
+    * encoding contract. `fineKs` is the first subspace's book size. */
+  private case class BookFacts(coarse: Int, subs: Int, fineKs: Int,
+                               meta: operators.ProductQuant.IndexMeta)
+
+  /** A standing writer lease (VERDICT r18 #7): informational — a lease
+    * never blocks readers, and a stale one reclaims on the next
+    * mutation — so it never moves the exit code. */
+  private case class LeaseFacts(holder: String, op: String,
+                                ageSeconds: Long) {
+    def stale: Boolean =
+      ageSeconds * 1000L > operators.StoreLease.staleMillis
+  }
+
+  /** Everything `doctor --index` reports, gathered ONCE and rendered as
+    * text or JSON (VERDICT r17 #7), so the two arms cannot drift. A
+    * VERSIONED STORE base (CURRENT pointer / v<N> generations) resolves
+    * to its live generation first — the doctor audits what readers
+    * actually scan. The sidecar facts (None for a bare index, or when
+    * the audit failed) each keep their failure: an INCONSISTENT
+    * tombstone sidecar (an interrupted GC, which makes every probe and
+    * delete refuse) and an UNREADABLE quantizer sidecar (the case
+    * compaction and retrain deliberately fail on) are findings, while
+    * ABSENT books (NoSuchElementException) are the tolerated bookless
+    * contract (ADVICE r17).
+    */
+  private case class IndexFacts(
+      store: Option[(Int, String)], resolved: String,
+      audit: scala.util.Try[Array[org.apache.spark.sql.Row]],
+      tombs: Option[scala.util.Try[Option[TombFacts]]],
+      books: Option[scala.util.Try[BookFacts]],
+      lease: Option[LeaseFacts]) {
+    private def rows = audit.get
+    def bad: Seq[String] = rows.toSeq.map(_.getString(4)).filter(_ != "ok")
+    def tombInconsistent: Boolean = tombs.exists(_.isFailure)
+    def booksUnreadable: Boolean = books.exists(_.failed.toOption.exists(
+      e => !e.isInstanceOf[java.util.NoSuchElementException]))
+    /** Hot lists past the salt clamp's 128x-mean boundary: they can
+      * NEVER clear by salting (deriveHotLists scaladoc), so the remedy
+      * named for them is coarse-quantizer retraining, not the salted
+      * rewrite that would start the doctor->compact ping-pong. */
+    def pastClamp: Seq[Int] = {
+      val mean = rows.map(_.getLong(1)).sum.toDouble / math.max(1, rows.length)
+      rows.toSeq.filter(r => r.getString(4) == "hot_list" &&
+        r.getLong(1) > 128.0 * mean).map(_.getInt(0)).sorted
+    }
+    /** 2 = not a readable partitioned index; 1 = a list needs action or
+      * a sidecar is inconsistent/unreadable (round-17 review-2 #3 — a
+      * health check scripted on the exit code must not report healthy
+      * on a store whose every probe is bricked); else 0. */
+    def exit: Int =
+      if (audit.isFailure) 2
+      else if (bad.nonEmpty || tombInconsistent || booksUnreadable) 1
+      else 0
+  }
+
+  private def indexFacts(spark: SparkSession, idxDir: String): IndexFacts = {
+    val store = scala.util.Try(
+      operators.ProductQuant.currentGeneration(spark, idxDir))
+      .toOption.flatten
+    val resolved = store.map(_._2).getOrElse(idxDir)
+    val audit = scala.util.Try(
+      operators.ProductQuant.indexLayoutAudit(spark, resolved).collect())
+    if (store.isEmpty || audit.isFailure)
+      return IndexFacts(store, resolved, audit, None, None, None)
+    // cost note: the permille denominator is a distinct count over the
+    // live generation's vec_id column — one column-pruned scan, on top
+    // of the audit's own. The doctor is a maintenance diagnostic and
+    // prices like one; no probe path pays this.
+    val tombs = scala.util.Try {
+      operators.ProductQuant.tombstoneFsStats(spark, idxDir).map {
+        case (files, bytes) =>
+          val n = operators.ProductQuant.tombstones(spark, idxDir)
+            .map(_.count()).getOrElse(0L)
+          val liveVecs = spark.read.parquet(resolved)
+            .select("vec_id").distinct().count()
+          val (foldV, loose) = operators.ProductQuant
+            .tombstoneLayout(spark, idxDir).getOrElse((None, 0))
+          TombFacts(n, files, bytes, foldV, loose,
+            if (liveVecs == 0) 0L else 1000L * n / liveVecs)
+      }
+    }
+    val books = scala.util.Try(
+      operators.ProductQuant.loadQuantizersMeta(spark, resolved)).map {
+      case ((coarse, bySub), meta) => BookFacts(coarse.length, bySub.size,
+        bySub.headOption.map(_._2.length).getOrElse(0), meta)
+    }
+    val lease = operators.StoreLease.holder(spark, idxDir).map {
+      case (id, op, mtime) =>
+        LeaseFacts(id, op, (System.currentTimeMillis() - mtime) / 1000L)
+    }
+    IndexFacts(store, resolved, audit, Some(tombs), Some(books), lease)
+  }
+
+  /** `doctor --index <dir>` (VERDICT r14 #8): the audit table, then a
+    * store's sidecar and lease lines, then the verdict line naming the
+    * remedy (split_files -> compaction, hot_list -> salted rewrite,
+    * past the clamp -> retrain). */
+  private def indexDoctorText(idxDir: String, f: IndexFacts): Int = {
+    f.store.foreach { case (g, _) =>
+      println(s"versioned store: auditing live generation v$g") }
+    f.audit match {
+      case scala.util.Failure(e) =>
+        System.err.println(
+          s"not a readable ccid-partitioned index at '$idxDir': " +
+            firstLine(e))
+      case scala.util.Success(rows) =>
+        println(f"${"ccid"}%6s ${"n_rows"}%10s ${"n_files"}%8s " +
+          f"${"bytes"}%12s flag")
+        rows.foreach { r =>
+          println(f"${r.getInt(0)}%6d ${r.getLong(1)}%10d " +
+            f"${r.getLong(2)}%8d ${r.getLong(3)}%12d ${r.getString(4)}")
+        }
+        f.tombs.foreach {
+          case scala.util.Success(t) => t.foreach { t =>
+            val over =
+              if (t.overBudget) " [past the broadcast budget: probes " +
+                "anti-join un-broadcast]"
+              else ""
+            println(s"tombstones: ${t.ids} ids in ${t.files} file(s)" +
+              t.foldVersion.fold("")(v => s", fold v$v") +
+              s", ${t.bytes} B, ~${t.permille} permille of live " +
+              s"vectors$over — remedy: compact --index")
+          }
+          case scala.util.Failure(e) =>
+            println(s"tombstones: INCONSISTENT — ${firstLine(e)}")
+        }
+        f.books.foreach {
+          case scala.util.Success(b) =>
+            println(s"books: present (scheme ${b.meta.scheme}, " +
+              s"coarse ${b.coarse}, fine ${b.subs} sub x ${b.fineKs})")
+          case scala.util.Failure(_: java.util.NoSuchElementException) =>
+            println("books: ABSENT — store probes need " +
+              "explicitly-held quantizers; republish with books")
+          case scala.util.Failure(e) =>
+            println(s"books: UNREADABLE — ${firstLine(e)}")
+        }
+        f.lease.foreach { l =>
+          if (l.stale)
+            println(s"lease: STALE — held by ${l.holder} (${l.op}, " +
+              s"${l.ageSeconds}s old, past the " +
+              s"${operators.StoreLease.staleMillis / 60000} min " +
+              "TTL): the holder crashed or lost its heartbeat; " +
+              "the next mutation reclaims it")
+          else
+            println(s"lease: held by ${l.holder} (${l.op}, " +
+              s"${l.ageSeconds}s old) — a writer is active; concurrent " +
+              "mutations refuse")
+        }
+        if (f.bad.nonEmpty) {
+          println(s"index needs maintenance: " +
+            f.bad.groupBy(identity).map { case (flag, v) =>
+              s"${v.length}x $flag" }.toSeq.sorted.mkString(", ") +
+            " (split_files -> compactIndex; hot_list -> salted rewrite)")
+          if (f.pastClamp.nonEmpty)
+            println(s"list(s) ${f.pastClamp.mkString(",")} exceed " +
+              "128x the mean — past the salt clamp, salting cannot " +
+              "clear them: remedy is retrain --index")
+        } else if (f.exit == 1) {
+          val findings = Seq(
+            if (f.tombInconsistent) Some("tombstone sidecar " +
+              "inconsistent (compact --index recovers it)") else None,
+            if (f.booksUnreadable) Some("quantizer sidecar unreadable " +
+              "(republish with books — compaction/retrain refuse on " +
+              "it)") else None).flatten
+          println(s"index needs maintenance: ${findings.mkString("; ")}")
+        } else println("index layout ok")
+    }
+    f.exit
+  }
+
   /** `doctor --index <dir> --json` (VERDICT r17 #7): the text doctor's
-    * facts — resolved generation, per-list layout audit, tombstone
-    * sidecar state, book presence + encoding scheme — as one JSON
-    * object, with the SAME exit-code rules (CliSpec pins text/JSON
-    * exit parity across store states, so the two arms cannot drift
-    * silently). Hand-rolled emission: the only JSON this CLI writes is
-    * flat and bounded (≤ nCoarse list rows), and the project adds no
+    * facts as one JSON object with the same exit — what a fleet monitor
+    * over a 100 TB store parses, instead of grepping the table.
+    * Hand-rolled emission: the only JSON this CLI writes is flat and
+    * bounded (≤ nCoarse list rows), and the project adds no
     * dependencies.
     */
-  private def indexDoctorJson(spark: SparkSession, idxDir: String): Int = {
+  private def indexDoctorJson(idxDir: String, f: IndexFacts): Int = {
     def js(s: String) = "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val store = scala.util.Try(
-      operators.ProductQuant.currentGeneration(spark, idxDir))
-      .toOption.flatten
-    val resolved = store.map(_._2).getOrElse(idxDir)
-    scala.util.Try(
-      operators.ProductQuant.indexLayoutAudit(spark, resolved).collect())
-    match {
+    f.audit match {
       case scala.util.Failure(e) =>
         println(s"""{"dir":${js(idxDir)},"error":${js(firstLine(e))},""" +
-          s""""exit":2}""")
-        2
+          s""""exit":${f.exit}}""")
       case scala.util.Success(rows) =>
         val lists = rows.map { r =>
           s"""{"ccid":${r.getInt(0)},"n_rows":${r.getLong(1)},""" +
             s""""n_files":${r.getLong(2)},"bytes":${r.getLong(3)},""" +
             s""""flag":${js(r.getString(4))}}"""
         }.mkString("[", ",", "]")
-        var tombInconsistent = false
-        val tombJson =
-          if (store.isEmpty) "null"
-          else scala.util.Try {
-            operators.ProductQuant.tombstoneFsStats(spark, idxDir)
-              .map { case (files, bytes) =>
-                val n = operators.ProductQuant.tombstones(spark, idxDir)
-                  .map(_.count()).getOrElse(0L)
-                val liveVecs = spark.read.parquet(resolved)
-                  .select("vec_id").distinct().count()
-                val pm = if (liveVecs == 0) 0L else 1000L * n / liveVecs
-                val over = bytes >
-                  operators.ProductQuant.TombstoneBroadcastBytes
-                // versioned-sidecar layout (round 20): live fold
-                // version (null pre-fold / legacy flat) + unconsumed
-                // loose append count
-                val (foldV, loose) = operators.ProductQuant
-                  .tombstoneLayout(spark, idxDir)
-                  .getOrElse((None, 0))
-                s"""{"ids":$n,"files":$files,"bytes":$bytes,""" +
-                  s""""fold_version":${foldV.map(_.toString)
-                    .getOrElse("null")},"loose_files":$loose,""" +
-                  s""""permille":$pm,"over_broadcast_budget":$over}"""
-              }.getOrElse("null")
-          }.recover { case e =>
-            tombInconsistent = true
-            s"""{"inconsistent":true,"error":${js(firstLine(e))}}"""
-          }.get
-        var booksUnreadable = false
-        val booksJson =
-          if (store.isEmpty) "null"
-          else scala.util.Try(
-            operators.ProductQuant.loadQuantizersMeta(spark, resolved))
-          match {
-            case scala.util.Success(((coarse, bySub), meta)) =>
-              s"""{"status":"present","scheme":${js(meta.scheme)},""" +
-                s""""coarse":${coarse.length},"subs":${bySub.size},""" +
-                s""""ks":${meta.ks},"dim":${meta.dim}}"""
-            case scala.util.Failure(_: java.util.NoSuchElementException) =>
-              """{"status":"absent"}"""
-            case scala.util.Failure(e) =>
-              booksUnreadable = true
-              s"""{"status":"unreadable","error":${js(firstLine(e))}}"""
+        val tombJson = f.tombs.fold("null") {
+          case scala.util.Success(t) => t.fold("null") { t =>
+            s"""{"ids":${t.ids},"files":${t.files},"bytes":${t.bytes},""" +
+              s""""fold_version":${t.foldVersion.map(_.toString)
+                .getOrElse("null")},"loose_files":${t.looseFiles},""" +
+              s""""permille":${t.permille},""" +
+              s""""over_broadcast_budget":${t.overBudget}}"""
           }
-        // the text doctor's lease line, machine-readable; null when no
-        // writer holds the store (informational — exit unchanged)
-        val leaseJson =
-          if (store.isEmpty) "null"
-          else operators.StoreLease.holder(spark, idxDir).map {
-            case (id, op, mtime) =>
-              val age = (System.currentTimeMillis() - mtime) / 1000L
-              val stale = age * 1000L > operators.StoreLease.staleMillis
-              s"""{"holder":${js(id)},"op":${js(op)},""" +
-                s""""age_seconds":$age,"stale":$stale}"""
-          }.getOrElse("null")
-        // the text doctor's exit rules, verbatim
-        val bad = rows.map(_.getString(4)).filter(_ != "ok")
-        val mean = rows.map(_.getLong(1)).sum.toDouble /
-          math.max(1, rows.length)
-        val pastClamp = rows.filter(r => r.getString(4) == "hot_list"
-          && r.getLong(1) > 128.0 * mean).map(_.getInt(0)).sorted
-        val exit =
-          if (bad.nonEmpty || tombInconsistent || booksUnreadable) 1
-          else 0
-        val gen = store.map(_._1.toString).getOrElse("null")
-        println(s"""{"dir":${js(idxDir)},"store":${store.nonEmpty},""" +
-          s""""generation":$gen,"resolved_dir":${js(resolved)},""" +
+          case scala.util.Failure(e) =>
+            s"""{"inconsistent":true,"error":${js(firstLine(e))}}"""
+        }
+        val booksJson = f.books.fold("null") {
+          case scala.util.Success(b) =>
+            s"""{"status":"present","scheme":${js(b.meta.scheme.name)},""" +
+              s""""coarse":${b.coarse},"subs":${b.subs},""" +
+              s""""ks":${b.meta.ks},"dim":${b.meta.dim}}"""
+          case scala.util.Failure(_: java.util.NoSuchElementException) =>
+            """{"status":"absent"}"""
+          case scala.util.Failure(e) =>
+            s"""{"status":"unreadable","error":${js(firstLine(e))}}"""
+        }
+        val leaseJson = f.lease.fold("null") { l =>
+          s"""{"holder":${js(l.holder)},"op":${js(l.op)},""" +
+            s""""age_seconds":${l.ageSeconds},"stale":${l.stale}}"""
+        }
+        val gen = f.store.map(_._1.toString).getOrElse("null")
+        println(s"""{"dir":${js(idxDir)},"store":${f.store.nonEmpty},""" +
+          s""""generation":$gen,"resolved_dir":${js(f.resolved)},""" +
           s""""lists":$lists,"tombstones":$tombJson,"books":$booksJson,""" +
           s""""lease":$leaseJson,""" +
-          s""""past_clamp":${pastClamp.mkString("[", ",", "]")},""" +
-          s""""exit":$exit}""")
-        exit
+          s""""past_clamp":${f.pastClamp.mkString("[", ",", "]")},""" +
+          s""""exit":${f.exit}}""")
     }
+    f.exit
   }
 
   private def parseConf(path: String): EngineConf =

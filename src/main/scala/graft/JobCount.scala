@@ -6,15 +6,18 @@ import scala.collection.mutable.{ArrayBuffer, LinkedHashMap}
 /** One-off diagnostic: count Spark JOBS (actions) a named query fires,
   * with per-job wall durations (start→end) so overhead-bound faces show
   * WHERE their fixed cost sits. Repeats each query `SPARK_GRAFT_BENCH_REPS`
-  * times (default 2) and reports the LAST rep (warm plan/codegen).
+  * times (default 2) and reports the LAST rep (warm plan/codegen), on
+  * `local[SPARK_GRAFT_CPUS]` (default 4) like [[Bench]] and
+  * [[graft.tools.TimeQueries]].
   */
 object JobCount {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = {
-      val b = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
+      val b = SparkSession.builder().master(s"local[$cpus]")
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.ui.enabled", "false")
       Tables.sessionConf.foreach { case (k, v) => b.config(k, v) }
       b.getOrCreate()

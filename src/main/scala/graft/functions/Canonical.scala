@@ -41,10 +41,6 @@ import org.apache.spark.sql.types._
   *   - strings: verbatim
   *   - NULL: sentinel "@NULL@" (concat_ws silently drops nulls — SURVEY.md
   *     §7.4 "NULL semantics in row hash")
-  *
-  * A second, faster lane [[fingerprintFast]] uses `xxhash64` for
-  * engine-internal use (two independent hash lanes per SURVEY.md §7.4
-  * "collision discipline"); only the portable lane is oracle-checked.
   */
 object Canonical {
 
@@ -144,12 +140,6 @@ object Canonical {
   /** First 12 hex chars of a hex string, as a bigint (48 bits). */
   def hex48(hexCol: Column): Column =
     conv(substring(hexCol, 1, 12), 16, 10).cast(LongType)
-
-  /** Engine-internal second hash lane: xxhash64 over the same serial form.
-    * Codegen'd, faster, not reproducible outside Spark.
-    */
-  def fingerprintFast(cols: Seq[(Column, DataType)]): Column =
-    xxhash64(serial(cols))
 
   /** MySQL/TiDB-shaped rendering of one column for the CRC-compat lane —
     * the string CONCAT_WS sees when sync_diff_inspector's checksum SQL

@@ -22,7 +22,7 @@ import org.apache.spark.sql.types._
   * ann_lsh faces.
   *
   * VERDICT r14 #3 ledger — the requested standalone-vs-in-suite pair,
-  * measured (QBench min-of-5 at sf0.1, 2026-08-15): ann_recall
+  * measured (subset-bench min-of-5 at sf0.1, 2026-08-15): ann_recall
   * STANDALONE 1.08 s vs IN-SUITE 0.89 s (BENCH_r14) — standalone ≥
   * in-suite, so the r11→r14 drift was NOT the JL-style suite JIT
   * pollution (identical plans, no context effect); it is absolute

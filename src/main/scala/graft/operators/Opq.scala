@@ -77,197 +77,73 @@ object Opq {
   private def rnd(x: Double): Long =
     if (x < 0) -Math.round(-x) else Math.round(x)
 
-  /** Sign of the alternating spike direction u (±1; u = e/√d = e/8). */
-  private def e(i: Int): Int = if (i % 2 == 0) 1 else -1
-
-  /** The spike-planted corpus as (vec_id, embedding: array<double>) —
-    * embedding cells are x'm/1e6, the exact doubles both engines feed
-    * the covariance census. S = Σ eⱼ·xmⱼ is one exact-long unrolled sum
-    * per row; the spike term eᵢ·sgnDiv(S, 32) adds per cell.
+  /** Sign of planted direction j at dimension i (±1): u₁ alternates
+    * +,−,+,… ; u₂ runs in blocks of two, +,+,−,−,… — orthogonal to u₁
+    * over any 4-aligned span, d=64 included. Both are non-axis
+    * directions of norm √d (u = e/8 at d=64).
     */
-  def plantedSpike(embeddings: DataFrame, d: Int = Pca.Dim): DataFrame = {
-    val s = (0 until d).map(j =>
-      s"(${e(j)}L * cast(round(cast(embedding[$j] as double) * 1000000) as bigint))")
-      .mkString(" + ")
-    graft.Tables.spread(embeddings)
-      .withColumn("__s", expr(s"($s)"))
+  private def e(j: Int, i: Int): Int =
+    if (j == 0) (if (i % 2 == 0) 1 else -1)
+    else if ((i / 2) % 2 == 0) 1 else -1
+
+  /** The RANK-k spike-planted corpus (k ∈ {1, 2}) as
+    * (vec_id, embedding: array<double>) — embedding cells are x'm/1e6,
+    * the exact doubles both engines feed the covariance census. Each
+    * direction j adds eⱼᵢ·sgnDiv(Sⱼ, 32) per cell, Sⱼ = Σᵢ eⱼᵢ·xmᵢ one
+    * exact-long unrolled sum per row over the RAW micro cells. At k=2
+    * the two directions carry equal strength, so the planted covariance
+    * holds a full 2-D correlated PLANE, of which a single Householder
+    * repairs only one direction (whichever mix the power iterate lands
+    * on inside the near-degenerate eigenspace — the composed pair
+    * repairs the whole plane either way, which is exactly the claim the
+    * k=2 gauge measures).
+    */
+  def plantedSpike(embeddings: DataFrame, k: Int,
+                   d: Int = Pca.Dim): DataFrame = {
+    require(k == 1 || k == 2, s"plantedSpike: k must be 1 or 2, got $k")
+    val sums = (0 until k).map(j => s"__s$j" -> (0 until d).map(i =>
+      s"(${e(j, i)}L * cast(round(cast(embedding[$i] as double) * 1000000) as bigint))")
+      .mkString(" + "))
+    val terms = (0 until k).map { j =>
+      val sign = if (j == 0) "i % 2 = 0" else "(i div 2) % 2 = 0"
+      s"""
+         |    + (case when $sign then 1L else -1L end)
+         |    * (case when __s$j < 0 then -(abs(__s$j) div $SpikeDiv)
+         |       else abs(__s$j) div $SpikeDiv end)""".stripMargin
+    }.mkString
+    sums.foldLeft(graft.Tables.spread(embeddings)) { case (df, (c, sum)) =>
+        df.withColumn(c, expr(s"($sum)")) }
       .select(col("vec_id"), expr(
         s"""transform(sequence(0, ${d - 1}), i ->
-           |  (cast(round(cast(embedding[i] as double) * 1000000) as bigint)
-           |    + (case when i % 2 = 0 then 1L else -1L end)
-           |    * (case when __s < 0 then -(abs(__s) div $SpikeDiv)
-           |       else abs(__s) div $SpikeDiv end))
+           |  (cast(round(cast(embedding[i] as double) * 1000000) as bigint)$terms)
            |  / cast(1000000 as double))""".stripMargin).as("embedding"))
   }
 
-  /** Sign of the SECOND planted direction u₂ (±1 in blocks of two:
-    * +,+,−,−,… — orthogonal to [[e]]'s alternating u₁ over any
-    * 4-aligned span, d=64 included).
+  /** The gauge over k ∈ {1, 2} reflections: mean PQ reconstruction
+    * error per vector in milli² units (Σ per-vector min-distance totals
+    * div 1e6, then div n) on the rank-k plant, per lane —
+    *  - k=1: `identity` vs `rotated` by the single Householder from v₁
+    *    ([[Pca.topComponent]]); the spec pins rotated < identity;
+    *  - k=2 (VERDICT r19 #4): `identity`, `rotated1` and `rotated2`,
+    *    the single and the COMPOSED two-reflection rotation from the
+    *    deflated (v₁, v₂) pair ([[Pca.topTwoComponents]] through
+    *    [[graft.operators.ProductQuant.composeHouseholders]] — the same
+    *    integers the store's k-row rotation sidecar persists). The
+    *    single reflection leaves subspaces 2..M correlated; the second
+    *    repairs direction 2, so rotated2 < rotated1 < identity
+    *    (spec-pinned ordered).
+    * Every integer is oracle-replayed.
     */
-  private def e2(i: Int): Int = if ((i / 2) % 2 == 0) 1 else -1
-
-  /** RANK-2 spike plant (VERDICT r19 #4's honest-measurement corpus):
-    * two orthogonal non-axis directions at distinct strengths —
-    * u₁ (alternating ±1/8) and u₂ (paired ±1/8), both at a=2
-    * (divisor 32) — so the planted covariance carries a full 2-D
-    * correlated PLANE, of which a single Householder can repair only
-    * one direction (whichever mix the power iterate lands on inside
-    * the near-degenerate eigenspace — the composed pair repairs the
-    * whole plane either way, which is exactly the claim the gauge
-    * measures). Same exact-integer discipline as [[plantedSpike]]:
-    * both spike terms derive from the RAW micro cells, so
-    * x'mᵢ = xmᵢ + e₁ᵢ·sgnDiv(S₁, 32) + e₂ᵢ·sgnDiv(S₂, 32).
-    */
-  def plantedSpike2(embeddings: DataFrame, d: Int = Pca.Dim): DataFrame = {
-    val s1 = (0 until d).map(j =>
-      s"(${e(j)}L * cast(round(cast(embedding[$j] as double) * 1000000) as bigint))")
-      .mkString(" + ")
-    val s2 = (0 until d).map(j =>
-      s"(${e2(j)}L * cast(round(cast(embedding[$j] as double) * 1000000) as bigint))")
-      .mkString(" + ")
-    graft.Tables.spread(embeddings)
-      .withColumn("__s1", expr(s"($s1)"))
-      .withColumn("__s2", expr(s"($s2)"))
-      .select(col("vec_id"), expr(
-        s"""transform(sequence(0, ${d - 1}), i ->
-           |  (cast(round(cast(embedding[i] as double) * 1000000) as bigint)
-           |    + (case when i % 2 = 0 then 1L else -1L end)
-           |    * (case when __s1 < 0 then -(abs(__s1) div $SpikeDiv)
-           |       else abs(__s1) div $SpikeDiv end)
-           |    + (case when (i div 2) % 2 = 0 then 1L else -1L end)
-           |    * (case when __s2 < 0 then -(abs(__s2) div $SpikeDiv)
-           |       else abs(__s2) div $SpikeDiv end))
-           |  / cast(1000000 as double))""".stripMargin).as("embedding"))
-  }
-
-  /** The two-reflection gauge (VERDICT r19 #4): PQ reconstruction MSE
-    * on the RANK-2 plant under three rotations — identity, the single
-    * Householder from v₁ (what [[opqDistortion]] measures on its
-    * rank-1 plant), and the COMPOSED two-reflection rotation from the
-    * deflated (v₁, v₂) pair ([[graft.operators.ProductQuant
-    * .composeHouseholders]] — the same integers the store's k-row
-    * rotation sidecar persists). On a corpus with multi-directional
-    * correlation the single reflection leaves subspaces 2..M
-    * correlated; the second reflection repairs direction 2, so
-    * rotated2 < rotated1 < identity (spec-pinned ordered; every
-    * integer oracle-replayed).
-    */
-  def opqDistortion2(embeddings: DataFrame, d: Int = Pca.Dim): DataFrame = {
-    require(d == 64, s"opqDistortion2: the planted-spike geometry is d=64, got $d")
-    val planted = plantedSpike2(embeddings, d)
-    val (v1, v2) = Pca.topTwoComponents(planted, d)
-    val rots = ProductQuant.composeHouseholders(Seq(v1, v2), d)
-    val Seq((w1, ww1), (w2, ww2)) = rots
-
-    val sampIds = planted
-      .select(col("vec_id"),
-        md5(col("vec_id").cast("string").cast("binary")).as("h"))
-      .orderBy(col("h"), col("vec_id"))
-      .limit(OpqKs)
-      .select("vec_id").collect().map(_.getLong(0))
-    val sampRaw = embeddings
-      .filter(col("vec_id").isin(sampIds: _*))
-      .select("vec_id", "embedding").collect()
-      .map(r => r.getLong(0) ->
-        r.getSeq[Number](1).map(_.doubleValue).toArray).toMap
-    def plantMicro(x: Array[Double]): Array[Long] = {
-      val xm = x.map(v => rnd(v * 1000000))
-      var t1 = 0L; var t2 = 0L; var j = 0
-      while (j < d) { t1 += e(j) * xm(j); t2 += e2(j) * xm(j); j += 1 }
-      val a1 = if (t1 < 0) -(math.abs(t1) / SpikeDiv)
-               else math.abs(t1) / SpikeDiv
-      val a2 = if (t2 < 0) -(math.abs(t2) / SpikeDiv)
-               else math.abs(t2) / SpikeDiv
-      Array.tabulate(d)(j => xm(j) + e(j) * a1 + e2(j) * a2)
-    }
-    def reflect(xm: Array[Long], w: Array[Long], ww: Long): Array[Long] = {
-      var wx = 0L; var j = 0
-      while (j < d) { wx += w(j) * xm(j); j += 1 }
-      val c2 = 2.0 * wx / ww
-      Array.tabulate(d)(j => xm(j) - rnd(c2 * w(j)))
-    }
-    val identCents = sampIds.map(id => plantMicro(sampRaw(id))).toSeq
-    val r1Cents = identCents.map(reflect(_, w1, ww1))
-    val r2Cents = r1Cents.map(reflect(_, w2, ww2))
-
-    val subLen = d / OpqM
-    def minDistExpr(vec: String, cents: String): String = {
-      val perSub = s"""aggregate(sequence(0, ${subLen - 1}), 0L,
-                      |  (a2, i) -> a2 + ($vec[s * $subLen + i] - c[s * $subLen + i])
-                      |                 * ($vec[s * $subLen + i] - c[s * $subLen + i]))""".stripMargin
-      s"""aggregate(sequence(0, ${OpqM - 1}), 0L, (acc, s) ->
-         |  acc + array_min(transform($cents, c -> $perSub)))""".stripMargin
-    }
-    def wxExpr(src: String, w: Array[Long]): String = {
-      val wLit = w.mkString("array(", "L, ", "L)")
-      s"aggregate(sequence(0, ${d - 1}), 0L, (acc, j) -> " +
-        s"acc + element_at($wLit, j + 1) * $src[j])"
-    }
-    def reflectExpr(src: String, wx: String, w: Array[Long],
-                    ww: Long): String = {
-      val wLit = w.mkString("array(", "L, ", "L)")
-      s"""transform(sequence(0, ${d - 1}), i ->
-         |  $src[i] - cast(round(2.0d * $wx / ${ww}L
-         |    * element_at($wLit, i + 1)) as bigint))""".stripMargin
-    }
-    val rows = planted
-      .withColumn("xm", expr(
-        s"transform(embedding, v -> cast(round(v * 1000000) as bigint))"))
-      // each reflected stage rides as a GENERATOR child — the r11
-      // discipline (the min-dist expression references it 8·16 times);
-      // the w·x fold hoists into its own column so it runs once per
-      // row, not once per cell
-      .withColumn("__wx1", expr(wxExpr("xm", w1)))
-      .select(col("vec_id"), col("xm"),
-        explode(array(expr(reflectExpr("xm", "__wx1", w1, ww1)))).as("ym"))
-      .withColumn("__wx2", expr(wxExpr("ym", w2)))
-      .select(col("vec_id"), col("xm"), col("ym"),
-        explode(array(expr(reflectExpr("ym", "__wx2", w2, ww2)))).as("zm"))
-      .withColumn("ic", typedLit(identCents.map(_.toSeq)))
-      .withColumn("r1c", typedLit(r1Cents.map(_.toSeq)))
-      .withColumn("r2c", typedLit(r2Cents.map(_.toSeq)))
-      .select(
-        expr(minDistExpr("xm", "ic")).as("tot_i"),
-        expr(minDistExpr("ym", "r1c")).as("tot_1"),
-        expr(minDistExpr("zm", "r2c")).as("tot_2"))
-      .agg(count(lit(1)).as("n_vectors"),
-        sum(expr("tot_i div 1000000")).as("s_i"),
-        sum(expr("tot_1 div 1000000")).as("s_1"),
-        sum(expr("tot_2 div 1000000")).as("s_2"))
-    rows.select(expr(
-      """explode(array(
-        |  named_struct('lane', 'identity', 'n_vectors', n_vectors,
-        |               'mse_milli2', s_i div n_vectors),
-        |  named_struct('lane', 'rotated1', 'n_vectors', n_vectors,
-        |               'mse_milli2', s_1 div n_vectors),
-        |  named_struct('lane', 'rotated2', 'n_vectors', n_vectors,
-        |               'mse_milli2', s_2 div n_vectors)))""".stripMargin).as("r"))
-      .select(col("r.lane").as("lane"), col("r.n_vectors").as("n_vectors"),
-        col("r.mse_milli2").as("mse_milli2"))
-      .orderBy("lane")
-  }
-
-  /** The gauge: (lane ∈ {identity, rotated}, n_vectors, mse_milli2) —
-    * mean PQ reconstruction error per vector in milli² units
-    * (Σ per-vector min-distance totals div 1e6, then div n), unrotated
-    * vs Householder-rotated. The spec pins rotated < identity; the
-    * oracle replays every integer.
-    */
-  def opqDistortion(embeddings: DataFrame, d: Int = Pca.Dim): DataFrame = {
+  def opqDistortion(embeddings: DataFrame, k: Int,
+                    d: Int = Pca.Dim): DataFrame = {
     require(d == 64, s"opqDistortion: the planted-spike geometry is d=64, got $d")
-    val spark = embeddings.sparkSession
-    val planted = plantedSpike(embeddings, d)
-
-    // learn the spike direction from the planted census (driver state:
-    // d² census, 64-long v1 — the bounded-codebook contract)
-    val (v1, _, _) = Pca.topComponent(planted, d)
-    var vv = 0L; var i = 0
-    while (i < d) { vv += v1(i) * v1(i); i += 1 }
-    val bigN = rnd(math.sqrt(vv.toDouble))
-    val w = Array.tabulate(d)(i => if (i == 0) v1(0) - bigN else v1(i))
-    var ww = 0L; i = 0
-    while (i < d) { ww += w(i) * w(i); i += 1 }
-    require(ww > 0L, "opqDistortion: degenerate Householder (v1 == N·e0)")
+    val planted = plantedSpike(embeddings, k, d)
+    // learn the spike directions from the planted census (driver state:
+    // d² census, k d-long components — the bounded-codebook contract)
+    val comps =
+      if (k == 1) Seq(Pca.topComponent(planted, d)._1)
+      else { val (v1, v2) = Pca.topTwoComponents(planted, d); Seq(v1, v2) }
+    val rots = ProductQuant.composeHouseholders(comps, d)
 
     // the 16 sampled centroid ids + their planted/rotated micro forms,
     // computed driver-side with the IDENTICAL integer steps
@@ -284,21 +160,26 @@ object Opq {
         r.getSeq[Number](1).map(_.doubleValue).toArray).toMap
     def plantMicro(x: Array[Double]): Array[Long] = {
       val xm = x.map(v => rnd(v * 1000000))
-      var s = 0L; var j = 0
-      while (j < d) { s += e(j) * xm(j); j += 1 }
-      val t = if (s < 0) -(math.abs(s) / SpikeDiv) else math.abs(s) / SpikeDiv
-      Array.tabulate(d)(j => xm(j) + e(j) * t)
+      val a = (0 until k).map { j =>
+        var t = 0L; var i = 0
+        while (i < d) { t += e(j, i) * xm(i); i += 1 }
+        if (t < 0) -(math.abs(t) / SpikeDiv) else math.abs(t) / SpikeDiv
+      }
+      Array.tabulate(d)(i =>
+        (0 until k).foldLeft(xm(i))((acc, j) => acc + e(j, i) * a(j)))
     }
-    def rotMicro(xm: Array[Long]): Array[Long] = {
+    def reflect(xm: Array[Long], w: Array[Long], ww: Long): Array[Long] = {
       var wx = 0L; var j = 0
       while (j < d) { wx += w(j) * xm(j); j += 1 }
       val c2 = 2.0 * wx / ww
       Array.tabulate(d)(j => xm(j) - rnd(c2 * w(j)))
     }
     // sample order is part of the contract (centroid c is the c-th
-    // md5-ordered id on both engines)
-    val identCents = sampIds.map(id => plantMicro(sampRaw(id))).toSeq
-    val rotCents = identCents.map(rotMicro)
+    // md5-ordered id on both engines); stage r's centroids carry the
+    // first r reflections — each lane's quantizer trains in the space
+    // it codes
+    val cents = rots.scanLeft(sampIds.map(id => plantMicro(sampRaw(id))).toSeq) {
+      case (cs, (w, ww)) => cs.map(reflect(_, w, ww)) }
 
     val subLen = d / OpqM
     def minDistExpr(vec: String, cents: String): String = {
@@ -308,30 +189,43 @@ object Opq {
       s"""aggregate(sequence(0, ${OpqM - 1}), 0L, (acc, s) ->
          |  acc + array_min(transform($cents, c -> $perSub)))""".stripMargin
     }
-    val wLit = w.mkString("array(", "L, ", "L)")
-    val rows = planted
-      .withColumn("xm", expr(
-        s"transform(embedding, v -> cast(round(v * 1000000) as bigint))"))
-      .withColumn("__wx", expr(
-        s"aggregate(sequence(0, ${d - 1}), 0L, (acc, i) -> acc + element_at($wLit, i + 1) * xm[i])"))
-      .withColumn("ym", expr(
-        s"""transform(sequence(0, ${d - 1}), i ->
-           |  xm[i] - cast(round(2.0d * __wx / ${ww}L * element_at($wLit, i + 1)) as bigint))""".stripMargin))
-      .withColumn("ic", typedLit(identCents.map(_.toSeq)))
-      .withColumn("rc", typedLit(rotCents.map(_.toSeq)))
-      .select(
-        expr(minDistExpr("xm", "ic")).as("tot_i"),
-        expr(minDistExpr("ym", "rc")).as("tot_r"))
+    // stage r = the micro cells after r reflections; the w·x fold
+    // hoists into its own column so it runs once per row, not per cell.
+    // A stage the NEXT reflection reads rides as a GENERATOR child — the
+    // r11 discipline: referenced once inside that reflection's lambda,
+    // CollapseProject would otherwise inline it and re-evaluate it per
+    // cell. The last stage is read only by the min-dist lanes and stays
+    // a plain projection.
+    val stages = planted.withColumn("m0", expr(
+      s"transform(embedding, v -> cast(round(v * 1000000) as bigint))"))
+      .select(col("m0"))
+    val reflected = rots.zipWithIndex.foldLeft(stages) {
+      case (df, ((w, ww), r)) =>
+        val wLit = w.mkString("array(", "L, ", "L)")
+        val next = expr(
+          s"""transform(sequence(0, ${d - 1}), i ->
+             |  m$r[i] - cast(round(2.0d * __wx / ${ww}L
+             |    * element_at($wLit, i + 1)) as bigint))""".stripMargin)
+        val withWx = df.withColumn("__wx", expr(
+          s"aggregate(sequence(0, ${d - 1}), 0L, " +
+            s"(acc, j) -> acc + element_at($wLit, j + 1) * m$r[j])"))
+        if (r + 1 == rots.length) withWx.withColumn(s"m${r + 1}", next)
+        else withWx.select((0 to r).map(i => col(s"m$i")) :+
+          explode(array(next)).as(s"m${r + 1}"): _*)
+    }
+    val lanes = "identity" +: (1 to k).map(r =>
+      if (k == 1) "rotated" else s"rotated$r")
+    val totals = cents.zipWithIndex.foldLeft(reflected) {
+        case (df, (cs, r)) => df.withColumn(s"c$r", typedLit(cs.map(_.toSeq))) }
+      .select(lanes.indices.map(r =>
+        expr(minDistExpr(s"m$r", s"c$r")).as(s"tot$r")): _*)
       // micro²→div 1e6 BEFORE the corpus sum: exact past 1e9 vectors
-      .agg(count(lit(1)).as("n_vectors"),
-        sum(expr("tot_i div 1000000")).as("s_i"),
-        sum(expr("tot_r div 1000000")).as("s_r"))
-    rows.select(expr(
-      """explode(array(
-        |  named_struct('lane', 'identity', 'n_vectors', n_vectors,
-        |               'mse_milli2', s_i div n_vectors),
-        |  named_struct('lane', 'rotated', 'n_vectors', n_vectors,
-        |               'mse_milli2', s_r div n_vectors)))""".stripMargin).as("r"))
+      .agg(count(lit(1)).as("n_vectors"), lanes.indices.map(r =>
+        sum(expr(s"tot$r div 1000000")).as(s"s$r")): _*)
+    totals.select(explode(array(lanes.zipWithIndex.map { case (lane, r) =>
+        struct(lit(lane).as("lane"), col("n_vectors"),
+          expr(s"s$r div n_vectors").as("mse_milli2"))
+      }: _*)).as("r"))
       .select(col("r.lane").as("lane"), col("r.n_vectors").as("n_vectors"),
         col("r.mse_milli2").as("mse_milli2"))
       .orderBy("lane")

@@ -406,10 +406,6 @@ object ProductQuant {
     * a candidate's single code matches at most one probe per subspace
     * and the n_match count stays ≤ M.
     */
-  def encodeProbes(queries: DataFrame, cb: DataFrame, dim: Int,
-                   probes: Int): DataFrame =
-    encodeProbesWith(queries, collectCodebook(cb), dim, probes)
-
   private def encodeProbesWith(queries: DataFrame,
                                bySub: Map[Int, Seq[(Long, Array[Double])]],
                                dim: Int, probes: Int): DataFrame = {
@@ -428,6 +424,21 @@ object ProductQuant {
       .select(col("q_id"), col("e.sub").as("sub"), col("e.code").as("code"))
   }
 
+  /** The corpus-with-norm relation every ADC stage reads: (vec_id,
+    * embedding, nrm), `spread` first unless the relation sits inside a
+    * streaming plan's lineage (Tables.spread round-trips through .rdd).
+    * Null embeddings are EXCLUDED here, not sentinel-assigned: the
+    * coarseAssignCol coalesce(-1) exists only as a nullability guard for
+    * the optimizer, and must never fire — a null row mapped to list -1
+    * would silently join into a phantom inverted list (and count in
+    * ivfListBalance) instead of being dropped.
+    */
+  private def normed(df: DataFrame, d: Int, spread: Boolean): DataFrame =
+    (if (spread) graft.Tables.spread(df) else df)
+      .filter(col("embedding").isNotNull)
+      .select(col("vec_id"), col("embedding"),
+        Similarity.normN(col("embedding"), d).as("nrm"))
+
   /** Shared ADC fine-quantizer parts — ONE definition feeding the flat
     * ADC face ([[adcTopK]]), the IVF-composed face ([[ivfadcTopK]]), and
     * through them both recall gates: (corpus-with-norm relation, the
@@ -444,15 +455,7 @@ object ProductQuant {
     // HOF-interpreted codebook scoring on one core (Tables.spread
     // scaladoc — a no-op at real scale)
     graft.functions.PqKernels.register(embeddings.sparkSession)
-    // Null embeddings are EXCLUDED here, not sentinel-assigned: the
-    // coarseAssignCol coalesce(-1) below exists only as a nullability
-    // guard for the optimizer, and must never fire — a null row mapped
-    // to list -1 would silently join into a phantom inverted list (and
-    // count in ivfListBalance) instead of being dropped.
-    val embN = graft.Tables.spread(embeddings)
-      .filter(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"),
-        Similarity.normN(col("embedding"), d).as("nrm"))
+    val embN = normed(embeddings, d, spread = true)
     val bySub = collectCodebook(
       codebook(embeddings, d, AdcM, AdcKs, AdcSampleN, l2Normalize = true))
     (embN, bySub)
@@ -551,55 +554,166 @@ object ProductQuant {
     adcRerank(shortlistOf(scored, embeddings), embeddings, d, k)
   }
 
+  /** The IVFADC encoding scheme: which variant the ONE train → encode →
+    * probe → store pipeline runs, and what a generation's code words
+    * mean. Flat and residual IVFADC share the (coarse centroids, fine
+    * books) shape (Jégou et al. 2011 §V) — residual encodes x̂ − ĉ(x̂)
+    * instead of x̂ — and OPQ (Ge et al., CVPR 2013) is flat IVFADC over
+    * vectors rotated by k stored Householder reflections, each
+    * (w micro-longs, w'w) as [[composeHouseholders]] builds them. Each
+    * scheme is three hooks on the shared pipeline: the pre-encode
+    * transform ([[inSpace]] — opq rotates), the training-sample
+    * transform ([[ivfadcQuantizers]] — residual subtracts the assigned
+    * coarse centroid), and the encode/score pair ([[encodeN]],
+    * [[queryRel]], [[adc6Of]]). `code` is the scheme's id in the
+    * quantizer sidecar's meta row; a store probe reads the scheme from
+    * there, so a probe that mis-scores another scheme's codes cannot be
+    * called.
+    */
+  sealed abstract class Scheme(val name: String, val code: Long) {
+    override def toString: String = name
+  }
+
+  object Scheme {
+    case object Flat extends Scheme("flat", 0L)
+    case object Residual extends Scheme("residual", 1L)
+    /** The sidecar code of every [[Opq]] scheme, whatever its rotation. */
+    val OpqCode = 2L
+    final case class Opq(rotations: Seq[(Seq[Long], Long)])
+        extends Scheme("opq", OpqCode) {
+      require(rotations.nonEmpty,
+        "an opq scheme needs the rotation its codes are encoded under")
+      def arrays: Seq[(Array[Long], Long)] =
+        rotations.map { case (w, ww) => (w.toArray, ww) }
+    }
+    object Opq {
+      /** The scheme of reflections as [[composeHouseholders]] returns them. */
+      def of(rots: Seq[(Array[Long], Long)]): Opq =
+        Opq(rots.map { case (w, ww) => (w.toSeq, ww) })
+    }
+  }
+
+  /** The scheme's PRE-ENCODE transform: the space its books train in,
+    * its codes encode in and its rerank scores in. Only opq moves the
+    * corpus (the rerank cosine is rotation-invariant up to the stored
+    * integer discipline).
+    */
+  private def inSpace(scheme: Scheme, df: DataFrame, d: Int): DataFrame =
+    scheme match {
+      case opq: Scheme.Opq => opqRotateK(df, opq.arrays, d)
+      case _ => df
+    }
+
+  private def registerKernels(
+      spark: org.apache.spark.sql.SparkSession): Unit = {
+    graft.functions.PqKernels.register(spark)
+    // normN's vec_nrm lives in the LSH family; a probe-only session may
+    // reach it before any face registered that family
+    graft.functions.LshKernels.register(spark)
+  }
+
+  /** The scheme's ENCODE hook: ONE scan of a [[normed]] relation emits
+    * the whole composed index row (vec_id, ccid, sub, code) — the
+    * inverted-list tag and all AdcM fine codes together, both through
+    * the native kernels. At rest this relation is what is written
+    * PARTITIONED BY ccid. ccid rides coarseAssignCol's value-preserving
+    * coalesce so a downstream ccid equi-join cannot INFER an IsNotNull
+    * filter that the optimizer would push below the Generate, rewritten
+    * to the full centroid argmax and re-evaluated per corpus row
+    * (measured ~2x before the guard). Residual codes come from
+    * `pq_encode_res`, with the coarse centroids as foldable literals
+    * resolved per row by ccid: they are RELATIVE to the assigned
+    * centroid, which is why a residual generation can never be re-LISTED
+    * under another coarse book ([[retrainStore]] re-encodes instead).
+    */
+  private def encodeN(embN: DataFrame, coarse: Seq[(Long, Array[Double])],
+                      bySub: Map[Int, Seq[(Long, Array[Double])]], d: Int,
+                      scheme: Scheme): DataFrame = {
+    val ccid = coarseAssignCol(col("embedding"), col("nrm"), coarse)
+    scheme match {
+      case Scheme.Residual =>
+        val (cvs, cids) = bookLits(bySub)
+        explodeVia(
+          embN.select(col("vec_id"), col("embedding"), col("nrm"),
+            ccid.as("ccid")),
+          Seq(col("vec_id"), col("ccid")),
+          call_function("pq_encode_res", col("embedding"), col("nrm"),
+            col("ccid"), typedLit(coarse.map(_._1)),
+            typedLit(coarse.map(_._2.toSeq)), cvs, cids),
+          Seq("sub", "code"))
+      case _ =>
+        explodeVia(embN, Seq(col("vec_id"), ccid.as("ccid")),
+          allCodesCol(col("embedding"), bySub, d / AdcM, Some(col("nrm"))),
+          Seq("sub", "code"))
+    }
+  }
+
+  /** The scheme's query-side SCORE hook: the nProbe coarse ids per query
+    * × the AdcM·AdcKs LUT, joined driver-free on q_id —
+    * |queries|·nProbe·AdcM·AdcKs rows, corpus-independent, broadcastable
+    * at any scale. Residual probes carry each probed cell's coarse dot
+    * (micro-units) as `sd6c` beside the residual LUT's `sd6f`. Returned
+    * as (probe half, joined relation): a persisted probe collects its
+    * pruned list ids from the CHEAP probe half alone, never through the
+    * joined relation, which embeds the LUT and would run that job twice.
+    */
+  private def queryRel(embN: DataFrame, queryPred: Column,
+                       coarse: Seq[(Long, Array[Double])],
+                       bySub: Map[Int, Seq[(Long, Array[Double])]],
+                       d: Int, nProbe: Int, scheme: Scheme)
+      : (DataFrame, DataFrame) = {
+    val q = embN.filter(queryPred)
+    val lut = adcLut(embN, queryPred, bySub, d / AdcM)
+    scheme match {
+      case Scheme.Residual =>
+        val sorted = reverse(array_sort(
+          scoreStructs(col("embedding"), coarse, 0, 0, d, Some(col("nrm")))))
+        val qprobe = q.select(col("vec_id").as("q_id"),
+            explode(transform(slice(sorted, 1, nProbe), x =>
+              struct((-x.getField("ncid")).as("ccid"),
+                round(x.getField("sd") * lit(1000000)).cast("bigint")
+                  .as("sd6c")))).as("p"))
+          .select(col("q_id"), col("p.ccid").as("ccid"),
+            col("p.sd6c").as("sd6c"))
+        (qprobe, qprobe.join(lut.withColumnRenamed("sd6", "sd6f"), "q_id"))
+      case _ =>
+        val qprobe = q.select(col("vec_id").as("q_id"),
+          explode(assignTopCol(col("embedding"), coarse, 0, 0, d, nProbe,
+            Some(col("nrm")))).as("ccid"))
+        (qprobe, qprobe.join(lut, "q_id"))
+    }
+  }
+
+  /** The scheme's candidate-side SCORE hook: a (q_id, vec_id) group's
+    * approximate score in exact integer micro-units — the LUT sum, or
+    * for residual the coarse dot plus the residual LUT sum.
+    */
+  private def adc6Of(scheme: Scheme): Column = (scheme match {
+    case Scheme.Residual => min("sd6c") + sum("sd6f")
+    case _ => sum("sd6")
+  }).as("adc6")
+
   /** IVFADC stage 1 — the pre-aggregation (probed-list-only) scoring
     * relation, exposed package-private so the spec can assert the scan
     * bound: its row count is Σ_q |probed lists of q|·AdcM, strictly
-    * below the flat ADC stage-1's |corpus|·AdcM·|queries|.
+    * below the flat ADC stage-1's |corpus|·AdcM·|queries|. The encoded
+    * corpus and the query relation share ONE normed relation; here the
+    * probe filter is the broadcast hash join below.
     */
   private[graft] def ivfadcStage1(embeddings: DataFrame,
-                                      queryPred: Column, nCoarse: Int,
-                                      nProbe: Int,
-                                      dim: Option[Int] = None): DataFrame = {
+                                  queryPred: Column, nCoarse: Int,
+                                  nProbe: Int,
+                                  dim: Option[Int] = None,
+                                  scheme: Scheme = Scheme.Flat): DataFrame = {
     val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    val subLen = d / AdcM
-    // Corpus-with-norm relation ([[adcParts]]'s shape, null embeddings
-    // excluded — see its scaladoc) + BOTH frozen quantizers off ONE
-    // md5-prefix collect: the coarse quantizer uses the same seed rule
-    // as the fine codebook's training sample (L2-normalized driver-side
-    // so the norm-divided dot ranks by round6 COSINE — mirror of the
-    // oracle's ccent/csim CTEs), so [[ivfadcQuantizers]] slices both
-    // from one corpus TakeOrdered instead of paying it twice.
-    graft.functions.PqKernels.register(embeddings.sparkSession)
-    val embN = graft.Tables.spread(embeddings)
-      .filter(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"),
-        Similarity.normN(col("embedding"), d).as("nrm"))
-    val (coarse, bySub) = ivfadcQuantizers(embeddings, nCoarse, d)
-    // ONE corpus scan emits the whole composed index row: (vec_id, ccid,
-    // sub, code) — the inverted-list tag and all AdcM fine codes
-    // together. At rest this relation is what you'd write PARTITIONED BY
-    // ccid, making stage 1 partition-pruned to the probed lists; here
-    // the probe filter is the broadcast hash join below.
-    // ccid rides a value-preserving coalesce (argmax is never null) so
-    // the downstream ccid equi-join cannot INFER an IsNotNull filter:
-    // inferred on a nullable expression column, the optimizer pushes it
-    // below the Generate REWRITTEN to the full 16-centroid argmax tree
-    // and re-evaluates it per corpus row in an interpreted Filter
-    // (measured ~2x on this face before the guard).
-    val enc = explodeVia(embN,
-      Seq(col("vec_id"),
-        coarseAssignCol(col("embedding"), col("nrm"), coarse).as("ccid")),
-      allCodesCol(col("embedding"), bySub, subLen, Some(col("nrm"))),
-      Seq("sub", "code"))
-    // Query relation: nProbe coarse ids × the AdcM·AdcKs LUT, joined
-    // driver-free on q_id — |queries|·nProbe·AdcM·AdcKs rows, corpus-
-    // independent, broadcastable at any scale.
-    val qprobe = embN.filter(queryPred).select(col("vec_id").as("q_id"),
-      explode(assignTopCol(col("embedding"), coarse, 0, 0, d, nProbe,
-        Some(col("nrm")))).as("ccid"))
-    val lut = adcLut(embN, queryPred, bySub, subLen)
-    val qrel = qprobe.join(lut, "q_id")
-    enc.join(broadcast(qrel), Seq("ccid", "sub", "code"))
+    val e = inSpace(scheme, embeddings, d)
+    registerKernels(e.sparkSession)
+    val embN = normed(e, d, spread = true)
+    val (coarse, bySub) = ivfadcQuantizers(embeddings, nCoarse, d, scheme)
+    val (_, qrel) = queryRel(embN, queryPred, coarse, bySub, d, nProbe,
+      scheme)
+    encodeN(embN, coarse, bySub, d, scheme)
+      .join(broadcast(qrel), Seq("ccid", "sub", "code"))
       .filter(col("q_id") =!= col("vec_id"))
   }
 
@@ -615,10 +729,7 @@ object ProductQuant {
     graft.functions.PqKernels.register(embeddings.sparkSession)
     val d = dim.getOrElse(Similarity.dimOf(embeddings))
     val coarse = collectSample(embeddings, nCoarse, l2Normalize = true)
-    graft.Tables.spread(embeddings)
-      .filter(col("embedding").isNotNull) // no phantom list -1 (adcParts)
-      .select(col("vec_id"), col("embedding"),
-        Similarity.normN(col("embedding"), d).as("nrm"))
+    normed(embeddings, d, spread = true)
       .select(col("vec_id"),
         coarseAssignCol(col("embedding"), col("nrm"), coarse).as("ccid"))
   }
@@ -647,8 +758,8 @@ object ProductQuant {
         expr(s"n_vectors * $nCoarse * 1000 div __total").as("skew_permille"))
   }
 
-  /** IVFADC — the composed two-quantizer index (Jégou et al. 2011 §V,
-    * non-residual variant): a COARSE inverted-file quantizer (`nCoarse`
+  /** IVFADC — the composed two-quantizer index (Jégou et al. 2011 §V)
+    * under any [[Scheme]]: a COARSE inverted-file quantizer (`nCoarse`
     * md5-seeded centroids, cosine assignment — the same rule as
     * [[Similarity.ivfTopK]]) routes the fine ADC code scan to only the
     * query's `nProbe` probed lists, so stage 1 touches ~nProbe/nCoarse
@@ -669,16 +780,25 @@ object ProductQuant {
     * the query's top cell). The default operating point nProbe=4 takes
     * the 4× scan cut at the fixture-measured 0.55; the knob, not the
     * operator, owns the recall target.
+    *
+    * RESIDUAL compresses x̂ − ĉ instead of x̂ and reconstructs a score as
+    * dot(q̂, ĉ) + Σ_sub dot(q̂_sub, f_code): its 16 cells describe the
+    * much smaller within-cell spread, so distortion drops — MEASURED by
+    * `adc_distortion` at sf0.01: mean |approx − exact| 146,778
+    * micro-units residual vs 186,328 flat (−21%). At fixture scale the
+    * shortlist keeps every probed candidate, so recall ties at 0.55.
     */
   def ivfadcTopK(embeddings: DataFrame, queryPred: Column, k: Int,
+                 scheme: Scheme = Scheme.Flat,
                  nCoarse: Int = 16, nProbe: Int = 4,
                  dim: Option[Int] = None): DataFrame = {
     val d = dim.getOrElse(Similarity.dimOf(embeddings))
+    val e = inSpace(scheme, embeddings, d)
     val scored = ivfadcStage1(embeddings, queryPred, nCoarse, nProbe,
-        Some(d))
+        Some(d), scheme)
       .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum("sd6").as("adc6"))
-    adcRerank(shortlistOf(scored, embeddings), embeddings, d, k)
+      .agg(adc6Of(scheme))
+    adcRerank(shortlistOf(scored, e), e, d, k)
   }
 
   /** IVFADC against a PERSISTED list-partitioned index (VERDICT r12
@@ -706,7 +826,7 @@ object ProductQuant {
     val (coarse, bySub) = ivfadcBuildIndex(embeddings, indexDir, nCoarse,
       Some(d))
     ivfadcProbeIndex(embeddings, queryPred, k, indexDir, coarse, bySub,
-      nProbe, Some(d))
+      Scheme.Flat, nProbe, Some(d))
   }
 
   /** [[ivfadcPartitionedTopK]]'s BUILD phase alone (VERDICT r13 #3
@@ -725,78 +845,85 @@ object ProductQuant {
   }
 
   /** BOTH frozen quantizers (coarse centroids + fine subspace
-    * codebooks) trained on `embeddings` — the bounded driver state an
-    * at-rest index derives from its training corpus.
+    * codebooks) trained on `embeddings` in the scheme's space — the
+    * bounded driver state an at-rest index derives from its training
+    * corpus. ONE md5-prefix TakeOrdered serves both (guide §1.2): the
+    * coarse sample is the first nCoarse rows of the SAME (h, vec_id)
+    * total order whose first AdcSampleN rows train the fine books, so
+    * at 100 TB this is one full-corpus TakeOrdered pass instead of two.
+    * The residual fine books train on the sample RESIDUALIZED against
+    * its assigned coarse centroid, assigned with the engine's own
+    * round6-cosine rule (replicated bit for bit with
+    * [[Similarity.round6]]); the training relation enters
+    * [[codebookOfSample]] directly, never round-tripping through a
+    * DataFrame and a second TakeOrdered.
     */
-  def ivfadcQuantizers(embeddings: DataFrame, nCoarse: Int, d: Int)
-      : (Seq[(Long, Array[Double])], Map[Int, Seq[(Long, Array[Double])]]) = {
-    // ONE md5-prefix TakeOrdered serves both quantizers (guide §1.2 —
-    // remove redundant passes): the coarse sample is the first nCoarse
-    // rows of the SAME (h, vec_id) total order whose first AdcSampleN
-    // rows train the fine books, so collecting max(...) rows once and
-    // slicing is bit-identical to the two separate corpus collects it
-    // replaces — and at 100 TB it is one full-corpus TakeOrdered pass
-    // instead of two.
-    val samp = collectSample(embeddings, math.max(AdcSampleN, nCoarse),
+  def ivfadcQuantizers(embeddings: DataFrame, nCoarse: Int, d: Int,
+                       scheme: Scheme = Scheme.Flat): Quantizers = {
+    val e = inSpace(scheme, embeddings, d)
+    val samp = collectSample(e, math.max(AdcSampleN, nCoarse),
       l2Normalize = true)
-    val bySub = collectCodebook(codebookOfSample(embeddings.sparkSession,
-      samp.take(AdcSampleN), d, AdcM, AdcKs))
-    (samp.take(nCoarse), bySub)
+    val coarse = samp.take(nCoarse)
+    val train = samp.take(AdcSampleN)
+    val fineRows = scheme match {
+      case Scheme.Residual =>
+        val cmap: Map[Long, Array[Double]] = coarse.toMap
+        train.map { case (id, v) =>
+          val cid = coarse.map { case (ccid, cv) =>
+            var s = 0.0
+            var i = 0
+            while (i < v.length) { s += v(i) * cv(i); i += 1 }
+            (Similarity.round6(s), ccid)
+          }.maxBy { case (sd, ccid) => (sd, -ccid) }._2
+          val cv = cmap(cid)
+          (id, v.indices.map(i => v(i) - cv(i)).toArray)
+        }
+      case _ => train
+    }
+    (coarse, collectCodebook(codebookOfSample(e.sparkSession, fineRows, d,
+      AdcM, AdcKs)))
   }
 
   /** The (vec_id, ccid, sub, code) code relation for `df` under FROZEN
-    * quantizers — the pure per-row encode the at-rest build, the
-    * incremental ingest, and the streaming micro-batch ingest all
-    * share (a code is a pure function of the frozen books, which is
-    * WHY append == rebuild). `spread` must be false for a DF inside a
-    * streaming plan's lineage (Tables.spread round-trips through .rdd);
-    * batch callers spread against the 1-file-fixture serialization.
+    * quantizers — the pure per-row encode ([[encodeN]]) the at-rest
+    * build, the incremental ingest, and the streaming micro-batch ingest
+    * all share (a code is a pure function of the frozen books and the
+    * scheme's transform, which is WHY append == rebuild). `spread` must
+    * be false for a DF inside a streaming plan's lineage
+    * (Tables.spread round-trips through .rdd); batch callers spread
+    * against the 1-file-fixture serialization.
     */
   def ivfadcCodesWith(df: DataFrame, coarse: Seq[(Long, Array[Double])],
                       bySub: Map[Int, Seq[(Long, Array[Double])]],
-                      d: Int, spread: Boolean = true): DataFrame = {
-    graft.functions.PqKernels.register(df.sparkSession)
-    val subLen = d / AdcM
-    val base = if (spread) graft.Tables.spread(df) else df
-    val embN = base.filter(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"),
-        Similarity.normN(col("embedding"), d).as("nrm"))
-    explodeVia(embN,
-      Seq(col("vec_id"),
-        coarseAssignCol(col("embedding"), col("nrm"), coarse).as("ccid")),
-      allCodesCol(col("embedding"), bySub, subLen, Some(col("nrm"))),
-      Seq("sub", "code"))
+                      d: Int, scheme: Scheme = Scheme.Flat,
+                      spread: Boolean = true): DataFrame = {
+    registerKernels(df.sparkSession)
+    encodeN(normed(inSpace(scheme, df, d), d, spread), coarse, bySub, d,
+      scheme)
   }
 
   /** [[ivfadcPartitionedTopK]]'s PROBE phase alone — the steady-state
     * per-query-batch cost the 100 TB argument cares about (the build
     * amortizes across batches; this does not): probed-list ids land in
     * the scan's PartitionFilters so unprobed lists' files never open.
+    * `embeddings` are RAW: the scheme's transform applies here, and the
+    * score reconstructs through the scheme's hooks in exact integer
+    * micro-units.
     */
   def ivfadcProbeIndex(embeddings: DataFrame, queryPred: Column, k: Int,
                        indexDir: String,
                        coarse: Seq[(Long, Array[Double])],
                        bySub: Map[Int, Seq[(Long, Array[Double])]],
+                       scheme: Scheme = Scheme.Flat,
                        nProbe: Int = 4,
                        dim: Option[Int] = None,
                        excludeIds: Option[DataFrame] = None): DataFrame = {
     val spark = embeddings.sparkSession
-    graft.functions.PqKernels.register(spark)
-    // the probe-only entry point (ivfadcProbeStore on a FRESH session)
-    // reaches normN below with no prior face having registered the LSH
-    // kernel family — register what this plan actually calls
-    graft.functions.LshKernels.register(spark)
+    registerKernels(spark)
     val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    val subLen = d / AdcM
-    val embN = graft.Tables.spread(embeddings)
-      .filter(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"),
-        Similarity.normN(col("embedding"), d).as("nrm"))
-    // same query relation as the in-memory face
-    val qprobe = embN.filter(queryPred).select(col("vec_id").as("q_id"),
-      explode(assignTopCol(col("embedding"), coarse, 0, 0, d, nProbe,
-        Some(col("nrm")))).as("ccid"))
-    val qrel = qprobe.join(adcLut(embN, queryPred, bySub, subLen), "q_id")
+    val e = inSpace(scheme, embeddings, d)
+    val (qprobe, qrel) = queryRel(normed(e, d, spread = true), queryPred,
+      coarse, bySub, d, nProbe, scheme)
     // ≤ nCoarse probed list ids — bounded driver state by construction.
     // The read-back partition column is inference-typed INT (values
     // 0..nCoarse-1), so probe with int literals to keep the In inside
@@ -819,8 +946,8 @@ object ProductQuant {
       .join(broadcast(qrel), Seq("ccid", "sub", "code"))
       .filter(col("q_id") =!= col("vec_id"))
       .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum("sd6").as("adc6"))
-    adcRerank(shortlistOf(scored, embeddings), embeddings, d, k)
+      .agg(adc6Of(scheme))
+    adcRerank(shortlistOf(scored, e), e, d, k)
   }
 
   /** Per-JVM at-rest index cache for [[ivfadcCachedProbeTopK]] /
@@ -898,8 +1025,8 @@ object ProductQuant {
                             dim: Option[Int] = None): DataFrame = {
     val d = dim.getOrElse(Similarity.dimOf(embeddings))
     val (idx, coarse, bySub) = cachedIndex(embeddings, cacheKey, nCoarse, d)
-    ivfadcProbeIndex(embeddings, queryPred, k, idx, coarse, bySub, nProbe,
-      Some(d))
+    ivfadcProbeIndex(embeddings, queryPred, k, idx, coarse, bySub,
+      Scheme.Flat, nProbe, Some(d))
   }
 
   /** Physical-design audit of the PERSISTED index layout (VERDICT r13
@@ -1108,13 +1235,11 @@ object ProductQuant {
     }
     val (g2, _) = publishIndex(spark, baseDir, codes,
       hotWidths = widths, saltTasks = Some(tasks),
-      quantizers = books.map(_._1),
       // the encoding CONTRACT carries forward with the books — a
       // residual generation compacts into a residual one, an opq
       // generation keeps the rotation its codes were produced under
-      scheme = books.map(_._2.scheme).getOrElse("flat"),
-      rotation = books.flatMap(_._2.rotation)
-        .map(_.map { case (w, ww) => (w.toArray, ww) }))
+      quantizers = books.map(_._1),
+      scheme = books.fold[Scheme](Scheme.Flat)(_._2.scheme))
     // tombstone hygiene rides every compaction: fold the sidecar to
     // one file and drop the ids no retained generation contains — the
     // generation just published is clean by construction and skipped
@@ -1145,7 +1270,7 @@ object ProductQuant {
     * loudly, the writeTombstones convention (round-17 review #3). The
     * store stays SELF-DESCRIBING across the remedy: the old sidecar's
     * fine books carry forward verbatim (fine codes didn't move) under
-    * the RETRAINED normalized coarse book, so `ivfadcProbeStore` keeps
+    * the RETRAINED normalized coarse book, so [[ivfadcProbeStore]] keeps
     * working on the new generation — mathematically the stored book
     * ranks probe lists by the same cosine the assignment maximized
     * (normalized-book dot/‖x‖ == the trainer's dot/(‖x‖·‖c‖)); the two
@@ -1153,7 +1278,8 @@ object ProductQuant {
     * list-ranking nuance, never index content. A BOOKLESS store
     * (synthetic codes) stays bookless. A RESIDUAL store dispatches to
     * [[retrainResidual]] — its codes are coarse-relative and must
-    * re-encode, never re-list. Returns (fromGen, toGen).
+    * re-encode, never re-list; an OPQ store re-lists in its stored
+    * rotation's space. Returns (fromGen, toGen).
     */
   def retrainStore(spark: org.apache.spark.sql.SparkSession,
                    baseDir: String, embeddings: DataFrame,
@@ -1172,31 +1298,26 @@ object ProductQuant {
     // codes are coarse-independent, so they re-LIST under the new
     // assignment; residual codes are RELATIVE to the centroid they
     // were encoded against, so a re-list would silently corrupt every
-    // score — they must RE-ENCODE against the new coarse book
-    if (oldBooks.exists(_._2.scheme == "residual"))
-      retrainResidual(spark, baseDir, embeddings, nCoarse,
-        g, live, oldBooks.get._1._2, oldBooks.get._2)
-    else if (oldBooks.exists(_._2.scheme == "opq")) {
-      // opq codes are flat codes OF ROTATED VECTORS: the re-list
-      // machinery applies verbatim once the corpus enters the stored
-      // rotation's space — the retrained coarse book must live where
-      // the codes do, and the rotation carries forward unchanged
-      val meta = oldBooks.get._2
-      if (Similarity.dimOf(embeddings) != meta.dim)
-        throw new IllegalStateException(
+    // score — they must RE-ENCODE against the new coarse book. opq
+    // codes are flat codes OF ROTATED VECTORS: they re-list once the
+    // corpus enters the stored rotation's space, so the retrained
+    // coarse book lives where the codes do. Both non-flat legs read
+    // vector components in the encoded geometry, hence the dim gate.
+    oldBooks match {
+      case Some((books, meta)) if meta.scheme != Scheme.Flat =>
+        val d = Similarity.dimOf(embeddings)
+        if (d != meta.dim) throw new IllegalStateException(
           s"retrainStore: store at $baseDir was encoded at dim " +
-            s"${meta.dim}; the corpus is dim " +
-            s"${Similarity.dimOf(embeddings)} — refusing a " +
+            s"${meta.dim}; the corpus is dim $d — refusing a " +
             "geometry-mismatched retrain")
-      val rots = meta.rotation.get
-        .map { case (ws, x) => (ws.toArray, x) }
-      retrainFlat(spark, baseDir,
-        opqRotateK(embeddings, rots, meta.dim),
-        nCoarse, g, live, oldBooks, scheme = "opq",
-        rotation = Some(rots))
+        if (meta.scheme == Scheme.Residual)
+          retrainResidual(spark, baseDir, embeddings, nCoarse, g, live,
+            books._2, d)
+        else retrainFlat(spark, baseDir, inSpace(meta.scheme, embeddings, d),
+          nCoarse, g, live, oldBooks)
+      case _ => retrainFlat(spark, baseDir, embeddings, nCoarse, g, live,
+        oldBooks)
     }
-    else retrainFlat(spark, baseDir, embeddings, nCoarse, g, live,
-      oldBooks)
   } // withLease
 
   /** [[retrainStore]]'s flat leg: re-LIST the live generation's code
@@ -1206,9 +1327,7 @@ object ProductQuant {
   private def retrainFlat(spark: org.apache.spark.sql.SparkSession,
                           baseDir: String, embeddings: DataFrame,
                           nCoarse: Int, g: Int, live: String,
-                          oldBooks: Option[(Quantizers, IndexMeta)],
-                          scheme: String = "flat",
-                          rotation: Option[Seq[(Array[Long], Long)]] = None)
+                          oldBooks: Option[(Quantizers, IndexMeta)])
       : (Int, Int) = {
     // a retrain is a store MUTATION: self-recover a legacy interrupted
     // GC first (the writeTombstones/compactStore convention), then
@@ -1274,7 +1393,7 @@ object ProductQuant {
       hotWidths = widths, saltTasks = Some(tasks),
       quantizers = oldBooks.map { case ((_, bySub), _) =>
         (coarseBook, bySub) },
-      scheme = scheme, rotation = rotation)
+      scheme = oldBooks.fold[Scheme](Scheme.Flat)(_._2.scheme))
     (g, g2)
   }
 
@@ -1286,19 +1405,13 @@ object ProductQuant {
     * words that would no longer mean what the probe reconstructs.
     * Same guards as the flat leg: pending deletes excluded, corpus
     * scoped to index ids (grown corpus accepted), duplicate and
-    * coverage refusals intact — plus a dim gate, because the re-encode
-    * actually reads vector components where the flat re-list never did.
+    * coverage refusals intact; the dim gate ran in [[retrainStore]].
     */
   private def retrainResidual(spark: org.apache.spark.sql.SparkSession,
                               baseDir: String, embeddings: DataFrame,
                               nCoarse: Int, g: Int, live: String,
                               fineBooks: Map[Int, Seq[(Long, Array[Double])]],
-                              meta: IndexMeta): (Int, Int) = {
-    val d = Similarity.dimOf(embeddings)
-    if (d != meta.dim) throw new IllegalStateException(
-      s"retrainStore: store at $baseDir was encoded at dim ${meta.dim};" +
-        s" the corpus is dim $d — refusing a geometry-mismatched " +
-        "re-encode")
+                              d: Int): (Int, Int) = {
     recoverTombstoneGc(spark, baseDir)
     val raw = readCodeIds(spark, live).select(col("vec_id"))
     val liveIdRows = hintedTombstones(spark, baseDir).fold(raw)(t =>
@@ -1314,7 +1427,8 @@ object ProductQuant {
         s"(${ar.getLong(0)} rows over ${ar.getLong(1)} distinct ids) " +
         "— refusing to publish an inflated generation")
     val (coarseBook, _) = Similarity.kmeansQuantizer(embeddings, nCoarse)
-    val enc = ivfadcResidualCodesWith(corpusIdx, coarseBook, fineBooks, d)
+    val enc = ivfadcCodesWith(corpusIdx, coarseBook, fineBooks, d,
+      Scheme.Residual)
     val srcRows = liveIdRows.count()
     val (widths, tasks, total) = deriveHotListsWithTotal(enc)
     if (total != srcRows) throw new IllegalStateException(
@@ -1324,7 +1438,7 @@ object ProductQuant {
         "shrunken generation")
     val (g2, _) = publishIndex(spark, baseDir, enc,
       hotWidths = widths, saltTasks = Some(tasks),
-      quantizers = Some((coarseBook, fineBooks)), scheme = "residual")
+      quantizers = Some((coarseBook, fineBooks)), scheme = Scheme.Residual)
     (g, g2)
   }
 
@@ -1343,17 +1457,20 @@ object ProductQuant {
     * discipline writes them, the loaded books are bit-identical to the
     * written ones ([[loadQuantizers]]), and the probe is literally the
     * same function over the resolved path — the oracle is the same SQL.
+    * The scheme rides the sidecar: an opq publish carries the rotation
+    * learned by the caller, a residual one its coarse-relative books.
     */
   def ivfadcStoreProbeTopK(embeddings: DataFrame, queryPred: Column,
-                           k: Int, baseDir: String, nCoarse: Int = 16,
-                           nProbe: Int = 4,
+                           k: Int, baseDir: String,
+                           scheme: Scheme = Scheme.Flat,
+                           nCoarse: Int = 16, nProbe: Int = 4,
                            dim: Option[Int] = None): DataFrame = {
     val spark = embeddings.sparkSession
     val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    val (coarse, bySub) = ivfadcQuantizers(embeddings, nCoarse, d)
+    val books = ivfadcQuantizers(embeddings, nCoarse, d, scheme)
     publishIndex(spark, baseDir,
-      ivfadcCodesWith(embeddings, coarse, bySub, d),
-      quantizers = Some((coarse, bySub)))
+      ivfadcCodesWith(embeddings, books._1, books._2, d, scheme),
+      quantizers = Some(books), scheme = scheme)
     // probe via the STORE path so standing deletes apply — a publish
     // refreshes codes from the caller's corpus (removing deleted rows
     // from the corpus is ingest's job), but the sidecar contract
@@ -1436,15 +1553,12 @@ object ProductQuant {
             "rows — refusing a mismatched publish")
       loaded
     }
+    // the scheme (with an opq rotation) is PART of the books (ADVICE
+    // r19 #2) — mirror compactStore's carry-forward
     publishIndex(spark, baseDir, codes, hotWidths = widths,
-      saltTasks = Some(tasks), quantizers = books.map(_._1),
-      scheme = books.map(_._2.scheme).getOrElse("flat"),
-      // the rotation is PART of the opq contract (ADVICE r19 #2: a
-      // scheme-only forward always threw writeQuantizers' half-publish
-      // refusal, bricking the shell bootstrap for exactly the scheme
-      // that needs it) — mirror compactStore's carry-forward
-      rotation = books.flatMap(_._2.rotation)
-        .map(_.map { case (w, ww) => (w.toArray, ww) }))
+      saltTasks = Some(tasks),
+      quantizers = books.map(_._1),
+      scheme = books.fold[Scheme](Scheme.Flat)(_._2.scheme))
   }
 
   /** Store-wide audit (VERDICT r15 #8): [[indexLayoutAudit]] of every
@@ -1990,8 +2104,12 @@ object ProductQuant {
     * and run the one pruned probe ([[ivfadcProbeIndex]]). The
     * `embeddings` relation is touched only where every two-stage ANN
     * design touches it — the query side and the exact rerank's
-    * candidate lookup — never to re-derive the books. Tombstones
-    * affect RETRIEVABILITY only; the query side is untouched.
+    * candidate lookup — never to re-derive the books. The SCHEME comes
+    * from the same sidecar (VERDICT r17 #1): a caller cannot pair a
+    * generation's codes with another scheme's transform or scoring, the
+    * silent mis-score a self-describing store exists to make
+    * impossible. Tombstones affect RETRIEVABILITY only; the query side
+    * is untouched.
     */
   def ivfadcProbeStore(embeddings: DataFrame, queryPred: Column, k: Int,
                        baseDir: String, nProbe: Int = 4,
@@ -2003,37 +2121,12 @@ object ProductQuant {
     // after v2 publishes is row-identical to the pre-v2 probe
     val (_, genDir) = resolveGeneration(spark, baseDir, gen)
     val ((coarse, bySub), meta) = loadQuantizersMeta(spark, genDir)
-    // scheme gate (VERDICT r17 #1): a flat LUT over residual codes
-    // silently mis-scores every candidate — wrong answers with a
-    // straight face, the one failure mode a self-describing store
-    // exists to make impossible
-    if (meta.scheme != "flat") throw new IllegalStateException(
-      s"store at $baseDir holds ${meta.scheme}-encoded codes — probe " +
-        "it with " + (if (meta.scheme == "residual")
-          "ivfadcResidualProbeStore" else "ivfadcOpqProbeStore") +
-        ", not the flat LUT path")
     val d = dim.getOrElse(Similarity.dimOf(embeddings))
     if (meta.dim != d) throw new IllegalStateException(
       s"store at $baseDir was encoded at dim ${meta.dim}; the probe " +
         s"corpus is dim $d — refusing a geometry-mismatched probe")
     ivfadcProbeIndex(embeddings, queryPred, k, genDir, coarse, bySub,
-      nProbe, Some(d), excludeIds = hintedTombstones(spark, baseDir))
-  }
-
-  /** [[ivfadcProbeStore]] for a caller that already HOLDS the frozen
-    * quantizers (the build session's steady state — no reason to
-    * re-read what's in hand): same resolve → delete-filter → pruned
-    * probe, books passed instead of loaded.
-    */
-  def ivfadcProbeStoreWith(embeddings: DataFrame, queryPred: Column,
-                           k: Int, baseDir: String,
-                           coarse: Seq[(Long, Array[Double])],
-                           bySub: Map[Int, Seq[(Long, Array[Double])]],
-                           nProbe: Int = 4,
-                           dim: Option[Int] = None): DataFrame = {
-    val spark = embeddings.sparkSession
-    ivfadcProbeIndex(embeddings, queryPred, k,
-      currentIndexDir(spark, baseDir), coarse, bySub, nProbe, dim,
+      meta.scheme, nProbe, Some(d),
       excludeIds = hintedTombstones(spark, baseDir))
   }
 
@@ -2125,26 +2218,23 @@ object ProductQuant {
     * residual codes silently mis-scores every candidate, and a
     * re-LIST of residual codes under a retrained coarse book corrupts
     * them (residual codes are relative to the centroid they were
-    * encoded against). A store that cannot refuse a scheme-mismatched
-    * probe is not self-describing.
+    * encoded against). The store probe and retrain take the scheme
+    * from here, never from their caller.
     */
-  case class IndexMeta(scheme: String, nCoarse: Int, m: Int, ks: Int,
-                       dim: Int,
-                       rotation: Option[Seq[(Seq[Long], Long)]] = None) {
+  case class IndexMeta(scheme: Scheme, nCoarse: Int, m: Int, ks: Int,
+                       dim: Int) {
     override def toString: String =
-      s"IndexMeta($scheme,$nCoarse,$m,$ks,$dim" +
-        rotation.fold("")(r =>
-          s",rot[${r.length}x${r.headOption.fold(0)(_._1.length)}]") + ")"
+      s"IndexMeta($scheme,$nCoarse,$m,$ks,$dim" + (scheme match {
+        case Scheme.Opq(r) => s",rot[${r.length}x${r.head._1.length}]"
+        case _ => ""
+      }) + ")"
   }
-
-  private val SchemeCodes =
-    Map("flat" -> 0L, "residual" -> 1L, "opq" -> 2L)
 
   /** The geometry [[writeQuantizers]] records and [[loadQuantizersMeta]]
     * cross-checks — derived from the books themselves, so the meta row
     * can never silently disagree with what it describes.
     */
-  private def metaOf(scheme: String, coarse: Seq[(Long, Array[Double])],
+  private def metaOf(scheme: Scheme, coarse: Seq[(Long, Array[Double])],
                      bySub: Map[Int, Seq[(Long, Array[Double])]]): IndexMeta =
     IndexMeta(scheme, coarse.length, bySub.size,
       bySub.valuesIterator.map(_.length).maxOption.getOrElse(0),
@@ -2154,27 +2244,15 @@ object ProductQuant {
                       genDir: String,
                       coarse: Seq[(Long, Array[Double])],
                       bySub: Map[Int, Seq[(Long, Array[Double])]],
-                      scheme: String = "flat",
-                      rotation: Option[Seq[(Array[Long], Long)]] = None)
-      : Unit = {
+                      scheme: Scheme = Scheme.Flat): Unit = {
     import spark.implicits._
-    val schemeCode = SchemeCodes.getOrElse(scheme,
-      throw new IllegalArgumentException(
-        s"writeQuantizers: unknown encoding scheme '$scheme' " +
-          s"(known: ${SchemeCodes.keys.toSeq.sorted.mkString(", ")})"))
-    // the rotation is PART of the opq contract, not an accessory: opq
-    // codes are quantizations of rotated vectors, so books + codes
-    // without the rotation are as uninterpretable as residual codes
-    // without their coarse book — refuse the half-publish either way
-    if (rotation.exists(_.isEmpty) ||
-        rotation.isDefined != (scheme == "opq"))
-      throw new IllegalArgumentException(
-        s"writeQuantizers: scheme '$scheme' " +
-          (if (scheme == "opq") "requires the rotation it encoded under"
-           else s"cannot carry a rotation row"))
     val m = metaOf(scheme, coarse, bySub)
+    val rotations = scheme match {
+      case Scheme.Opq(rots) => rots
+      case _ => Nil
+    }
     val rows =
-      Seq(("meta", -1, 0, schemeCode,
+      Seq(("meta", -1, 0, scheme.code,
         Seq(m.nCoarse.toDouble, m.m.toDouble, m.ks.toDouble,
           m.dim.toDouble))) ++
       // k Householder reflections (VERDICT r19 #4), each w in exact
@@ -2183,8 +2261,8 @@ object ProductQuant {
       // ORDER; [[loadQuantizersMeta]] rebuilds the sequence
       // bit-identically (a single-reflection store keeps its one row —
       // the k=1 layout is unchanged)
-      rotation.toSeq.flatten.zipWithIndex.map { case ((w, ww), i) =>
-        ("rot", -1, i, ww, w.map(_.toDouble).toSeq) } ++
+      rotations.zipWithIndex.map { case ((w, ww), i) =>
+        ("rot", -1, i, ww, w.map(_.toDouble)) } ++
       coarse.zipWithIndex.map { case ((cid, v), i) =>
         ("coarse", -1, i, cid, v.toSeq) } ++
         bySub.toSeq.sortBy(_._1).flatMap { case (s, cents) =>
@@ -2203,7 +2281,7 @@ object ProductQuant {
     * [[writeQuantizers]] was handed. Fails LOUDLY on a generation
     * published without books (a [[publishStore]] of raw codes, or a
     * pre-sidecar publish) — probing one requires explicitly-held
-    * quantizers ([[ivfadcProbeStoreWith]]).
+    * quantizers ([[ivfadcProbeIndex]] over the resolved generation).
     */
   def loadQuantizers(spark: org.apache.spark.sql.SparkSession,
                      genDir: String): Quantizers =
@@ -2227,7 +2305,7 @@ object ProductQuant {
     if (!present) throw new java.util.NoSuchElementException(
       s"no quantizer sidecar under $genDir — the generation was " +
         "published without books; probe it with explicitly-held " +
-        "quantizers (ivfadcProbeStoreWith) or republish with them")
+        "quantizers (ivfadcProbeIndex) or republish with them")
     // the sidecar schema is this module's own write contract
     // ([[writeQuantizers]]) — pin it so the read skips the
     // footer/schema-inference pass (a per-read metadata RPC on an
@@ -2254,16 +2332,14 @@ object ProductQuant {
       .map { case (s, rs) =>
         s -> rs.sortBy(_.getInt(2))
           .map(r => (r.getLong(3), r.getSeq[Double](4).toArray)).toSeq }
-    val derived = metaOf("flat", coarse, bySub)
+    val derived = metaOf(Scheme.Flat, coarse, bySub)
     // the opq rotation rows, rebuilt (w, ww) bit-identically in their
     // recorded APPLICATION ORDER — micro longs round-trip exactly
     // through the double cv column; a pre-r20 single-row sidecar reads
     // as the 1-reflection sequence it always meant
     val rotRows = rows.filter(_.getString(0) == "rot").sortBy(_.getInt(2))
-    val rot =
-      if (rotRows.isEmpty) None
-      else Some(rotRows.map(r =>
-        (r.getSeq[Double](4).map(_.toLong), r.getLong(3))).toSeq)
+    val rot = rotRows.map(r =>
+      (r.getSeq[Double](4).map(_.toLong), r.getLong(3))).toSeq
     val meta = rows.find(_.getString(0) == "meta") match {
       case None =>
         // pre-meta sidecars predate rotations too — a rot row beside
@@ -2273,31 +2349,36 @@ object ProductQuant {
             "but no meta row — refusing to guess the encoding contract")
         derived
       case Some(r) =>
-        val scheme = SchemeCodes.collectFirst {
-          case (name, code) if code == r.getLong(3) => name
-        }.getOrElse(throw new IllegalStateException(
-          s"quantizer sidecar under $genDir declares unknown encoding " +
-            s"scheme code ${r.getLong(3)} — refusing to probe codes " +
-            "this binary cannot interpret"))
-        val ps = r.getSeq[Double](4)
-        val recorded = IndexMeta(scheme, ps(0).toInt, ps(1).toInt,
-          ps(2).toInt, ps(3).toInt, rot)
-        if ((recorded.nCoarse, recorded.m, recorded.ks, recorded.dim) !=
-            (derived.nCoarse, derived.m, derived.ks, derived.dim))
-          throw new IllegalStateException(
-            s"quantizer sidecar under $genDir is corrupt: recorded " +
-              s"geometry $recorded disagrees with the books beside it " +
-              s"(${derived.copy(scheme = recorded.scheme)})")
         // the rotation is part of the opq contract in BOTH directions:
         // opq codes without their rotation are uninterpretable, and a
         // rotation beside flat/residual codes means the sidecar halves
         // disagree about what the codes are
-        if ((scheme == "opq") != rot.nonEmpty)
+        def rotMismatch(name: String) = new IllegalStateException(
+          s"quantizer sidecar under $genDir is corrupt: scheme " +
+            s"'$name' with rotation ${if (rot.isEmpty) "MISSING"
+              else "PRESENT"} — refusing to mis-score")
+        val scheme: Scheme = r.getLong(3) match {
+          case Scheme.Flat.code if rot.isEmpty => Scheme.Flat
+          case Scheme.Residual.code if rot.isEmpty => Scheme.Residual
+          case Scheme.OpqCode if rot.nonEmpty => Scheme.Opq(rot)
+          case Scheme.Flat.code => throw rotMismatch(Scheme.Flat.name)
+          case Scheme.Residual.code =>
+            throw rotMismatch(Scheme.Residual.name)
+          case Scheme.OpqCode => throw rotMismatch("opq")
+          case code => throw new IllegalStateException(
+            s"quantizer sidecar under $genDir declares unknown encoding " +
+              s"scheme code $code — refusing to probe codes " +
+              "this binary cannot interpret")
+        }
+        val ps = r.getSeq[Double](4)
+        val recorded = IndexMeta(scheme, ps(0).toInt, ps(1).toInt,
+          ps(2).toInt, ps(3).toInt)
+        if (recorded != derived.copy(scheme = scheme))
           throw new IllegalStateException(
-            s"quantizer sidecar under $genDir is corrupt: scheme " +
-              s"'$scheme' with rotation ${if (rot.isEmpty) "MISSING"
-                else "PRESENT"} — refusing to mis-score")
-        rot.toSeq.flatten.filter(_._1.length != derived.dim).foreach { w =>
+            s"quantizer sidecar under $genDir is corrupt: recorded " +
+              s"geometry $recorded disagrees with the books beside it " +
+              s"(${derived.copy(scheme = scheme)})")
+        rot.filter(_._1.length != derived.dim).foreach { w =>
           throw new IllegalStateException(
             s"quantizer sidecar under $genDir is corrupt: rotation of " +
               s"dim ${w._1.length} beside dim-${derived.dim} books") }
@@ -2329,8 +2410,7 @@ object ProductQuant {
                    saltTasks: Option[Int] = None,
                    hotWidths: Map[Int, Int] = Map.empty,
                    quantizers: Option[Quantizers] = None,
-                   scheme: String = "flat",
-                   rotation: Option[Seq[(Array[Long], Long)]] = None)
+                   scheme: Scheme = Scheme.Flat)
       : (Int, String) =
       // the single-writer contract, ENFORCED (VERDICT r17 #2): the
       // generation numbering below is a read-modify-write, and the
@@ -2358,7 +2438,7 @@ object ProductQuant {
     // racing an in-flight publish, which the single-writer contract
     // already scopes — and loadQuantizers fails loudly, never wrongly
     quantizers.foreach { case (coarse, bySub) =>
-      writeQuantizers(spark, dir, coarse, bySub, scheme, rotation) }
+      writeQuantizers(spark, dir, coarse, bySub, scheme) }
     // pre-commit fence (VERDICT r18 #1): the pointer flip is the one
     // irreversible step — re-verify this thread's acquisition still
     // owns the standing lease, so a writer hijacked mid-mutation (its
@@ -2793,328 +2873,32 @@ object ProductQuant {
     * the ONE-SHOT encode of the whole corpus under the same
     * standing-trained books — the green row proves append == rebuild
     * at the index level, the same merge==rebuild relational proof every
-    * sketch in this repo ships.
+    * sketch in this repo ships. The frozen-book discipline matters
+    * doubly for the other schemes: a residual code is relative to the
+    * coarse centroid it was encoded against, and an opq code quantizes
+    * a vector rotated by the scheme's rotation — which the caller
+    * learns from the STANDING corpus, because re-learning it on the
+    * grown one would silently re-rotate the space every standing code
+    * word quantizes in.
     */
   def ivfadcIngestTopK(embeddings: DataFrame, standingPred: Column,
                        queryPred: Column, k: Int, indexDir: String,
+                       scheme: Scheme = Scheme.Flat,
                        nCoarse: Int = 16, nProbe: Int = 4,
                        dim: Option[Int] = None): DataFrame = {
-    graft.functions.PqKernels.register(embeddings.sparkSession)
     val d = dim.getOrElse(Similarity.dimOf(embeddings))
     val standing = embeddings.filter(standingPred)
     // frozen books: BOTH quantizers from the standing corpus (bounded
     // md5-prefix samples — the codebook contract)
-    val (coarse, bySub) = ivfadcQuantizers(standing, nCoarse, d)
-    writeIndex(ivfadcCodesWith(standing, coarse, bySub, d), indexDir)
+    val (coarse, bySub) = ivfadcQuantizers(standing, nCoarse, d, scheme)
+    writeIndex(ivfadcCodesWith(standing, coarse, bySub, d, scheme),
+      indexDir)
     writeIndex(ivfadcCodesWith(embeddings.filter(!standingPred),
-      coarse, bySub, d), indexDir, mode = "append")
+      coarse, bySub, d, scheme), indexDir, mode = "append")
     // probe the merged index — literally the partitioned face's probe,
     // with the standing-trained books on the query side
     ivfadcProbeIndex(embeddings, queryPred, k, indexDir, coarse, bySub,
-      nProbe, Some(d))
-  }
-
-  /** Residual IVFADC — the FULL Jégou et al. 2011 §V encoding, on top
-    * of [[ivfadcTopK]]'s list-routing: the fine product quantizer
-    * compresses the residual x̂ − ĉ (normalized vector minus its coarse
-    * centroid) instead of x̂ itself, and a candidate's approximate score
-    * reconstructs as dot(q̂, ĉ) + Σ_sub dot(q̂_sub, f_code) — the coarse
-    * term from the probe scores, the fine terms from the same broadcast
-    * LUT shape as flat ADC, all in exact integer micro-units. Residual
-    * codebooks spend their 16 cells describing the (much smaller)
-    * within-cell spread, so reconstruction distortion drops — MEASURED
-    * by `adc_distortion` at sf0.01: mean |approx − exact| score error
-    * 146,778 micro-units residual vs 186,328 flat (−21%). The fidelity
-    * gain converts to recall once the shortlist is smaller than the
-    * probed candidate pool (true at scale; at fixture scale the
-    * shortlist rule keeps every probed candidate, so recall ties the
-    * non-residual face at 0.55 and the ledger rows pin the scoring
-    * path and the distortion gap). Training is driver-bounded: the
-    * md5-prefix sample is
-    * normalized, assigned to cells with the engine's own round6-cosine
-    * rule, residualized, and fed to the shared Lloyd-1 trainer.
-    */
-  def ivfadcResidualTopK(embeddings: DataFrame, queryPred: Column, k: Int,
-                         nCoarse: Int = 16, nProbe: Int = 4,
-                         dim: Option[Int] = None): DataFrame = {
-    // register on the CORPUS's session, not the thread-active one — a
-    // fresh session's first face would otherwise plan normN against an
-    // unregistered vec_nrm (the ivfadcProbeIndex note)
-    graft.functions.PqKernels.register(embeddings.sparkSession)
-    graft.functions.LshKernels.register(embeddings.sparkSession)
-    val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    val (coarse, bySubF) = ivfadcResidualQuantizers(embeddings, nCoarse, d)
-    val enc = ivfadcResidualCodesWith(embeddings, coarse, bySubF, d)
-    val embN = graft.Tables.spread(embeddings)
-      .filter(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"),
-        Similarity.normN(col("embedding"), d).as("nrm"))
-    val (_, qrel) = residualQueryRel(embN, queryPred, coarse, bySubF, d,
-      nProbe)
-    val scored = enc.join(broadcast(qrel), Seq("ccid", "sub", "code"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg((min("sd6c") + sum("sd6f")).as("adc6"))
-    adcRerank(shortlistOf(scored, embeddings), embeddings, d, k)
-  }
-
-  /** BOTH residual-scheme quantizers (coarse centroids + fine codebooks
-    * trained on the RESIDUAL x̂ − ĉ) — [[ivfadcQuantizers]]' twin for
-    * the Jégou §V encoding, factored out so a residual index can be
-    * PUBLISHED as a store generation and probed by a later process
-    * (VERDICT r17 #1). Training is driver-bounded: the md5-prefix
-    * sample is normalized, assigned with the engine's own round6-cosine
-    * rule (replicated bit-for-bit with [[Similarity.round6]]), and
-    * residualized against the assigned centroid before the shared
-    * Lloyd-1 trainer runs.
-    */
-  def ivfadcResidualQuantizers(embeddings: DataFrame, nCoarse: Int, d: Int)
-      : Quantizers = {
-    // ONE md5-prefix TakeOrdered serves both quantizers (the
-    // ivfadcQuantizers rationale, residual twin): coarse = the first
-    // nCoarse rows, the residual training sample = the first AdcSampleN
-    // rows of the SAME (h, vec_id) order — bit-identical slices of what
-    // two separate corpus collects returned. The 160-row residual
-    // relation then trains through [[codebookOfSample]] DIRECTLY: the
-    // old round-trip rebuilt it as a DataFrame only for codebook() to
-    // re-sort it by the same md5 order and re-collect it — a Spark job
-    // that returned its own input.
-    val samp = collectSample(embeddings, math.max(AdcSampleN, nCoarse),
-      l2Normalize = true)
-    val coarse = samp.take(nCoarse)
-    val cmap: Map[Long, Array[Double]] = coarse.toMap
-    val resRows = samp.take(AdcSampleN)
-      .map { case (id, v) =>
-        val cid = coarse.map { case (ccid, cv) =>
-          var s = 0.0
-          var i = 0
-          while (i < v.length) { s += v(i) * cv(i); i += 1 }
-          (Similarity.round6(s), ccid)
-        }.maxBy { case (sd, ccid) => (sd, -ccid) }._2
-        val cv = cmap(cid)
-        (id, v.indices.map(i => v(i) - cv(i)).toArray)
-      }
-    val bySubF = collectCodebook(codebookOfSample(
-      embeddings.sparkSession, resRows, d, AdcM, AdcKs))
-    (coarse, bySubF)
-  }
-
-  /** The (vec_id, ccid, sub, code) RESIDUAL code relation for `df`
-    * under frozen quantizers — [[ivfadcCodesWith]]'s residual twin.
-    * ONE corpus scan: coarse cell + all AdcM residual codes per row,
-    * both through the native kernels (coarseAssignCol scaladoc; the
-    * residual argmax is `pq_encode_res` with the coarse centroids as
-    * foldable literals resolved per row by ccid). Codes are RELATIVE
-    * to the assigned coarse centroid — which is why a residual
-    * generation can never be re-LISTED under a different coarse book
-    * ([[retrainStore]] re-encodes instead).
-    */
-  def ivfadcResidualCodesWith(df: DataFrame,
-                              coarse: Seq[(Long, Array[Double])],
-                              bySubF: Map[Int, Seq[(Long, Array[Double])]],
-                              d: Int, spread: Boolean = true): DataFrame = {
-    graft.functions.PqKernels.register(df.sparkSession)
-    graft.functions.LshKernels.register(df.sparkSession)
-    val base = if (spread) graft.Tables.spread(df) else df
-    // null embeddings excluded so coarseAssignCol's -1 sentinel can
-    // never materialize a phantom list (adcParts note)
-    val embN = base.filter(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"),
-        Similarity.normN(col("embedding"), d).as("nrm"))
-    val (cvsF, cidsF) = bookLits(bySubF)
-    val withC = embN.select(col("vec_id"), col("embedding"), col("nrm"),
-      coarseAssignCol(col("embedding"), col("nrm"), coarse).as("ccid"))
-    explodeVia(withC, Seq(col("vec_id"), col("ccid")),
-      call_function("pq_encode_res", col("embedding"), col("nrm"),
-        col("ccid"), typedLit(coarse.map(_._1)),
-        typedLit(coarse.map(_._2.toSeq)), cvsF, cidsF),
-      Seq("sub", "code"))
-  }
-
-  /** The residual probe's query relation: probed cells WITH their
-    * coarse dot (micro-units) × the fine LUT (q̂ against residual
-    * centroids — the flat-ADC LUT shape, fold-then-divide, reused
-    * verbatim). Returned as (probe half, joined relation) — the
-    * persisted probe collects its pruned list ids from the CHEAP
-    * probe half alone (a scoreStructs projection), never through the
-    * joined relation, which embeds the LUT aggregation and would run
-    * that job twice. (q_id, ccid, sd6c, sub, code, sd6f); a
-    * candidate's score reconstructs as min(sd6c) + Σ sd6f.
-    */
-  private def residualQueryRel(embN: DataFrame, queryPred: Column,
-                               coarse: Seq[(Long, Array[Double])],
-                               bySubF: Map[Int, Seq[(Long, Array[Double])]],
-                               d: Int, nProbe: Int)
-      : (DataFrame, DataFrame) = {
-    val subLen = d / AdcM
-    val sorted = reverse(array_sort(
-      scoreStructs(col("embedding"), coarse, 0, 0, d, Some(col("nrm")))))
-    val qprobe = embN.filter(queryPred).select(col("vec_id").as("q_id"),
-        explode(transform(slice(sorted, 1, nProbe), x =>
-          struct((-x.getField("ncid")).as("ccid"),
-            round(x.getField("sd") * lit(1000000)).cast("bigint")
-              .as("sd6c")))).as("p"))
-      .select(col("q_id"), col("p.ccid").as("ccid"), col("p.sd6c").as("sd6c"))
-    val lutF = adcLut(embN, queryPred, bySubF, subLen)
-      .withColumnRenamed("sd6", "sd6f")
-    (qprobe, qprobe.join(lutF, "q_id"))
-  }
-
-  /** [[ivfadcProbeIndex]]'s residual twin: probe a PERSISTED residual
-    * code relation — probed-list ids land in the scan's
-    * PartitionFilters so unprobed lists' files never open, standing
-    * deletes leave the candidate set before scoring, and the score
-    * reconstructs as coarse dot + residual LUT sum in exact integer
-    * micro-units (the inline [[ivfadcResidualTopK]] scoring, verbatim,
-    * over the read-back codes).
-    */
-  def ivfadcResidualProbeIndex(embeddings: DataFrame, queryPred: Column,
-                               k: Int, indexDir: String,
-                               coarse: Seq[(Long, Array[Double])],
-                               bySubF: Map[Int, Seq[(Long, Array[Double])]],
-                               nProbe: Int = 4,
-                               dim: Option[Int] = None,
-                               excludeIds: Option[DataFrame] = None)
-      : DataFrame = {
-    val spark = embeddings.sparkSession
-    graft.functions.PqKernels.register(spark)
-    graft.functions.LshKernels.register(spark)
-    val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    val embN = graft.Tables.spread(embeddings)
-      .filter(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"),
-        Similarity.normN(col("embedding"), d).as("nrm"))
-    val (qprobe, qrel) = residualQueryRel(embN, queryPred, coarse, bySubF,
-      d, nProbe)
-    // ≤ nCoarse probed list ids — bounded driver state by construction;
-    // int literals keep the In inside PartitionFilters (the read-back
-    // partition column is inference-typed INT)
-    val probed = qprobe.select("ccid").distinct().collect()
-      .map(_.getLong(0).toInt).sorted
-    val idx = readCodes(spark, indexDir)
-      .filter(col("ccid").isin(probed: _*))
-    val idxLive = excludeIds.fold(idx)(t =>
-      idx.join(t.select("vec_id"), Seq("vec_id"), "left_anti"))
-    val scored = idxLive
-      .join(broadcast(qrel), Seq("ccid", "sub", "code"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg((min("sd6c") + sum("sd6f")).as("adc6"))
-    adcRerank(shortlistOf(scored, embeddings), embeddings, d, k)
-  }
-
-  /** Probe the store's LIVE generation with residual books LOADED FROM
-    * THE STORE — [[ivfadcProbeStore]]'s twin for residual generations,
-    * with the same scheme gate in the opposite direction: the residual
-    * reconstruction over FLAT codes mis-scores just as silently.
-    */
-  def ivfadcResidualProbeStore(embeddings: DataFrame, queryPred: Column,
-                               k: Int, baseDir: String, nProbe: Int = 4,
-                               dim: Option[Int] = None,
-                               gen: Option[Int] = None): DataFrame = {
-    val spark = embeddings.sparkSession
-    val (_, genDir) = resolveGeneration(spark, baseDir, gen)
-    val ((coarse, bySubF), meta) = loadQuantizersMeta(spark, genDir)
-    if (meta.scheme != "residual") throw new IllegalStateException(
-      s"store at $baseDir holds ${meta.scheme}-encoded codes — probe " +
-        "it with ivfadcProbeStore, not the residual reconstruction")
-    val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    if (meta.dim != d) throw new IllegalStateException(
-      s"store at $baseDir was encoded at dim ${meta.dim}; the probe " +
-        s"corpus is dim $d — refusing a geometry-mismatched probe")
-    ivfadcResidualProbeIndex(embeddings, queryPred, k, genDir, coarse,
-      bySubF, nProbe, Some(d),
-      excludeIds = hintedTombstones(spark, baseDir))
-  }
-
-  /** The residual deployment seam (VERDICT r17 #1): train the residual
-    * quantizers, publish the residual code relation as a complete
-    * store generation carrying `scheme = residual` in its sidecar, and
-    * probe the resolved generation through BOOKS LOADED FROM THE STORE
-    * — [[ivfadcStoreProbeTopK]]'s twin for the best-fidelity encoder
-    * (−21% reconstruction distortion vs flat, `adc_distortion`).
-    * Row-identical to [[ivfadcResidualTopK]] by construction: same
-    * single-scan code relation, same books (loaded bit-identically),
-    * same scoring — the oracle is the same SQL.
-    */
-  def ivfadcResidualStoreTopK(embeddings: DataFrame, queryPred: Column,
-                              k: Int, baseDir: String, nCoarse: Int = 16,
-                              nProbe: Int = 4,
-                              dim: Option[Int] = None): DataFrame = {
-    val spark = embeddings.sparkSession
-    val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    val (coarse, bySubF) = ivfadcResidualQuantizers(embeddings, nCoarse, d)
-    publishIndex(spark, baseDir,
-      ivfadcResidualCodesWith(embeddings, coarse, bySubF, d),
-      quantizers = Some((coarse, bySubF)), scheme = "residual")
-    ivfadcResidualProbeStore(embeddings, queryPred, k, baseDir, nProbe,
-      Some(d))
-  }
-
-  /** [[ivfadcIngestTopK]]'s residual twin (VERDICT r18 #2 — the
-    * best-fidelity encoder had every store verb EXCEPT incremental
-    * ingest): both quantizers train on the STANDING corpus only, the
-    * standing residual codes write the partitioned index once, and the
-    * delta batch residual-encodes in an independent pass against the
-    * FROZEN books and APPENDS into the same ccid directories. The
-    * frozen-book discipline matters doubly here: a residual code is
-    * relative to the coarse centroid it was encoded against, so
-    * appending under the standing coarse book is the ONLY sound
-    * additive ingest — re-deriving the books from the grown corpus
-    * would silently re-interpret every standing code word. Probe =
-    * [[ivfadcResidualProbeIndex]] over the merged index; append ==
-    * rebuild because each code is a pure per-row function of
-    * (vector, frozen books).
-    */
-  def ivfadcResidualIngestTopK(embeddings: DataFrame, standingPred: Column,
-                               queryPred: Column, k: Int, indexDir: String,
-                               nCoarse: Int = 16, nProbe: Int = 4,
-                               dim: Option[Int] = None): DataFrame = {
-    graft.functions.PqKernels.register(embeddings.sparkSession)
-    val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    val standing = embeddings.filter(standingPred)
-    val (coarse, bySubF) = ivfadcResidualQuantizers(standing, nCoarse, d)
-    writeIndex(ivfadcResidualCodesWith(standing, coarse, bySubF, d),
-      indexDir)
-    writeIndex(ivfadcResidualCodesWith(embeddings.filter(!standingPred),
-      coarse, bySubF, d), indexDir, mode = "append")
-    ivfadcResidualProbeIndex(embeddings, queryPred, k, indexDir, coarse,
-      bySubF, nProbe, Some(d))
-  }
-
-  /** [[ivfadcIngestTopK]]'s OPQ twin (VERDICT r19 #1 — flat and
-    * residual both have frozen-book ingest twins; opq had neither):
-    * the ROTATION learns from the STANDING corpus only and freezes
-    * with the books — doubly load-bearing here, because the rotation
-    * is corpus-derived: re-learning it on the grown corpus would
-    * silently re-rotate the space every standing code word quantizes
-    * in (the exact frozen-book failure class the residual twin pins
-    * for coarse-relative codes, one level up). The standing corpus
-    * rotates, trains both quantizers in the rotated space (Ge CVPR
-    * 2013 §4's fixed-rotation step), and writes the partitioned
-    * index; the delta batch rotates under the FROZEN w, encodes
-    * against the frozen books in an independent pass, and APPENDS.
-    * Probe = the ordinary flat probe over the merged index with the
-    * rotated corpus (opq codes ARE flat codes of rotated vectors).
-    * Append == rebuild because rotation and encode are pure per-row
-    * functions of (vector, frozen w, frozen books).
-    */
-  def opqIngestTopK(embeddings: DataFrame, standingPred: Column,
-                    queryPred: Column, k: Int, indexDir: String,
-                    nCoarse: Int = 16, nProbe: Int = 4,
-                    dim: Option[Int] = None): DataFrame = {
-    graft.functions.PqKernels.register(embeddings.sparkSession)
-    val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    val standing = embeddings.filter(standingPred)
-    val (w, ww) = opqRotationOf(standing, d)
-    val rotStanding = opqRotate(standing, w, ww, d)
-    val (coarse, bySub) = ivfadcQuantizers(rotStanding, nCoarse, d)
-    writeIndex(ivfadcCodesWith(rotStanding, coarse, bySub, d), indexDir)
-    writeIndex(ivfadcCodesWith(
-      opqRotate(embeddings.filter(!standingPred), w, ww, d),
-      coarse, bySub, d), indexDir, mode = "append")
-    ivfadcProbeIndex(opqRotate(embeddings, w, ww, d), queryPred, k,
-      indexDir, coarse, bySub, nProbe, Some(d))
+      scheme, nProbe, Some(d))
   }
 
   private def rndHalfAway(x: Double): Long =
@@ -3184,20 +2968,9 @@ object ProductQuant {
     rots.toSeq
   }
 
-  /** Apply the stored Householder to a (vec_id, embedding) relation —
-    * the [[Opq]] integer discipline verbatim: micro-quantize, one
-    * exact-long w·x per row, one double rescale-and-round per cell
-    * (ym = xm − rnd(2·wx/w'w · w)), back to exact doubles ym/1e6. ONE
-    * codegen'd projection, no shuffle — at 100 TB the rotation rides
-    * the encode/probe scan it feeds.
-    */
-  def opqRotate(embeddings: DataFrame, w: Array[Long], ww: Long,
-                d: Int): DataFrame =
-    opqRotateK(embeddings, Seq((w, ww)), d)
-
   /** Apply an ORDERED list of stored Householders to a
-    * (vec_id, embedding) relation — [[opqRotate]]'s k-reflection
-    * general form (VERDICT r19 #4): micro-quantize once, then per
+    * (vec_id, embedding) relation — the [[Opq]] integer discipline
+    * verbatim (VERDICT r19 #4): micro-quantize once, then per
     * reflection one exact-long w·x fold and one double
     * rescale-and-round per cell, all within ONE scan (k map steps, no
     * shuffle — at 100 TB the whole composition rides the encode/probe
@@ -3237,62 +3010,6 @@ object ProductQuant {
     rotated.select(col("vec_id"), explode(array(expr(
       "transform(xm, c -> cast(c / cast(1000000 as double) as float))")))
       .as("embedding"))
-  }
-
-  /** Probe the store's LIVE generation of OPQ-ROTATED codes with books
-    * AND ROTATION loaded from the store — [[ivfadcProbeStore]]'s twin
-    * for the opq scheme, closing the r18 gap where opq codes had no
-    * deployment answer: the caller passes RAW embeddings and the store
-    * supplies the rotation its codes were produced under, so a
-    * probe-only process needs nothing but the store path. The rotated
-    * relation feeds the ordinary flat probe — opq codes ARE flat codes
-    * of rotated vectors, and the rerank cosine is rotation-invariant
-    * up to the stored integer discipline.
-    */
-  def ivfadcOpqProbeStore(embeddings: DataFrame, queryPred: Column,
-                          k: Int, baseDir: String, nProbe: Int = 4,
-                          dim: Option[Int] = None,
-                          gen: Option[Int] = None): DataFrame = {
-    val spark = embeddings.sparkSession
-    val (_, genDir) = resolveGeneration(spark, baseDir, gen)
-    val ((coarse, bySub), meta) = loadQuantizersMeta(spark, genDir)
-    if (meta.scheme != "opq") throw new IllegalStateException(
-      s"store at $baseDir holds ${meta.scheme}-encoded codes — probe " +
-        "it with the matching probe path, not the opq rotation")
-    val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    if (meta.dim != d) throw new IllegalStateException(
-      s"store at $baseDir was encoded at dim ${meta.dim}; the probe " +
-        s"corpus is dim $d — refusing a geometry-mismatched probe")
-    // loadQuantizersMeta guarantees the rotation is present for opq
-    val rots = meta.rotation.get.map { case (ws, x) => (ws.toArray, x) }
-    ivfadcProbeIndex(opqRotateK(embeddings, rots, d), queryPred, k,
-      genDir, coarse, bySub, nProbe, Some(d),
-      excludeIds = hintedTombstones(spark, baseDir))
-  }
-
-  /** The OPQ deployment path in one call (VERDICT r18 #5 —
-    * [[ivfadcStoreProbeTopK]]'s twin for the rotated encoder): learn
-    * the rotation from the corpus ([[opqRotationOf]]), rotate, train
-    * the quantizers IN THE ROTATED SPACE (the books must live where
-    * the codes do — Ge §4's fixed-rotation step), publish codes +
-    * books + rotation as one self-describing generation carrying
-    * `scheme = opq`, and probe through everything LOADED FROM THE
-    * STORE. A flat probe of this store — or an opq probe of a flat
-    * store — refuses loudly on the recorded scheme (spec-pinned).
-    */
-  def opqStoreTopK(embeddings: DataFrame, queryPred: Column, k: Int,
-                   baseDir: String, nCoarse: Int = 16, nProbe: Int = 4,
-                   dim: Option[Int] = None): DataFrame = {
-    val spark = embeddings.sparkSession
-    val d = dim.getOrElse(Similarity.dimOf(embeddings))
-    val (w, ww) = opqRotationOf(embeddings, d)
-    val rot = opqRotate(embeddings, w, ww, d)
-    val (coarse, bySub) = ivfadcQuantizers(rot, nCoarse, d)
-    publishIndex(spark, baseDir, ivfadcCodesWith(rot, coarse, bySub, d),
-      quantizers = Some((coarse, bySub)), scheme = "opq",
-      rotation = Some(Seq((w, ww))))
-    ivfadcOpqProbeStore(embeddings, queryPred, k, baseDir, nProbe,
-      Some(d))
   }
 
   /** Apply the [[adcShortlist]] rule to a (q_id, vec_id, adc6) scored
@@ -3345,22 +3062,12 @@ object ProductQuant {
                        dim: Option[Int] = None): DataFrame = {
     val d = dim.getOrElse(Similarity.dimOf(embeddings))
     val subLen = d / AdcM
-    // both quantizers off ONE md5-prefix corpus collect (the
-    // ivfadcQuantizers rationale); embN is adcParts' corpus-with-norm
-    // shape with the same null exclusion
     graft.functions.PqKernels.register(embeddings.sparkSession)
-    val embN = graft.Tables.spread(embeddings)
-      .filter(col("embedding").isNotNull)
-      .select(col("vec_id"), col("embedding"),
-        Similarity.normN(col("embedding"), d).as("nrm"))
+    val embN = normed(embeddings, d, spread = true)
     val (coarse, bySub) = ivfadcQuantizers(embeddings, nCoarse, d)
     val sweepL = sweep.map(_.toLong).sorted
     // single-scan composed index row, exactly ivfadcStage1's shape
-    val enc = explodeVia(embN,
-      Seq(col("vec_id"),
-        coarseAssignCol(col("embedding"), col("nrm"), coarse).as("ccid")),
-      allCodesCol(col("embedding"), bySub, subLen, Some(col("nrm"))),
-      Seq("sub", "code"))
+    val enc = encodeN(embN, coarse, bySub, d, Scheme.Flat)
     // ranked probes up to the widest sweep point; membership in sweep
     // point n ⇔ 0-based rank p0 < n, emitted as an array-filter explode
     val qprobe = embN.filter(queryPred)

@@ -1472,14 +1472,15 @@ object PipelineQueries {
       val d = Similarity.dimOf(e)
       val base = graft.Scratch.dir("idx_life_res_")
       val standing = e.filter(col("vec_id") < 400)
+      val res = ProductQuant.Scheme.Residual
       val (coarse, bySubF) =
-        ProductQuant.ivfadcResidualQuantizers(standing, 16, d)
+        ProductQuant.ivfadcQuantizers(standing, 16, d, res)
       ProductQuant.publishIndex(s, base,
-        ProductQuant.ivfadcResidualCodesWith(standing, coarse, bySubF, d),
-        quantizers = Some((coarse, bySubF)), scheme = "residual")
+        ProductQuant.ivfadcCodesWith(standing, coarse, bySubF, d, res),
+        quantizers = Some((coarse, bySubF)), scheme = res)
       ProductQuant.publishIndex(s, base,
-        ProductQuant.ivfadcResidualCodesWith(e, coarse, bySubF, d),
-        quantizers = Some((coarse, bySubF)), scheme = "residual")
+        ProductQuant.ivfadcCodesWith(e, coarse, bySubF, d, res),
+        quantizers = Some((coarse, bySubF)), scheme = res)
       ProductQuant.writeTombstones(s, base,
         e.filter(col("vec_id") % 9 === 3).select("vec_id"))
       ProductQuant.compactStore(s, base)
@@ -1488,12 +1489,12 @@ object PipelineQueries {
       // specifically
       val postCompact = ProductQuant.loadQuantizersMeta(s,
         ProductQuant.currentIndexDir(s, base))._2.scheme
-      require(postCompact == "residual",
+      require(postCompact == res,
         s"compaction dropped the residual scheme: read '$postCompact'")
       ProductQuant.pruneGenerations(s, base, keep = 1)
       ProductQuant.retrainStore(s, base,
         e.filter(col("vec_id") % 9 =!= 3), 16)
-      ProductQuant.ivfadcResidualProbeStore(e, col("vec_id") < 50, 3,
+      ProductQuant.ivfadcProbeStore(e, col("vec_id") < 50, 3,
         base, dim = Some(d))
         .orderBy("query_id", "rank")
     }),
@@ -1520,21 +1521,19 @@ object PipelineQueries {
       val d = Similarity.dimOf(e)
       val base = graft.Scratch.dir("idx_life_opq_")
       val standing = e.filter(col("vec_id") < 400)
-      val (w, ww) = ProductQuant.opqRotationOf(standing, d)
-      val rotStanding = ProductQuant.opqRotate(standing, w, ww, d)
-      val (coarse, bySub) = ProductQuant.ivfadcQuantizers(rotStanding, 16, d)
+      val opq = ProductQuant.Scheme.Opq.of(
+        Seq(ProductQuant.opqRotationOf(standing, d)))
+      val (coarse, bySub) = ProductQuant.ivfadcQuantizers(standing, 16, d,
+        opq)
       ProductQuant.publishIndex(s, base,
-        ProductQuant.ivfadcCodesWith(rotStanding, coarse, bySub, d),
-        quantizers = Some((coarse, bySub)), scheme = "opq",
-        rotation = Some(Seq((w, ww))))
+        ProductQuant.ivfadcCodesWith(standing, coarse, bySub, d, opq),
+        quantizers = Some((coarse, bySub)), scheme = opq)
       // frozen-rotation ingest: the grown corpus rotates under the
       // SAME w — a re-learned rotation would re-rotate the space the
       // standing code words quantize in
       ProductQuant.publishIndex(s, base,
-        ProductQuant.ivfadcCodesWith(
-          ProductQuant.opqRotate(e, w, ww, d), coarse, bySub, d),
-        quantizers = Some((coarse, bySub)), scheme = "opq",
-        rotation = Some(Seq((w, ww))))
+        ProductQuant.ivfadcCodesWith(e, coarse, bySub, d, opq),
+        quantizers = Some((coarse, bySub)), scheme = opq)
       ProductQuant.writeTombstones(s, base,
         e.filter(col("vec_id") % 9 === 3).select("vec_id"))
       ProductQuant.compactStore(s, base)
@@ -1543,19 +1542,16 @@ object PipelineQueries {
       // silently mis-rotate) the probe below — fail HERE, specifically
       val postCompact = ProductQuant.loadQuantizersMeta(s,
         ProductQuant.currentIndexDir(s, base))._2
-      require(postCompact.scheme == "opq",
-        s"compaction dropped the opq scheme: read '${postCompact.scheme}'")
-      require(postCompact.rotation.contains(Seq((w.toSeq, ww))),
-        "compaction dropped or mangled the stored rotation")
+      require(postCompact.scheme == opq,
+        s"compaction dropped or mangled the opq scheme: read $postCompact")
       ProductQuant.pruneGenerations(s, base, keep = 1)
       ProductQuant.retrainStore(s, base,
         e.filter(col("vec_id") % 9 =!= 3), 16)
       val postRetrain = ProductQuant.loadQuantizersMeta(s,
         ProductQuant.currentIndexDir(s, base))._2
-      require(postRetrain.scheme == "opq" &&
-          postRetrain.rotation.contains(Seq((w.toSeq, ww))),
-        "retrain dropped or mangled the stored rotation")
-      ProductQuant.ivfadcOpqProbeStore(e, col("vec_id") < 50, 3, base,
+      require(postRetrain.scheme == opq,
+        s"retrain dropped or mangled the opq scheme: read $postRetrain")
+      ProductQuant.ivfadcProbeStore(e, col("vec_id") < 50, 3, base,
         dim = Some(d))
         .orderBy("query_id", "rank")
     }),
@@ -1611,12 +1607,13 @@ object PipelineQueries {
         ProductQuant.ivfadcTopK(e, col("vec_id") < 50, 3))
     }),
 
-    // Residual IVFADC (ProductQuant.ivfadcResidualTopK scaladoc) — the
+    // Residual IVFADC (ProductQuant.ivfadcTopK scaladoc, Scheme.Residual) — the
     // full Jégou §V encoding: the fine quantizer compresses x̂ − ĉ and
     // a candidate's score reconstructs as coarse dot + residual LUT
     // sum, exact in integer micro-units end to end.
     "ann_ivfadc_residual" -> ((s, dir) =>
-      ProductQuant.ivfadcResidualTopK(emb(s, dir), col("vec_id") < 50, 3)
+      ProductQuant.ivfadcTopK(emb(s, dir), col("vec_id") < 50, 3,
+        ProductQuant.Scheme.Residual)
         .orderBy("query_id", "rank")),
 
     // The residual DEPLOYMENT seam (VERDICT r17 #1): the best-fidelity
@@ -1628,8 +1625,9 @@ object PipelineQueries {
     // Row-identical to ann_ivfadc_residual by construction; same
     // oracle SQL.
     "ann_ivfadc_residual_store" -> ((s, dir) =>
-      ProductQuant.ivfadcResidualStoreTopK(emb(s, dir),
-        col("vec_id") < 50, 3, graft.Scratch.dir("ivfadc_res_store_"))
+      ProductQuant.ivfadcStoreProbeTopK(emb(s, dir),
+        col("vec_id") < 50, 3, graft.Scratch.dir("ivfadc_res_store_"),
+        ProductQuant.Scheme.Residual)
         .orderBy("query_id", "rank")),
 
     // Incremental RESIDUAL ingest (VERDICT r18 #2 — the residual twin
@@ -1641,9 +1639,10 @@ object PipelineQueries {
     // too (where it matters most: a re-derived coarse book would
     // silently re-interpret every standing code word).
     "ann_ivfadc_residual_ingest" -> ((s, dir) =>
-      ProductQuant.ivfadcResidualIngestTopK(emb(s, dir),
+      ProductQuant.ivfadcIngestTopK(emb(s, dir),
         col("vec_id") < 400, col("vec_id") < 50, 3,
-        graft.Scratch.dir("ivfadc_res_ingest_"))
+        graft.Scratch.dir("ivfadc_res_ingest_"),
+        ProductQuant.Scheme.Residual)
         .orderBy("query_id", "rank")),
 
     // Recall gate for residual IVFADC — exact-truth contract, same
@@ -1653,7 +1652,8 @@ object PipelineQueries {
     "ivfadc_residual_recall" -> ((s, dir) => {
       val e = emb(s, dir)
       recallGate(Similarity.bruteForceTopK(e, col("vec_id") < 50, 3),
-        ProductQuant.ivfadcResidualTopK(e, col("vec_id") < 50, 3))
+        ProductQuant.ivfadcTopK(e, col("vec_id") < 50, 3,
+          ProductQuant.Scheme.Residual))
     }),
 
     // Quantization-distortion gauge: both ADC lanes emit their integer
@@ -1667,7 +1667,8 @@ object PipelineQueries {
       val e = emb(s, dir)
       val f = ProductQuant.adcTopK(e, col("vec_id") < 50, 3)
         .select(lit("flat").as("lane"), col("adc6"), col("score"))
-      val r = ProductQuant.ivfadcResidualTopK(e, col("vec_id") < 50, 3)
+      val r = ProductQuant.ivfadcTopK(e, col("vec_id") < 50, 3,
+          ProductQuant.Scheme.Residual)
         .select(lit("residual").as("lane"), col("adc6"), col("score"))
       f.unionByName(r)
         .groupBy("lane")
@@ -1685,9 +1686,9 @@ object PipelineQueries {
     // cross-subspace correlation OPQ exists to repair, then measures
     // the recovery: rotated ~3.3% below identity at sf0.01/sf0.1,
     // spec-pinned ordered).
-    "opq_distortion" -> ((s, dir) => Opq.opqDistortion(emb(s, dir))),
+    "opq_distortion" -> ((s, dir) => Opq.opqDistortion(emb(s, dir), 1)),
 
-    // Two-reflection OPQ gauge (Opq.opqDistortion2 scaladoc; VERDICT
+    // Two-reflection OPQ gauge (Opq.opqDistortion scaladoc, k=2; VERDICT
     // r19 #4): on a RANK-2 plant the single Householder repairs only
     // the top direction — the composed (v1, deflated-v2) rotation
     // repairs both, and the MSE ordering rotated2 < rotated1 <
@@ -1695,12 +1696,12 @@ object PipelineQueries {
     // full orthogonal matrix" (spec-pinned ordered; every integer —
     // plant, two power chains, composition, both reflections —
     // oracle-replayed).
-    "opq_distortion2" -> ((s, dir) => Opq.opqDistortion2(emb(s, dir))),
+    "opq_distortion2" -> ((s, dir) => Opq.opqDistortion(emb(s, dir), 2)),
 
     // The OPQ deployment seam (VERDICT r18 #5): until now the sidecar's
     // scheme enum couldn't say "these codes quantize ROTATED vectors",
     // so an opq publish would read as flat and silently mis-score —
-    // the exact failure class r18 closed for residual. opqStoreTopK
+    // the exact failure class r18 closed for residual. The opq store face
     // learns the rotation from the corpus (the proven power-iteration
     // integers on the RAW census), trains + encodes in the rotated
     // space, publishes codes + books + rotation as one generation
@@ -1709,8 +1710,14 @@ object PipelineQueries {
     // its own rotation. Mismatched probes refuse in both directions
     // (spec-pinned).
     "ann_opq_store" -> ((s, dir) =>
-      ProductQuant.opqStoreTopK(emb(s, dir), col("vec_id") < 50, 3,
-        graft.Scratch.dir("opq_store_"))
+      {
+        val e = emb(s, dir)
+        val d = Similarity.dimOf(e)
+        ProductQuant.ivfadcStoreProbeTopK(e, col("vec_id") < 50, 3,
+          graft.Scratch.dir("opq_store_"),
+          ProductQuant.Scheme.Opq.of(Seq(ProductQuant.opqRotationOf(e, d))),
+          dim = Some(d))
+      }
         .orderBy("query_id", "rank")),
 
     // Incremental OPQ ingest (VERDICT r19 #1 — the opq twin of
@@ -1723,8 +1730,16 @@ object PipelineQueries {
     // the rotation (which would silently re-rotate the space every
     // standing code word quantizes in) nor the books.
     "ann_opq_ingest" -> ((s, dir) =>
-      ProductQuant.opqIngestTopK(emb(s, dir), col("vec_id") < 400,
-        col("vec_id") < 50, 3, graft.Scratch.dir("opq_ingest_"))
+      {
+        val e = emb(s, dir)
+        val d = Similarity.dimOf(e)
+        // the rotation learns from the STANDING corpus and freezes
+        // with the books
+        ProductQuant.ivfadcIngestTopK(e, col("vec_id") < 400,
+          col("vec_id") < 50, 3, graft.Scratch.dir("opq_ingest_"),
+          ProductQuant.Scheme.Opq.of(Seq(ProductQuant.opqRotationOf(
+            e.filter(col("vec_id") < 400), d))), dim = Some(d))
+      }
         .orderBy("query_id", "rank")),
 
     // Additive ANN-index ingest (ProductQuant.encodeWithBook scaladoc):
@@ -3071,7 +3086,7 @@ object PipelineQueries {
        |lab AS (SELECT a AS doc_id, min(b) AS canonical_id FROM reach
        |        GROUP BY a)""".stripMargin
 
-  /** Residual-IVFADC mirror (ProductQuant.ivfadcResidualTopK): the
+  /** Residual-IVFADC mirror (ProductQuant.ivfadcTopK, Scheme.Residual): the
     * coarse CTEs as in the non-residual face, then `rall` materializes
     * every vector's residual (normalized vector minus assigned coarse
     * centroid) and the SHARED pq chain trains/encodes over residuals.

@@ -274,7 +274,7 @@ class CorpusOpsSpec extends SparkSpec {
     // the plant is load-bearing: the planted corpus's top eigenvalue
     // must carry the spike (λ1 well above the isotropic trace share)
     val planted = operators.Opq.plantedSpike(
-      Tables.load(spark, sfDir, "embeddings"))
+      Tables.load(spark, sfDir, "embeddings"), 1)
     val (_, l1, tr) = operators.Pca.topComponent(planted)
     assert(l1 > 3L * tr / 64, s"lambda1=$l1 trace=$tr — spike not planted?")
   }
@@ -296,8 +296,8 @@ class CorpusOpsSpec extends SparkSpec {
       s"rotated2 ${r2._3} must beat the single reflection ${r1._3}")
     // both planted directions are load-bearing: the two leading
     // eigenvalues of the planted census must both carry spike signal
-    val planted = operators.Opq.plantedSpike2(
-      Tables.load(spark, sfDir, "embeddings"))
+    val planted = operators.Opq.plantedSpike(
+      Tables.load(spark, sfDir, "embeddings"), 2)
     val (_, l1, tr) = operators.Pca.topComponent(planted)
     val (_, l2, _) = operators.Pca.secondComponent(planted)
     assert(l1 > 3L * tr / 64, s"lambda1=$l1 trace=$tr — spike 1 not planted?")

@@ -618,16 +618,15 @@ class CliSpec extends SparkSpec {
     val d = Similarity.dimOf(e)
     // an opq source store: rotation + rotated-space books + codes
     val src = Files.createTempDirectory("graft_opq_src").toString
-    val (w, ww) = ProductQuant.opqRotationOf(e, d)
-    val rot = ProductQuant.opqRotate(e, w, ww, d)
-    val (coarse, bySub) = ProductQuant.ivfadcQuantizers(rot, 16, d)
+    val opq = ProductQuant.Scheme.Opq.of(
+      Seq(ProductQuant.opqRotationOf(e, d)))
+    val (coarse, bySub) = ProductQuant.ivfadcQuantizers(e, 16, d, opq)
     ProductQuant.publishIndex(spark, src,
-      ProductQuant.ivfadcCodesWith(rot, coarse, bySub, d),
-      quantizers = Some((coarse, bySub)), scheme = "opq",
-      rotation = Some(Seq((w, ww))))
+      ProductQuant.ivfadcCodesWith(e, coarse, bySub, d, opq),
+      quantizers = Some((coarse, bySub)), scheme = opq)
     val srcGen = ProductQuant.currentIndexDir(spark, src)
     val codesDir = Files.createTempDirectory("graft_opq_codes").toString + "/c"
-    ProductQuant.ivfadcCodesWith(rot, coarse, bySub, d)
+    ProductQuant.ivfadcCodesWith(e, coarse, bySub, d, opq)
       .write.parquet(codesDir)
     // bootstrap from the shell: the rotation must ride the --books
     // forward (ADVICE r19 #2 — a scheme-only forward threw
@@ -638,11 +637,10 @@ class CliSpec extends SparkSpec {
     assert(gen == 1)
     val meta = ProductQuant.loadQuantizersMeta(spark,
       ProductQuant.currentIndexDir(spark, store))._2
-    assert(meta.scheme == "opq" &&
-      meta.rotation.contains(Seq((w.toSeq, ww))),
+    assert(meta.scheme == opq,
       s"bootstrap dropped or mangled the rotation: $meta")
     // and the opq probe of the bootstrapped store matches the source
-    def rows(base: String) = ProductQuant.ivfadcOpqProbeStore(e,
+    def rows(base: String) = ProductQuant.ivfadcProbeStore(e,
         col("vec_id") < 30, 3, base, dim = Some(d))
       .select("query_id", "cand_id", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq

@@ -8,6 +8,16 @@ class ProductQuantSpec extends SparkSpec {
 
   private def emb = Tables.load(spark, sfDir, "embeddings")
 
+  /** Probe a store's live generation with books held in hand (a
+    * bookless store has no sidecar to load them from), standing deletes
+    * applied — the store probe's path with the books passed instead of
+    * loaded. */
+  private def probeHeld(e: org.apache.spark.sql.DataFrame, base: String,
+                        books: ProductQuant.Quantizers, d: Int) =
+    ProductQuant.ivfadcProbeIndex(e, col("vec_id") < 30, 3,
+      ProductQuant.currentIndexDir(spark, base), books._1, books._2,
+      dim = Some(d), excludeIds = ProductQuant.tombstones(spark, base))
+
   test("codebook is bounded M*Ks with subspace-length centroids") {
     val dim = Similarity.dimOf(emb)
     val cb = ProductQuant.codebook(emb, dim)
@@ -486,8 +496,7 @@ class ProductQuantSpec extends SparkSpec {
       ProductQuant.ivfadcCodesWith(e, coarse, bySub, d))
     ProductQuant.writeTombstones(spark, base,
       e.filter(col("vec_id") % 9 === 3).select("vec_id"))
-    def probe() = ProductQuant.ivfadcProbeStoreWith(e, col("vec_id") < 30,
-        3, base, coarse, bySub, dim = Some(d))
+    def probe() = probeHeld(e, base, (coarse, bySub), d)
       .select("query_id", "cand_id", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
     val before = probe()
@@ -559,8 +568,7 @@ class ProductQuantSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
     val got = rows(ProductQuant.ivfadcProbeStore(e2, col("vec_id") < 30, 3,
       base, dim = Some(d)))
-    val want = rows(ProductQuant.ivfadcProbeStoreWith(e, col("vec_id") < 30,
-      3, base, coarse, bySub, dim = Some(d)))
+    val want = rows(probeHeld(e, base, (coarse, bySub), d))
     assert(got.nonEmpty && got == want)
     // a bookless generation (raw-codes publish) fails LOUDLY, never
     // probes wrongly
@@ -759,68 +767,135 @@ class ProductQuantSpec extends SparkSpec {
     }
   }
 
-  test("the store records its encoding scheme; mismatched probes refuse; residual retrain re-encodes (r18)") {
+  test("every scheme: publish/probe/compact/retrain/probe, sidecar pinned") {
     val e = emb
     val d = Similarity.dimOf(e)
-    // flat store: the sidecar meta reads back flat with the books'
-    // geometry, and the RESIDUAL probe refuses on it
-    val flatBase = Scratch.dir("scheme_flat_")
-    val (fc, fb) = ProductQuant.ivfadcQuantizers(e, 16, d)
-    ProductQuant.publishIndex(spark, flatBase,
-      ProductQuant.ivfadcCodesWith(e, fc, fb, d),
-      quantizers = Some((fc, fb)))
-    val (_, flatMeta) = ProductQuant.loadQuantizersMeta(spark,
-      ProductQuant.currentIndexDir(spark, flatBase))
-    assert(flatMeta == ProductQuant.IndexMeta("flat", 16, 8, 16, d))
-    val e1 = intercept[IllegalStateException] {
-      ProductQuant.ivfadcResidualProbeStore(e, col("vec_id") < 30, 3,
-        flatBase, dim = Some(d))
-    }
-    assert(e1.getMessage.contains("flat-encoded"))
-    // residual store: scheme recorded, the FLAT probe refuses, the
-    // residual store probe matches the inline residual face
-    // row-for-row from a fresh session (books loaded, not held)
-    val resBase = Scratch.dir("scheme_res_")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "cand_id", "rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-    val got = rows(ProductQuant.ivfadcResidualStoreTopK(e,
-      col("vec_id") < 30, 3, resBase, dim = Some(d)))
-    val (_, resMeta) = ProductQuant.loadQuantizersMeta(spark,
-      ProductQuant.currentIndexDir(spark, resBase))
-    assert(resMeta.scheme == "residual" && resMeta.dim == d)
-    val e2 = intercept[IllegalStateException] {
-      ProductQuant.ivfadcProbeStore(e, col("vec_id") < 30, 3, resBase,
-        dim = Some(d))
+    // opq runs the TWO-reflection rotation: its rot rows must keep
+    // their application order through every rewrite
+    val cases = Seq(
+      ProductQuant.Scheme.Flat -> 0L,
+      ProductQuant.Scheme.Residual -> 1L,
+      ProductQuant.Scheme.Opq.of(ProductQuant.opqRotationsOf2(e, d)) -> 2L)
+    cases.foreach { case (scheme, code) =>
+      val base = Scratch.dir(s"scheme_${scheme.name}_")
+      // publish + probe through books LOADED FROM THE STORE equals the
+      // inline face, which trains its own books
+      val got = rows(ProductQuant.ivfadcStoreProbeTopK(e,
+        col("vec_id") < 30, 3, base, scheme, dim = Some(d)))
+      val want = rows(ProductQuant.ivfadcTopK(e, col("vec_id") < 30, 3,
+        scheme, dim = Some(d)))
+      assert(got.nonEmpty && got == want, s"$scheme store != inline")
+      // the on-disk contract, read raw: ONE meta row (kind, sub=-1,
+      // ord=0, cid=scheme code, cv=(nCoarse, m, ks, dim)), one `rot`
+      // row per reflection, coarse and book rows beside them
+      val raw = spark.read.parquet(
+        ProductQuant.currentIndexDir(spark, base) + "/" +
+          ProductQuant.QuantizerDir)
+        .select("kind", "sub", "ord", "cid", "cv").collect()
+      val metaRows = raw.filter(_.getString(0) == "meta")
+      assert(metaRows.length == 1, s"$scheme: ${raw.length} rows")
+      val m = metaRows.head
+      assert(m.getInt(1) == -1 && m.getInt(2) == 0 && m.getLong(3) == code)
+      val rot = raw.filter(_.getString(0) == "rot").sortBy(_.getInt(2))
+      assert(rot.toSeq.map(r => (r.getSeq[Double](4).map(_.toLong), r.getLong(3)))
+        == (scheme match {
+          case ProductQuant.Scheme.Opq(rots) => rots
+          case _ => Nil
+        }), s"$scheme rot rows")
+      val coarseRows = raw.filter(_.getString(0) == "coarse")
+      val bookRows = raw.filter(_.getString(0) == "book")
+      assert(coarseRows.length == 16 && coarseRows.forall(
+        _.getSeq[Double](4).length == d))
+      assert(raw.length == 1 + rot.length + 16 + bookRows.length)
+      // the geometry row describes the books beside it (a residual
+      // book may hold fewer than AdcKs centroids: the Lloyd seeds that
+      // won no residual member drop out)
+      val ks = bookRows.groupBy(_.getInt(1)).values.map(_.length).max
+      assert(bookRows.map(_.getInt(1)).distinct.sorted.toSeq == (0 until 8))
+      assert(m.getSeq[Double](4) == Seq(16.0, 8.0, ks.toDouble, d.toDouble))
+      def meta() = ProductQuant.loadQuantizersMeta(spark,
+        ProductQuant.currentIndexDir(spark, base))._2
+      assert(meta() == ProductQuant.IndexMeta(scheme, 16, 8, ks, d))
+      // deletes: the tombstone-filtered probe of the old generation
+      // equals the probe of the compacted one, which carries the scheme
+      ProductQuant.writeTombstones(spark, base,
+        e.filter(col("vec_id") % 9 === 3).select("vec_id"))
+      def probe() = rows(ProductQuant.ivfadcProbeStore(e,
+        col("vec_id") < 30, 3, base, dim = Some(d)))
+      val filtered = probe()
+      assert(filtered.nonEmpty && filtered.forall(_._2 % 9 != 3))
+      ProductQuant.compactStore(spark, base)
+      assert(meta().scheme == scheme, s"compaction dropped $scheme")
+      assert(probe() == filtered, s"$scheme probe changed across compaction")
+      // retrain on the survivors: residual RE-ENCODES against the new
+      // coarse book, flat and opq RE-LIST (opq in its stored rotation's
+      // space); either way the vector set is preserved, the scheme
+      // carries forward, and the probe equals an index freshly encoded
+      // from the survivors under the retrained books
+      val survivors = e.filter(col("vec_id") % 9 =!= 3)
+      val (gFrom, gTo) = ProductQuant.retrainStore(spark, base, survivors, 16)
+      val diff = ProductQuant.indexGenDiff(spark, base, gFrom, gTo)
+        .filter(col("status").isin("added", "removed")).count()
+      assert(diff == 0L, s"$scheme retrain added or removed vectors")
+      assert(meta().scheme == scheme, s"retrain dropped $scheme")
+      val (coarse, bySub) = ProductQuant.loadQuantizers(spark,
+        ProductQuant.currentIndexDir(spark, base))
+      val fresh = Scratch.dir(s"scheme_fresh_${scheme.name}_")
+      ProductQuant.writeIndex(ProductQuant.ivfadcCodesWith(survivors,
+        coarse, bySub, d, scheme), fresh)
+      val post = probe()
+      assert(post.nonEmpty && post.forall(_._2 % 9 != 3))
+      assert(post == rows(ProductQuant.ivfadcProbeIndex(e,
+        col("vec_id") < 30, 3, fresh, coarse, bySub, scheme,
+        dim = Some(d))), s"$scheme retrained probe != fresh encode")
     }
-    assert(e2.getMessage.contains("residual-encoded"))
-    val s2 = spark.newSession()
-    val want = rows(ProductQuant.ivfadcResidualTopK(
-      Tables.load(s2, sfDir, "embeddings"), col("vec_id") < 30, 3))
-    assert(got.nonEmpty && got == want)
-    // compaction carries the scheme forward with the books
-    ProductQuant.writeTombstones(spark, resBase,
-      e.filter(col("vec_id") % 9 === 3).select("vec_id"))
-    ProductQuant.compactStore(spark, resBase)
-    assert(ProductQuant.loadQuantizersMeta(spark,
-      ProductQuant.currentIndexDir(spark, resBase))._2.scheme ==
-      "residual")
-    // retrain on a residual generation RE-ENCODES against the new
-    // coarse book (a re-list would corrupt coarse-relative codes):
-    // content is preserved — nothing added or removed vs the compacted
-    // generation — and the store stays probe-able through loaded books
-    val (gFrom, gTo) = ProductQuant.retrainStore(spark, resBase, e, 16)
-    val diff = ProductQuant.indexGenDiff(spark, resBase, gFrom, gTo)
-      .groupBy("status").agg(sum("n_vecs").as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(diff.getOrElse("added", 0L) == 0L &&
-      diff.getOrElse("removed", 0L) == 0L, diff.toString)
-    val post = ProductQuant.ivfadcResidualProbeStore(e,
-      col("vec_id") < 30, 3, resBase, dim = Some(d))
-    assert(post.count() > 0)
-    assert(ProductQuant.loadQuantizersMeta(spark,
-      ProductQuant.currentIndexDir(spark, resBase))._2.scheme ==
-      "residual")
+  }
+
+  test("a corrupt quantizer sidecar refuses at load") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("kind", StringType),
+      StructField("sub", IntegerType), StructField("ord", IntegerType),
+      StructField("cid", LongType), StructField("cv", ArrayType(DoubleType))))
+    // a hand-written d=2 sidecar: 2 coarse centroids, 1 subspace x 2
+    // fine centroids of length 2
+    val books = Seq(Row("coarse", -1, 0, 10L, Seq(1.0, 0.0)),
+      Row("coarse", -1, 1, 11L, Seq(0.0, 1.0)),
+      Row("book", 0, 0, 20L, Seq(0.5, 0.5)),
+      Row("book", 0, 1, 21L, Seq(-0.5, 0.5)))
+    def meta(code: Long, nCoarse: Double = 2.0) =
+      Row("meta", -1, 0, code, Seq(nCoarse, 1.0, 2.0, 2.0))
+    def rot(dim: Int) = Row("rot", -1, 0, 2L, Seq.fill(dim)(1.0))
+    def load(rows: Seq[Row]) = {
+      val gen = Scratch.dir("sidecar_raw_")
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+        .write.parquet(gen + "/" + ProductQuant.QuantizerDir)
+      ProductQuant.loadQuantizersMeta(spark, gen)._2
+    }
+    // the well-formed sidecars load, each as its scheme
+    assert(load(meta(0L) +: books) ==
+      ProductQuant.IndexMeta(ProductQuant.Scheme.Flat, 2, 1, 2, 2))
+    assert(load(meta(1L) +: books).scheme == ProductQuant.Scheme.Residual)
+    assert(load(Seq(meta(2L), rot(2)) ++ books).scheme ==
+      ProductQuant.Scheme.Opq(Seq((Seq(1L, 1L), 2L))))
+    // a pre-meta sidecar reads as flat with derived geometry
+    assert(load(books).scheme == ProductQuant.Scheme.Flat)
+    def refuses(rows: Seq[Row], why: String) = {
+      val ex = intercept[IllegalStateException](load(rows))
+      assert(ex.getMessage.contains(why), ex.getMessage)
+    }
+    refuses(meta(7L) +: books, "unknown encoding scheme code 7")
+    refuses(Seq(meta(2L)) ++ books, "scheme 'opq' with rotation MISSING")
+    refuses(Seq(meta(0L), rot(2)) ++ books,
+      "scheme 'flat' with rotation PRESENT")
+    refuses(Seq(meta(1L), rot(2)) ++ books,
+      "scheme 'residual' with rotation PRESENT")
+    refuses(Seq(meta(2L), rot(3)) ++ books, "rotation of dim 3")
+    refuses(meta(0L, nCoarse = 3.0) +: books, "disagrees with the books")
+    refuses(rot(2) +: books, "rotation row but no meta row")
   }
 
   test("indexGenDiff classifies moved-list vectors as recoded under the new list") {
@@ -883,113 +958,6 @@ class ProductQuantSpec extends SparkSpec {
       codes.filter(col("ccid") === 3).count() * 2)
   }
 
-  test("opq stores are self-describing: mismatched probes refuse, compact+retrain carry rotation+scheme (r19)") {
-    val e = emb
-    val d = Similarity.dimOf(e)
-    val base = Scratch.dir("opq_scheme_")
-    assert(ProductQuant.opqStoreTopK(e, col("vec_id") < 30, 3, base)
-      .count() > 0)
-    // a flat probe of an opq store refuses, naming the right path
-    val e1 = intercept[IllegalStateException] {
-      ProductQuant.ivfadcProbeStore(e, col("vec_id") < 30, 3, base,
-        dim = Some(d))
-    }
-    assert(e1.getMessage.contains("ivfadcOpqProbeStore"), e1.getMessage)
-    // ...so does the residual reconstruction
-    intercept[IllegalStateException] {
-      ProductQuant.ivfadcResidualProbeStore(e, col("vec_id") < 30, 3,
-        base, dim = Some(d))
-    }
-    // ...and an opq probe of a FLAT store refuses the other way
-    val flatBase = Scratch.dir("opq_flat_")
-    ProductQuant.ivfadcStoreProbeTopK(e, col("vec_id") < 30, 3, flatBase)
-      .count()
-    val e2 = intercept[IllegalStateException] {
-      ProductQuant.ivfadcOpqProbeStore(e, col("vec_id") < 30, 3,
-        flatBase, dim = Some(d))
-    }
-    assert(e2.getMessage.contains("flat"), e2.getMessage)
-    // the rotation is part of the contract in both directions at the
-    // WRITER already: flat+rotation and opq-without-rotation refuse
-    val books = (Seq((0L, Array.fill(d)(0.1))),
-      Map(0 -> Seq((0L, Array.fill(8)(0.1)))))
-    intercept[IllegalArgumentException] {
-      ProductQuant.writeQuantizers(spark, Scratch.dir("opq_bad_"),
-        books._1, books._2, scheme = "flat",
-        rotation = Some(Seq((Array.fill(d)(1L), d.toLong))))
-    }
-    intercept[IllegalArgumentException] {
-      ProductQuant.writeQuantizers(spark, Scratch.dir("opq_bad2_"),
-        books._1, books._2, scheme = "opq")
-    }
-    // compaction carries scheme AND rotation; deletes apply physically
-    def probe() = ProductQuant.ivfadcOpqProbeStore(e, col("vec_id") < 30,
-        3, base, dim = Some(d))
-      .select("query_id", "cand_id", "rank").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-    assert(probe().nonEmpty)
-    ProductQuant.writeTombstones(spark, base,
-      e.filter(col("vec_id") % 7 === 2).select("vec_id"))
-    ProductQuant.compactStore(spark, base)
-    val metaC = ProductQuant.loadQuantizersMeta(spark,
-      ProductQuant.currentIndexDir(spark, base))._2
-    assert(metaC.scheme == "opq" && metaC.rotation.nonEmpty)
-    val after = probe()
-    assert(after.nonEmpty && after.forall(_._2 % 7 != 2))
-    // retrain re-lists IN THE ROTATED SPACE and keeps the rotation
-    ProductQuant.retrainStore(spark, base,
-      e.filter(col("vec_id") % 7 =!= 2), 16)
-    val metaR = ProductQuant.loadQuantizersMeta(spark,
-      ProductQuant.currentIndexDir(spark, base))._2
-    assert(metaR.scheme == "opq" && metaR.rotation == metaC.rotation)
-    assert(probe().nonEmpty)
-  }
-
-  test("a k=2 rotation store round-trips: ordered rot rows, loaded-rotation probe matches in-hand, compact+retrain carry both (r20)") {
-    val e = emb
-    val d = Similarity.dimOf(e)
-    val rots = ProductQuant.opqRotationsOf2(e, d)
-    assert(rots.length == 2)
-    val rot = ProductQuant.opqRotateK(e, rots, d)
-    val (coarse, bySub) = ProductQuant.ivfadcQuantizers(rot, 16, d)
-    val base = Scratch.dir("opq_k2_")
-    ProductQuant.publishIndex(spark, base,
-      ProductQuant.ivfadcCodesWith(rot, coarse, bySub, d),
-      quantizers = Some((coarse, bySub)), scheme = "opq",
-      rotation = Some(rots))
-    val stored = rots.map { case (w, ww) => (w.toSeq, ww) }
-    val meta = ProductQuant.loadQuantizersMeta(spark,
-      ProductQuant.currentIndexDir(spark, base))._2
-    assert(meta.rotation.contains(stored),
-      s"k=2 rotation did not round-trip in order: $meta")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("query_id", "cand_id", "rank").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-    // the probe-only process (RAW corpus in, rotations loaded from the
-    // store, applied in order) equals the build session's in-hand probe
-    val got = rows(ProductQuant.ivfadcOpqProbeStore(e,
-      col("vec_id") < 30, 3, base, dim = Some(d)))
-    val want = rows(ProductQuant.ivfadcProbeIndex(rot,
-      col("vec_id") < 30, 3, ProductQuant.currentIndexDir(spark, base),
-      coarse, bySub, dim = Some(d)))
-    assert(got.nonEmpty && got == want)
-    // compact and retrain both carry the 2-row rotation verbatim
-    ProductQuant.writeTombstones(spark, base,
-      e.filter(col("vec_id") % 11 === 5).select("vec_id"))
-    ProductQuant.compactStore(spark, base)
-    assert(ProductQuant.loadQuantizersMeta(spark,
-      ProductQuant.currentIndexDir(spark, base))._2.rotation
-      .contains(stored))
-    ProductQuant.retrainStore(spark, base,
-      e.filter(col("vec_id") % 11 =!= 5), 16)
-    assert(ProductQuant.loadQuantizersMeta(spark,
-      ProductQuant.currentIndexDir(spark, base))._2.rotation
-      .contains(stored))
-    val after = rows(ProductQuant.ivfadcOpqProbeStore(e,
-      col("vec_id") < 30, 3, base, dim = Some(d)))
-    assert(after.nonEmpty && after.forall(_._2 % 11 != 5))
-  }
-
   test("a pinned probe refuses a pruned generation instead of answering from another snapshot (r20)") {
     val e = emb
     val d = Similarity.dimOf(e)
@@ -1045,8 +1013,7 @@ class ProductQuantSpec extends SparkSpec {
     assert(relB.select("vec_id").distinct().count() == nB,
       "fold 2 broke a reader relation listed before it")
     // the probe consumes the folded sidecar with no double-counting
-    val got = ProductQuant.ivfadcProbeStoreWith(e, col("vec_id") < 30,
-      3, base, coarse, bySub, dim = Some(d)).collect()
+    val got = probeHeld(e, base, (coarse, bySub), d).collect()
     assert(got.nonEmpty &&
       got.forall(r => r.getAs[Long]("cand_id") % 5 > 1))
     // settle: a compaction publishes a clean generation; after
@@ -1099,8 +1066,7 @@ class ProductQuantSpec extends SparkSpec {
       assert(ProductQuant.tombstones(spark, base).get
         .select("vec_id").distinct().count() == n,
         "mid-fold superset must dedup to the surviving set")
-      val got = ProductQuant.ivfadcProbeStoreWith(e, col("vec_id") < 30,
-        3, base, coarse, bySub, dim = Some(d)).collect()
+      val got = probeHeld(e, base, (coarse, bySub), d).collect()
       assert(got.nonEmpty && got.forall(
         _.getAs[Long]("cand_id") % 3 != 0))
       // the next GC folds the superset back to the derived width
