@@ -767,91 +767,116 @@ class ProductQuantSpec extends SparkSpec {
     }
   }
 
-  test("every scheme: publish/probe/compact/retrain/probe, sidecar pinned") {
+  /** One scheme's store lifecycle — publish, probe, delete, compact,
+    * retrain, probe — with the raw sidecar rows pinned: the meta row
+    * carries `code`, an opq scheme's rot rows keep their application
+    * order through every rewrite, and every store probe reads the
+    * scheme from the sidecar. */
+  private def schemeLifecycle(scheme: ProductQuant.Scheme, code: Long): Unit = {
     val e = emb
     val d = Similarity.dimOf(e)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "cand_id", "rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-    // opq runs the TWO-reflection rotation: its rot rows must keep
-    // their application order through every rewrite
-    val cases = Seq(
-      ProductQuant.Scheme.Flat -> 0L,
-      ProductQuant.Scheme.Residual -> 1L,
-      ProductQuant.Scheme.Opq.of(ProductQuant.opqRotationsOf2(e, d)) -> 2L)
-    cases.foreach { case (scheme, code) =>
-      val base = Scratch.dir(s"scheme_${scheme.name}_")
-      // publish + probe through books LOADED FROM THE STORE equals the
-      // inline face, which trains its own books
-      val got = rows(ProductQuant.ivfadcStoreProbeTopK(e,
-        col("vec_id") < 30, 3, base, scheme, dim = Some(d)))
-      val want = rows(ProductQuant.ivfadcTopK(e, col("vec_id") < 30, 3,
-        scheme, dim = Some(d)))
-      assert(got.nonEmpty && got == want, s"$scheme store != inline")
-      // the on-disk contract, read raw: ONE meta row (kind, sub=-1,
-      // ord=0, cid=scheme code, cv=(nCoarse, m, ks, dim)), one `rot`
-      // row per reflection, coarse and book rows beside them
-      val raw = spark.read.parquet(
-        ProductQuant.currentIndexDir(spark, base) + "/" +
-          ProductQuant.QuantizerDir)
-        .select("kind", "sub", "ord", "cid", "cv").collect()
-      val metaRows = raw.filter(_.getString(0) == "meta")
-      assert(metaRows.length == 1, s"$scheme: ${raw.length} rows")
-      val m = metaRows.head
-      assert(m.getInt(1) == -1 && m.getInt(2) == 0 && m.getLong(3) == code)
-      val rot = raw.filter(_.getString(0) == "rot").sortBy(_.getInt(2))
-      assert(rot.toSeq.map(r => (r.getSeq[Double](4).map(_.toLong), r.getLong(3)))
-        == (scheme match {
-          case ProductQuant.Scheme.Opq(rots) => rots
-          case _ => Nil
-        }), s"$scheme rot rows")
-      val coarseRows = raw.filter(_.getString(0) == "coarse")
-      val bookRows = raw.filter(_.getString(0) == "book")
-      assert(coarseRows.length == 16 && coarseRows.forall(
-        _.getSeq[Double](4).length == d))
-      assert(raw.length == 1 + rot.length + 16 + bookRows.length)
-      // the geometry row describes the books beside it (a residual
-      // book may hold fewer than AdcKs centroids: the Lloyd seeds that
-      // won no residual member drop out)
-      val ks = bookRows.groupBy(_.getInt(1)).values.map(_.length).max
-      assert(bookRows.map(_.getInt(1)).distinct.sorted.toSeq == (0 until 8))
-      assert(m.getSeq[Double](4) == Seq(16.0, 8.0, ks.toDouble, d.toDouble))
-      def meta() = ProductQuant.loadQuantizersMeta(spark,
-        ProductQuant.currentIndexDir(spark, base))._2
-      assert(meta() == ProductQuant.IndexMeta(scheme, 16, 8, ks, d))
-      // deletes: the tombstone-filtered probe of the old generation
-      // equals the probe of the compacted one, which carries the scheme
-      ProductQuant.writeTombstones(spark, base,
-        e.filter(col("vec_id") % 9 === 3).select("vec_id"))
-      def probe() = rows(ProductQuant.ivfadcProbeStore(e,
-        col("vec_id") < 30, 3, base, dim = Some(d)))
-      val filtered = probe()
-      assert(filtered.nonEmpty && filtered.forall(_._2 % 9 != 3))
-      ProductQuant.compactStore(spark, base)
-      assert(meta().scheme == scheme, s"compaction dropped $scheme")
-      assert(probe() == filtered, s"$scheme probe changed across compaction")
-      // retrain on the survivors: residual RE-ENCODES against the new
-      // coarse book, flat and opq RE-LIST (opq in its stored rotation's
-      // space); either way the vector set is preserved, the scheme
-      // carries forward, and the probe equals an index freshly encoded
-      // from the survivors under the retrained books
-      val survivors = e.filter(col("vec_id") % 9 =!= 3)
-      val (gFrom, gTo) = ProductQuant.retrainStore(spark, base, survivors, 16)
-      val diff = ProductQuant.indexGenDiff(spark, base, gFrom, gTo)
-        .filter(col("status").isin("added", "removed")).count()
-      assert(diff == 0L, s"$scheme retrain added or removed vectors")
-      assert(meta().scheme == scheme, s"retrain dropped $scheme")
-      val (coarse, bySub) = ProductQuant.loadQuantizers(spark,
-        ProductQuant.currentIndexDir(spark, base))
-      val fresh = Scratch.dir(s"scheme_fresh_${scheme.name}_")
-      ProductQuant.writeIndex(ProductQuant.ivfadcCodesWith(survivors,
-        coarse, bySub, d, scheme), fresh)
-      val post = probe()
-      assert(post.nonEmpty && post.forall(_._2 % 9 != 3))
-      assert(post == rows(ProductQuant.ivfadcProbeIndex(e,
-        col("vec_id") < 30, 3, fresh, coarse, bySub, scheme,
-        dim = Some(d))), s"$scheme retrained probe != fresh encode")
+    val base = Scratch.dir(s"scheme_${scheme.name}_")
+    // publish + probe through books LOADED FROM THE STORE equals the
+    // inline face, which trains its own books
+    val got = rows(ProductQuant.ivfadcStoreProbeTopK(e,
+      col("vec_id") < 30, 3, base, scheme, dim = Some(d)))
+    val want = rows(ProductQuant.ivfadcTopK(e, col("vec_id") < 30, 3,
+      scheme, dim = Some(d)))
+    assert(got.nonEmpty && got == want, s"$scheme store != inline")
+    // the on-disk contract, read raw: ONE meta row (kind, sub=-1,
+    // ord=0, cid=scheme code, cv=(nCoarse, m, ks, dim)), one `rot`
+    // row per reflection, coarse and book rows beside them
+    val raw = spark.read.parquet(
+      ProductQuant.currentIndexDir(spark, base) + "/" +
+        ProductQuant.QuantizerDir)
+      .select("kind", "sub", "ord", "cid", "cv").collect()
+    val metaRows = raw.filter(_.getString(0) == "meta")
+    assert(metaRows.length == 1, s"$scheme: ${raw.length} rows")
+    val m = metaRows.head
+    assert(m.getInt(1) == -1 && m.getInt(2) == 0 && m.getLong(3) == code)
+    val rot = raw.filter(_.getString(0) == "rot").sortBy(_.getInt(2))
+    assert(rot.toSeq.map(r => (r.getSeq[Double](4).map(_.toLong), r.getLong(3)))
+      == (scheme match {
+        case ProductQuant.Scheme.Opq(rots) => rots
+        case _ => Nil
+      }), s"$scheme rot rows")
+    val coarseRows = raw.filter(_.getString(0) == "coarse")
+    val bookRows = raw.filter(_.getString(0) == "book")
+    assert(coarseRows.length == 16 && coarseRows.forall(
+      _.getSeq[Double](4).length == d))
+    assert(raw.length == 1 + rot.length + 16 + bookRows.length)
+    // the geometry row describes the books beside it (a residual
+    // book may hold fewer than AdcKs centroids: the Lloyd seeds that
+    // won no residual member drop out)
+    val ks = bookRows.groupBy(_.getInt(1)).values.map(_.length).max
+    assert(bookRows.map(_.getInt(1)).distinct.sorted.toSeq == (0 until 8))
+    assert(m.getSeq[Double](4) == Seq(16.0, 8.0, ks.toDouble, d.toDouble))
+    def meta() = ProductQuant.loadQuantizersMeta(spark,
+      ProductQuant.currentIndexDir(spark, base))._2
+    assert(meta() == ProductQuant.IndexMeta(scheme, 16, 8, ks, d))
+    // deletes: the tombstone-filtered probe of the old generation
+    // equals the probe of the compacted one, which carries the scheme
+    ProductQuant.writeTombstones(spark, base,
+      e.filter(col("vec_id") % 9 === 3).select("vec_id"))
+    def probe() = rows(ProductQuant.ivfadcProbeStore(e,
+      col("vec_id") < 30, 3, base, dim = Some(d)))
+    val filtered = probe()
+    assert(filtered.nonEmpty && filtered.forall(_._2 % 9 != 3))
+    ProductQuant.compactStore(spark, base)
+    assert(meta().scheme == scheme, s"compaction dropped $scheme")
+    assert(probe() == filtered, s"$scheme probe changed across compaction")
+    // retrain on the survivors: residual RE-ENCODES against the new
+    // coarse book, flat and opq RE-LIST (opq in its stored rotation's
+    // space); either way the vector set is preserved, the scheme
+    // carries forward, and the probe equals an index freshly encoded
+    // from the survivors under the retrained books
+    val survivors = e.filter(col("vec_id") % 9 =!= 3)
+    val (gFrom, gTo) = ProductQuant.retrainStore(spark, base, survivors, 16)
+    val diff = ProductQuant.indexGenDiff(spark, base, gFrom, gTo)
+      .filter(col("status").isin("added", "removed")).count()
+    assert(diff == 0L, s"$scheme retrain added or removed vectors")
+    assert(meta().scheme == scheme, s"retrain dropped $scheme")
+    val (coarse, bySub) = ProductQuant.loadQuantizers(spark,
+      ProductQuant.currentIndexDir(spark, base))
+    val fresh = Scratch.dir(s"scheme_fresh_${scheme.name}_")
+    ProductQuant.writeIndex(ProductQuant.ivfadcCodesWith(survivors,
+      coarse, bySub, d, scheme), fresh)
+    val post = probe()
+    assert(post.nonEmpty && post.forall(_._2 % 9 != 3))
+    assert(post == rows(ProductQuant.ivfadcProbeIndex(e,
+      col("vec_id") < 30, 3, fresh, coarse, bySub, scheme,
+      dim = Some(d))), s"$scheme retrained probe != fresh encode")
+    // a probe whose corpus geometry disagrees with the stored books
+    // refuses rather than scoring against them
+    val ex = intercept[IllegalStateException] {
+      ProductQuant.ivfadcProbeStore(e, col("vec_id") < 30, 3, base,
+        dim = Some(d + 1))
     }
+    assert(ex.getMessage.contains(s"encoded at dim $d"), ex.getMessage)
+  }
+
+  test("the store records its encoding scheme; mismatched probes refuse; residual retrain re-encodes (r18)") {
+    schemeLifecycle(ProductQuant.Scheme.Flat, 0L)
+    schemeLifecycle(ProductQuant.Scheme.Residual, 1L)
+  }
+
+  test("opq stores are self-describing: mismatched probes refuse, compact+retrain carry rotation+scheme (r19)") {
+    val e = emb
+    val rot = ProductQuant.opqRotationOf(e, Similarity.dimOf(e))
+    schemeLifecycle(ProductQuant.Scheme.Opq.of(Seq(rot)), 2L)
+    // an opq scheme without the rotation its codes encode under
+    // cannot be built, so no writer can record one
+    intercept[IllegalArgumentException](ProductQuant.Scheme.Opq(Nil))
+  }
+
+  test("a k=2 rotation store round-trips: ordered rot rows, loaded-rotation probe matches in-hand, compact+retrain carry both (r20)") {
+    val e = emb
+    val rots = ProductQuant.opqRotationsOf2(e, Similarity.dimOf(e))
+    assert(rots.length == 2)
+    schemeLifecycle(ProductQuant.Scheme.Opq.of(rots), 2L)
   }
 
   test("a corrupt quantizer sidecar refuses at load") {
