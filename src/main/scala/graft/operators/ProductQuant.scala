@@ -587,9 +587,32 @@ object ProductQuant {
         rotations.map { case (w, ww) => (w.toArray, ww) }
     }
     object Opq {
-      /** The scheme of reflections as [[composeHouseholders]] returns them. */
-      def of(rots: Seq[(Array[Long], Long)]): Opq =
-        Opq(rots.map { case (w, ww) => (w.toSeq, ww) })
+      /** The opq scheme LEARNED from `embeddings` (Ge et al. 2013 via
+        * the [[graft.operators.Opq]] gauge's machinery, on the RAW
+        * corpus instead of the planted one): k ∈ {1, 2} Householder
+        * reflections from the corpus's top k principal components —
+        * k = 1 takes v₁ from the proven 30-round quantized power
+        * iteration ([[Pca.topComponent]]), k = 2 takes v₁ and the
+        * DEFLATED v₂ from one census ([[Pca.topTwoComponents]]) — so
+        * H1 concentrates v₁ into subspace dimension 0 and H2 the
+        * rotated v₂ into dimension 1 ([[composeHouseholders]]). Learn
+        * from the STANDING corpus only: books and codes freeze under
+        * this rotation, and re-learning it on a grown corpus would
+        * silently re-rotate the space every standing code word
+        * quantizes in.
+        */
+      def learn(embeddings: DataFrame, d: Int, k: Int): Opq = {
+        require(k == 1 || k == 2,
+          s"an opq scheme learns 1 or 2 reflections, not $k")
+        val comps =
+          if (k == 1) Seq(Pca.topComponent(embeddings, d)._1)
+          else {
+            val (v1, v2) = Pca.topTwoComponents(embeddings, d)
+            Seq(v1, v2)
+          }
+        Opq(composeHouseholders(comps, d).map { case (w, ww) =>
+          (w.toSeq, ww) })
+      }
     }
   }
 
@@ -702,9 +725,8 @@ object ProductQuant {
     */
   private[graft] def ivfadcStage1(embeddings: DataFrame,
                                   queryPred: Column, nCoarse: Int,
-                                  nProbe: Int,
-                                  dim: Option[Int] = None,
-                                  scheme: Scheme = Scheme.Flat): DataFrame = {
+                                  nProbe: Int, scheme: Scheme,
+                                  dim: Option[Int] = None): DataFrame = {
     val d = dim.getOrElse(Similarity.dimOf(embeddings))
     val e = inSpace(scheme, embeddings, d)
     registerKernels(e.sparkSession)
@@ -789,13 +811,13 @@ object ProductQuant {
     * shortlist keeps every probed candidate, so recall ties at 0.55.
     */
   def ivfadcTopK(embeddings: DataFrame, queryPred: Column, k: Int,
-                 scheme: Scheme = Scheme.Flat,
+                 scheme: Scheme,
                  nCoarse: Int = 16, nProbe: Int = 4,
                  dim: Option[Int] = None): DataFrame = {
     val d = dim.getOrElse(Similarity.dimOf(embeddings))
     val e = inSpace(scheme, embeddings, d)
     val scored = ivfadcStage1(embeddings, queryPred, nCoarse, nProbe,
-        Some(d), scheme)
+        scheme, Some(d))
       .groupBy(col("q_id"), col("vec_id"))
       .agg(adc6Of(scheme))
     adcRerank(shortlistOf(scored, e), e, d, k)
@@ -914,7 +936,7 @@ object ProductQuant {
                        indexDir: String,
                        coarse: Seq[(Long, Array[Double])],
                        bySub: Map[Int, Seq[(Long, Array[Double])]],
-                       scheme: Scheme = Scheme.Flat,
+                       scheme: Scheme,
                        nProbe: Int = 4,
                        dim: Option[Int] = None,
                        excludeIds: Option[DataFrame] = None): DataFrame = {
@@ -1462,7 +1484,7 @@ object ProductQuant {
     */
   def ivfadcStoreProbeTopK(embeddings: DataFrame, queryPred: Column,
                            k: Int, baseDir: String,
-                           scheme: Scheme = Scheme.Flat,
+                           scheme: Scheme,
                            nCoarse: Int = 16, nProbe: Int = 4,
                            dim: Option[Int] = None): DataFrame = {
     val spark = embeddings.sparkSession
@@ -2883,7 +2905,7 @@ object ProductQuant {
     */
   def ivfadcIngestTopK(embeddings: DataFrame, standingPred: Column,
                        queryPred: Column, k: Int, indexDir: String,
-                       scheme: Scheme = Scheme.Flat,
+                       scheme: Scheme,
                        nCoarse: Int = 16, nProbe: Int = 4,
                        dim: Option[Int] = None): DataFrame = {
     val d = dim.getOrElse(Similarity.dimOf(embeddings))
@@ -2903,36 +2925,6 @@ object ProductQuant {
 
   private def rndHalfAway(x: Double): Long =
     if (x < 0) -Math.round(-x) else Math.round(x)
-
-  /** The OPQ rotation learned from the corpus (Ge et al. 2013 via the
-    * [[Opq]] gauge's machinery, on the RAW corpus instead of the
-    * planted one): v₁ from the proven 30-round quantized power
-    * iteration ([[Pca.topComponent]] — d² census + d longs of driver
-    * state), Householder w = v₁ − N·e₀ with N = rnd(√Σv₁²) — the
-    * reflection that concentrates the corpus's top covariance
-    * direction into subspace 0. Returns (w micro-longs, w'w exact) —
-    * the pair [[writeQuantizers]] persists as the store's rotation row.
-    */
-  def opqRotationOf(embeddings: DataFrame, d: Int): (Array[Long], Long) = {
-    val (v1, _, _) = Pca.topComponent(embeddings, d)
-    composeHouseholders(Seq(v1), d).head
-  }
-
-  /** The TWO-component OPQ rotation (VERDICT r19 #4 — the honest
-    * upgrade from "decorrelates the top component" toward Ge et al.'s
-    * full orthogonal matrix): v1 and the DEFLATED v2 from one census
-    * ([[Pca.topTwoComponents]]), composed into two Householders
-    * applied in order — H1 concentrates v1 into subspace dimension 0;
-    * H2 concentrates H1·v2 (orthogonal to e0 up to integer rounding,
-    * because v2 ⊥ v1 and H1·v1 = N·e0) into dimension 1, leaving
-    * dimension 0 essentially fixed. Returns the ordered reflection
-    * list [[writeQuantizers]] persists as k `rot` rows.
-    */
-  def opqRotationsOf2(embeddings: DataFrame, d: Int)
-      : Seq[(Array[Long], Long)] = {
-    val (v1, v2) = Pca.topTwoComponents(embeddings, d)
-    composeHouseholders(Seq(v1, v2), d)
-  }
 
   /** Compose k Householder reflections from k (ordered, deflated)
     * component iterates: component j first passes through the

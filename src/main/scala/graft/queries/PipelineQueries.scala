@@ -1091,7 +1091,8 @@ object PipelineQueries {
     // "true IVFADC" item; Jégou 2011 §V). Scoring, shortlist rule, and
     // exact rerank are shared with ann_pq_adc — one definition.
     "ann_ivfadc" -> ((s, dir) =>
-      ProductQuant.ivfadcTopK(emb(s, dir), col("vec_id") < 50, 3)
+      ProductQuant.ivfadcTopK(emb(s, dir), col("vec_id") < 50, 3,
+        ProductQuant.Scheme.Flat)
         .orderBy("query_id", "rank")),
 
     // IVFADC against the PERSISTED ccid-partitioned index
@@ -1126,7 +1127,7 @@ object PipelineQueries {
     // ann_ivfadc_partitioned by construction; same oracle SQL.
     "ann_ivfadc_store_probe" -> ((s, dir) =>
       ProductQuant.ivfadcStoreProbeTopK(emb(s, dir), col("vec_id") < 50,
-        3, graft.Scratch.dir("ivfadc_store_face_"))
+        3, graft.Scratch.dir("ivfadc_store_face_"), ProductQuant.Scheme.Flat)
         .orderBy("query_id", "rank")),
 
     // The store's DELETE verb at probe time (round 16): tombstone
@@ -1521,8 +1522,7 @@ object PipelineQueries {
       val d = Similarity.dimOf(e)
       val base = graft.Scratch.dir("idx_life_opq_")
       val standing = e.filter(col("vec_id") < 400)
-      val opq = ProductQuant.Scheme.Opq.of(
-        Seq(ProductQuant.opqRotationOf(standing, d)))
+      val opq = ProductQuant.Scheme.Opq.learn(standing, d, 1)
       val (coarse, bySub) = ProductQuant.ivfadcQuantizers(standing, 16, d,
         opq)
       ProductQuant.publishIndex(s, base,
@@ -1593,7 +1593,8 @@ object PipelineQueries {
     // index level (standing files byte-identical, spec-asserted).
     "ann_ivfadc_ingest" -> ((s, dir) =>
       ProductQuant.ivfadcIngestTopK(emb(s, dir), col("vec_id") < 400,
-        col("vec_id") < 50, 3, graft.Scratch.dir("ivfadc_ingest_"))
+        col("vec_id") < 50, 3, graft.Scratch.dir("ivfadc_ingest_"),
+        ProductQuant.Scheme.Flat)
         .orderBy("query_id", "rank")),
 
     // Recall gate for IVFADC — exact-truth contract: probing can only
@@ -1604,7 +1605,8 @@ object PipelineQueries {
     "ivfadc_recall" -> ((s, dir) => {
       val e = emb(s, dir)
       recallGate(Similarity.bruteForceTopK(e, col("vec_id") < 50, 3),
-        ProductQuant.ivfadcTopK(e, col("vec_id") < 50, 3))
+        ProductQuant.ivfadcTopK(e, col("vec_id") < 50, 3,
+          ProductQuant.Scheme.Flat))
     }),
 
     // Residual IVFADC (ProductQuant.ivfadcTopK scaladoc, Scheme.Residual) — the
@@ -1715,7 +1717,7 @@ object PipelineQueries {
         val d = Similarity.dimOf(e)
         ProductQuant.ivfadcStoreProbeTopK(e, col("vec_id") < 50, 3,
           graft.Scratch.dir("opq_store_"),
-          ProductQuant.Scheme.Opq.of(Seq(ProductQuant.opqRotationOf(e, d))),
+          ProductQuant.Scheme.Opq.learn(e, d, 1),
           dim = Some(d))
       }
         .orderBy("query_id", "rank")),
@@ -1737,8 +1739,8 @@ object PipelineQueries {
         // with the books
         ProductQuant.ivfadcIngestTopK(e, col("vec_id") < 400,
           col("vec_id") < 50, 3, graft.Scratch.dir("opq_ingest_"),
-          ProductQuant.Scheme.Opq.of(Seq(ProductQuant.opqRotationOf(
-            e.filter(col("vec_id") < 400), d))), dim = Some(d))
+          ProductQuant.Scheme.Opq.learn(e.filter(col("vec_id") < 400), d, 1),
+          dim = Some(d))
       }
         .orderBy("query_id", "rank")),
 

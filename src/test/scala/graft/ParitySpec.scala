@@ -618,8 +618,7 @@ class CliSpec extends SparkSpec {
     val d = Similarity.dimOf(e)
     // an opq source store: rotation + rotated-space books + codes
     val src = Files.createTempDirectory("graft_opq_src").toString
-    val opq = ProductQuant.Scheme.Opq.of(
-      Seq(ProductQuant.opqRotationOf(e, d)))
+    val opq = ProductQuant.Scheme.Opq.learn(e, d, 1)
     val (coarse, bySub) = ProductQuant.ivfadcQuantizers(e, 16, d, opq)
     ProductQuant.publishIndex(spark, src,
       ProductQuant.ivfadcCodesWith(e, coarse, bySub, d, opq),

@@ -16,7 +16,8 @@ class ProductQuantSpec extends SparkSpec {
                         books: ProductQuant.Quantizers, d: Int) =
     ProductQuant.ivfadcProbeIndex(e, col("vec_id") < 30, 3,
       ProductQuant.currentIndexDir(spark, base), books._1, books._2,
-      dim = Some(d), excludeIds = ProductQuant.tombstones(spark, base))
+      ProductQuant.Scheme.Flat, dim = Some(d),
+      excludeIds = ProductQuant.tombstones(spark, base))
 
   test("codebook is bounded M*Ks with subspace-length centroids") {
     val dim = Similarity.dimOf(emb)
@@ -53,7 +54,8 @@ class ProductQuantSpec extends SparkSpec {
     val part = ProductQuant.ivfadcPartitionedTopK(emb, col("vec_id") < 3,
       3, idxDir, nProbe = 2)
     val rows = part.orderBy("query_id", "rank").collect()
-    val mem = ProductQuant.ivfadcTopK(emb, col("vec_id") < 3, 3, nProbe = 2)
+    val mem = ProductQuant.ivfadcTopK(emb, col("vec_id") < 3, 3,
+      ProductQuant.Scheme.Flat, nProbe = 2)
       .orderBy("query_id", "rank").collect()
     assert(rows.nonEmpty && rows.map(_.toSeq).toSeq == mem.map(_.toSeq).toSeq,
       "partitioned face must be row-identical to the in-memory face")
@@ -76,7 +78,7 @@ class ProductQuantSpec extends SparkSpec {
     // stage 1 alone: run the face but capture the file state between
     // write and append by re-running the standing write ourselves
     val r = ProductQuant.ivfadcIngestTopK(emb, standing, col("vec_id") < 3,
-      3, idxDir, nProbe = 2)
+      3, idxDir, ProductQuant.Scheme.Flat, nProbe = 2)
     val rows = r.orderBy("query_id", "rank").collect()
     assert(rows.nonEmpty)
     // the merged index holds BOTH batches' codes
@@ -95,7 +97,8 @@ class ProductQuantSpec extends SparkSpec {
         .map(_.toString).toSet
     val after = files()
     val r2 = ProductQuant.ivfadcIngestTopK(emb, standing, col("vec_id") < 3,
-      3, idxDir, nProbe = 2).orderBy("query_id", "rank").collect()
+      3, idxDir, ProductQuant.Scheme.Flat, nProbe = 2)
+      .orderBy("query_id", "rank").collect()
     assert(rows.map(_.toSeq).toSeq == r2.map(_.toSeq).toSeq,
       "ingest must be deterministic across re-runs")
     assert(files().size == after.size,
@@ -185,14 +188,16 @@ class ProductQuantSpec extends SparkSpec {
     // LUT entry once (minus self-pairs)
     val flatPairs = (corpus - 1) * nQueries * ProductQuant.AdcM
     val ivfadcPairs = ProductQuant
-      .ivfadcStage1(emb, col("vec_id") < 50, 16, 4).count()
+      .ivfadcStage1(emb, col("vec_id") < 50, 16, 4,
+        ProductQuant.Scheme.Flat).count()
     assert(ivfadcPairs > 0)
     // 4 probes of 16 lists: expect ~1/4 of the flat scan; assert the
     // headline claim conservatively (strictly under half)
     assert(ivfadcPairs * 2 < flatPairs,
       s"ivfadc stage-1 $ivfadcPairs pairs vs flat $flatPairs")
     // every stage-1 row carries exactly the composed-index shape
-    val row = ProductQuant.ivfadcStage1(emb, col("vec_id") < 50, 16, 4)
+    val row = ProductQuant.ivfadcStage1(emb, col("vec_id") < 50, 16, 4,
+        ProductQuant.Scheme.Flat)
       .select("ccid", "sub", "code", "q_id", "vec_id").limit(1).collect()
     assert(row.length == 1)
   }
@@ -213,7 +218,8 @@ class ProductQuantSpec extends SparkSpec {
       s"nprobe=16 probes every list, got ${out(16L)}‰")
     val nQ = emb.filter(q).count()
     val n = emb.count()
-    val pairs2 = ProductQuant.ivfadcStage1(emb, q, 16, 2).count() /
+    val pairs2 = ProductQuant.ivfadcStage1(emb, q, 16, 2,
+      ProductQuant.Scheme.Flat).count() /
       ProductQuant.AdcM
     assert(out(2L) == 1000L * pairs2 / (nQ * (n - 1)),
       s"sweep census diverged from the stage-1 fold at nprobe=2: " +
@@ -255,7 +261,8 @@ class ProductQuantSpec extends SparkSpec {
     // definition, not two implementations drifting). Full agreement is
     // NOT expected — probing legitimately changes the candidate pool
     // (ivfadcTopK scaladoc's measured curve).
-    val ivf = ProductQuant.ivfadcTopK(emb, col("vec_id") < 50, 3)
+    val ivf = ProductQuant.ivfadcTopK(emb, col("vec_id") < 50, 3,
+      ProductQuant.Scheme.Flat)
       .select("query_id", "cand_id", "score")
       .as[(Long, Long, Double)].collect()
     assert(ivf.nonEmpty)
@@ -273,7 +280,8 @@ class ProductQuantSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet
     def recallAt(np: Int): Double = {
       val got = ProductQuant
-        .ivfadcTopK(emb, col("vec_id") < 50, 3, nProbe = np)
+        .ivfadcTopK(emb, col("vec_id") < 50, 3, ProductQuant.Scheme.Flat,
+          nProbe = np)
         .select("query_id", "cand_id")
         .as[(Long, Long)].collect().toSet
       truth.count(got.contains).toDouble / truth.size
@@ -767,24 +775,27 @@ class ProductQuantSpec extends SparkSpec {
     }
   }
 
-  /** One scheme's store lifecycle — publish, probe, delete, compact,
-    * retrain, probe — with the raw sidecar rows pinned: the meta row
-    * carries `code`, an opq scheme's rot rows keep their application
-    * order through every rewrite, and every store probe reads the
-    * scheme from the sidecar. */
-  private def schemeLifecycle(scheme: ProductQuant.Scheme, code: Long): Unit = {
+  private def probeRows(df: org.apache.spark.sql.DataFrame) =
+    df.select("query_id", "cand_id", "rank").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
+
+  /** Publish one scheme's store and pin it: its probe equals the inline
+    * face, and the raw sidecar rows hold the meta row carrying `code`
+    * and the scheme's rot rows in application order. Returns the
+    * store's base dir. */
+  private def schemePublish(scheme: ProductQuant.Scheme, code: Long): String = {
     val e = emb
     val d = Similarity.dimOf(e)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("query_id", "cand_id", "rank").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
     val base = Scratch.dir(s"scheme_${scheme.name}_")
     // publish + probe through books LOADED FROM THE STORE equals the
-    // inline face, which trains its own books
-    val got = rows(ProductQuant.ivfadcStoreProbeTopK(e,
+    // inline face, which trains its own books — run in a FRESH session
+    // (no extensions, no kernels) so the inline path must register
+    // every kernel its scheme scores with on the corpus's session
+    val got = probeRows(ProductQuant.ivfadcStoreProbeTopK(e,
       col("vec_id") < 30, 3, base, scheme, dim = Some(d)))
-    val want = rows(ProductQuant.ivfadcTopK(e, col("vec_id") < 30, 3,
-      scheme, dim = Some(d)))
+    val want = probeRows(ProductQuant.ivfadcTopK(
+      Tables.load(spark.newSession(), sfDir, "embeddings"),
+      col("vec_id") < 30, 3, scheme, dim = Some(d)))
     assert(got.nonEmpty && got == want, s"$scheme store != inline")
     // the on-disk contract, read raw: ONE meta row (kind, sub=-1,
     // ord=0, cid=scheme code, cv=(nCoarse, m, ks, dim)), one `rot`
@@ -808,45 +819,66 @@ class ProductQuantSpec extends SparkSpec {
     assert(coarseRows.length == 16 && coarseRows.forall(
       _.getSeq[Double](4).length == d))
     assert(raw.length == 1 + rot.length + 16 + bookRows.length)
-    // the geometry row describes the books beside it (a residual
-    // book may hold fewer than AdcKs centroids: the Lloyd seeds that
-    // won no residual member drop out)
+    // the geometry row describes the books beside it: flat and opq
+    // books hold all 16 centroids; a residual book may hold fewer (the
+    // Lloyd seeds that won no residual member drop out)
     val ks = bookRows.groupBy(_.getInt(1)).values.map(_.length).max
+    if (scheme != ProductQuant.Scheme.Residual) assert(ks == 16, s"$scheme")
     assert(bookRows.map(_.getInt(1)).distinct.sorted.toSeq == (0 until 8))
     assert(m.getSeq[Double](4) == Seq(16.0, 8.0, ks.toDouble, d.toDouble))
+    assert(ProductQuant.loadQuantizersMeta(spark,
+      ProductQuant.currentIndexDir(spark, base))._2 ==
+      ProductQuant.IndexMeta(scheme, 16, 8, ks, d))
+    base
+  }
+
+  /** One scheme's store lifecycle — publish, probe, delete, compact,
+    * retrain, probe — on top of [[schemePublish]]'s pins: the scheme
+    * and an opq scheme's rot rows carry through every rewrite, and
+    * every store probe reads the scheme from the sidecar. */
+  private def schemeLifecycle(scheme: ProductQuant.Scheme, code: Long): Unit = {
+    val e = emb
+    val d = Similarity.dimOf(e)
+    val base = schemePublish(scheme, code)
     def meta() = ProductQuant.loadQuantizersMeta(spark,
       ProductQuant.currentIndexDir(spark, base))._2
-    assert(meta() == ProductQuant.IndexMeta(scheme, 16, 8, ks, d))
-    // deletes: the tombstone-filtered probe of the old generation
-    // equals the probe of the compacted one, which carries the scheme
+    def codes(df: org.apache.spark.sql.DataFrame) = df.select(
+      col("vec_id"), col("ccid").cast("int"), col("sub").cast("int"),
+      col("code").cast("long"))
+    def live() = codes(spark.read.parquet(
+      ProductQuant.currentIndexDir(spark, base)))
+    def same(a: org.apache.spark.sql.DataFrame,
+             b: org.apache.spark.sql.DataFrame) =
+      a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+    // deletes: compaction drops exactly the tombstoned rows, leaves
+    // every other code row as it was, and carries the scheme
+    val published = ProductQuant.currentIndexDir(spark, base)
     ProductQuant.writeTombstones(spark, base,
       e.filter(col("vec_id") % 9 === 3).select("vec_id"))
-    def probe() = rows(ProductQuant.ivfadcProbeStore(e,
-      col("vec_id") < 30, 3, base, dim = Some(d)))
-    val filtered = probe()
-    assert(filtered.nonEmpty && filtered.forall(_._2 % 9 != 3))
     ProductQuant.compactStore(spark, base)
     assert(meta().scheme == scheme, s"compaction dropped $scheme")
-    assert(probe() == filtered, s"$scheme probe changed across compaction")
+    assert(same(live(), codes(spark.read.parquet(published))
+      .filter(col("vec_id") % 9 =!= 3)), s"$scheme compaction rows")
     // retrain on the survivors: residual RE-ENCODES against the new
     // coarse book, flat and opq RE-LIST (opq in its stored rotation's
-    // space); either way the vector set is preserved, the scheme
-    // carries forward, and the probe equals an index freshly encoded
-    // from the survivors under the retrained books
+    // space); either way the scheme carries forward, the retrained
+    // generation holds exactly the survivors' codes under the
+    // retrained books, and its probe equals an index freshly encoded
+    // from the survivors
     val survivors = e.filter(col("vec_id") % 9 =!= 3)
-    val (gFrom, gTo) = ProductQuant.retrainStore(spark, base, survivors, 16)
-    val diff = ProductQuant.indexGenDiff(spark, base, gFrom, gTo)
-      .filter(col("status").isin("added", "removed")).count()
-    assert(diff == 0L, s"$scheme retrain added or removed vectors")
+    ProductQuant.retrainStore(spark, base, survivors, 16)
     assert(meta().scheme == scheme, s"retrain dropped $scheme")
     val (coarse, bySub) = ProductQuant.loadQuantizers(spark,
       ProductQuant.currentIndexDir(spark, base))
     val fresh = Scratch.dir(s"scheme_fresh_${scheme.name}_")
     ProductQuant.writeIndex(ProductQuant.ivfadcCodesWith(survivors,
       coarse, bySub, d, scheme), fresh)
-    val post = probe()
+    assert(same(live(), codes(spark.read.parquet(fresh))),
+      s"$scheme retrained codes != fresh encode")
+    val post = probeRows(ProductQuant.ivfadcProbeStore(e,
+      col("vec_id") < 30, 3, base, dim = Some(d)))
     assert(post.nonEmpty && post.forall(_._2 % 9 != 3))
-    assert(post == rows(ProductQuant.ivfadcProbeIndex(e,
+    assert(post == probeRows(ProductQuant.ivfadcProbeIndex(e,
       col("vec_id") < 30, 3, fresh, coarse, bySub, scheme,
       dim = Some(d))), s"$scheme retrained probe != fresh encode")
     // a probe whose corpus geometry disagrees with the stored books
@@ -865,8 +897,11 @@ class ProductQuantSpec extends SparkSpec {
 
   test("opq stores are self-describing: mismatched probes refuse, compact+retrain carry rotation+scheme (r19)") {
     val e = emb
-    val rot = ProductQuant.opqRotationOf(e, Similarity.dimOf(e))
-    schemeLifecycle(ProductQuant.Scheme.Opq.of(Seq(rot)), 2L)
+    val opq = ProductQuant.Scheme.Opq.learn(e, Similarity.dimOf(e), 1)
+    assert(opq.rotations.length == 1)
+    // a one-reflection store publishes, pins its rot row and probes
+    // like the inline face; the k=2 test below runs the opq lifecycle
+    schemePublish(opq, 2L)
     // an opq scheme without the rotation its codes encode under
     // cannot be built, so no writer can record one
     intercept[IllegalArgumentException](ProductQuant.Scheme.Opq(Nil))
@@ -874,9 +909,9 @@ class ProductQuantSpec extends SparkSpec {
 
   test("a k=2 rotation store round-trips: ordered rot rows, loaded-rotation probe matches in-hand, compact+retrain carry both (r20)") {
     val e = emb
-    val rots = ProductQuant.opqRotationsOf2(e, Similarity.dimOf(e))
-    assert(rots.length == 2)
-    schemeLifecycle(ProductQuant.Scheme.Opq.of(rots), 2L)
+    val opq = ProductQuant.Scheme.Opq.learn(e, Similarity.dimOf(e), 2)
+    assert(opq.rotations.length == 2)
+    schemeLifecycle(opq, 2L)
   }
 
   test("a corrupt quantizer sidecar refuses at load") {
