@@ -94,9 +94,12 @@ object Tables {
     if (est < target) df.repartition(target) else df
   }
 
+  /** Path of a fixture table under a source directory. */
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     ensureConf(spark)
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = spark.read.parquet(path(dir, name))
     // Convert nanos-as-long to the engine's microsecond TimestampType with
     // integer division (epoch nanos exceed 2^53, so double math would lose
     // precision).

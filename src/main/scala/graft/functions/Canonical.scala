@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, GraftColumns}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,15 +16,24 @@ import org.apache.spark.sql.types._
   *   serial(row)  = concat_ws('|', canonical(col1), ..., canonical(colN))
   *   fp(row)      = md5(serial)                    -- full 128 bits (equality)
   *   fp48(row)    = bigint(first 12 hex of fp)     -- 48 bits (checksum lane)
-  *   checksum(S)  = sum(fp48(row) for row in S)    -- commutative
+  *   checksum(S)  = (sum(fp48 >> 24), sum(fp48 & 0xFFFFFF)) over S
+  *
+  * The engine never builds `serial`: [[RowDigest]] writes each column's
+  * canonical [[lane]] (digits of a BIGINT, or the bytes of a STRING) into
+  * one reused buffer and hashes it with one MD5 per task, yielding the
+  * hex, raw-byte or 48-bit form directly. It is bit-identical to
+  * `md5(serial)`, which stays here as the reference it is tested against
+  * and as what the oracle SQL spells out.
   *
   * Collision discipline (SURVEY.md §7.4): ROW EQUALITY is always decided on
   * the full 128-bit md5 — at 100 TB (~10^11 rows) the birthday bound for a
   * truncated 48-bit lane (~N²/2^49) would silently mask real differences,
   * while 128 bits keep it below 2^-35. The 48-bit truncation exists ONLY
-  * inside the per-chunk commutative checksum, where the SUM needs overflow
-  * headroom: 48-bit fingerprints summed over <= 2^14-row chunks stay far
-  * below 2^63, the sum is order-independent, and partial aggregation
+  * inside the per-chunk commutative checksum. That checksum is the pair of
+  * sums of the lane's two 24-bit halves ([[checksumSums]]): each half-sum
+  * stays below 2^63 up to 2^39 rows per chunk, so no legal chunk size or
+  * bucket count overflows it, and the pair determines the full 48-bit sum
+  * exactly. The sums are order-independent and partial aggregation
   * (map-side combine) applies — Catalyst plans this as a two-phase
   * HashAggregate with no extra shuffle beyond the groupBy(chunk). A chunk
   * checksum collision is caught downstream by the row pass (full md5), so
@@ -59,19 +68,23 @@ object Canonical {
     */
   def epochMs(c: Column): Column = unix_millis(c.cast(TimestampType))
 
-  /** Canonical string form of one column, by declared type. */
-  def canonical(c: Column, dt: DataType): Column = dt match {
-    case ByteType | ShortType | IntegerType | LongType => c.cast(StringType)
-    case BooleanType => c.cast(IntegerType).cast(StringType)
+  /** Canonical lane of one column, by declared type: a BIGINT whose
+    * decimal digits are the canonical form (integral, boolean, money
+    * double, timestamp) or a STRING holding it (decimal, date, string,
+    * binary md5, nested JSON) — the input [[RowDigest]] hashes.
+    */
+  def lane(c: Column, dt: DataType): Column = dt match {
+    case ByteType | ShortType | IntegerType | LongType | BooleanType =>
+      c.cast(LongType)
     case FloatType | DoubleType =>
       // 2-decimal fixed-point; exact for the fixture money columns and
       // identical to DuckDB's CAST(round(x*100) AS BIGINT).
-      round(c.cast(DoubleType) * lit(100)).cast(LongType).cast(StringType)
+      round(c.cast(DoubleType) * lit(100)).cast(LongType)
     case _: DecimalType => c.cast(StringType)
     case TimestampType | TimestampNTZType =>
       // Epoch millis match DuckDB's epoch_ms over the same file; epochMs
       // handles the NTZ case (see its scaladoc).
-      epochMs(c).cast(StringType)
+      epochMs(c)
     case DateType => c.cast(StringType)
     case StringType => c
     case BinaryType => md5(c)
@@ -81,12 +94,19 @@ object Canonical {
       to_json(struct(c.as("v")))
   }
 
+  /** Canonical string form of one column, by declared type. */
+  def canonical(c: Column, dt: DataType): Column =
+    lane(c, dt).cast(StringType)
+
   private def serialize(cols: Seq[(Column, DataType)], sep: String): Column =
     concat_ws(sep, cols.map { case (c, dt) =>
       coalesce(canonical(c, dt), lit(NullSentinel))
     }: _*)
 
-  /** Pipe-joined canonical serialization of the given columns. */
+  /** Pipe-joined canonical serialization of the given columns — what
+    * [[fingerprint]] hashes, kept as the Catalyst reference the kernel is
+    * tested against (the engine never materializes it).
+    */
   def serial(cols: Seq[(Column, DataType)]): Column = serialize(cols, "|")
 
   /** Comma-joined form — sample payload for diff inspection. */
@@ -125,17 +145,39 @@ object Canonical {
   def sqlValues(cols: Seq[(Column, DataType)]): Column =
     concat_ws(", ", cols.map { case (c, dt) => sqlLiteral(c, dt) }: _*)
 
-  /** Portable full-128-bit row fingerprint (lowercase md5 hex,
-    * oracle-reproducible). The ONLY basis for row-equality decisions.
+  private def digest(cols: Seq[(Column, DataType)], form: RowDigest.Form): Column =
+    GraftColumns.of(RowDigest(cols.map { case (c, dt) =>
+      GraftColumns.expressionOf(lane(c, dt))
+    }, form))
+
+  /** Portable full-128-bit row fingerprint (lowercase md5 hex of
+    * [[serial]], oracle-reproducible). The ONLY basis for row-equality
+    * decisions.
     */
   def fingerprint(cols: Seq[(Column, DataType)]): Column =
-    md5(serial(cols))
+    digest(cols, RowDigest.Hex)
 
-  /** 48-bit fingerprint for the commutative chunk-checksum lane only —
-    * never used alone for row equality (see collision discipline above).
+  /** [[fingerprint]] as its 16 raw bytes (`unhex(fingerprint)`) — the
+    * narrow shuffle key of the keyless multiset diff.
+    */
+  def fingerprintBytes(cols: Seq[(Column, DataType)]): Column =
+    digest(cols, RowDigest.Bytes)
+
+  /** 48-bit fingerprint for the commutative chunk-checksum lane only
+    * (`hex48(fingerprint)`) — never used alone for row equality (see
+    * collision discipline above).
     */
   def fingerprint48(cols: Seq[(Column, DataType)]): Column =
-    hex48(md5(serial(cols)))
+    digest(cols, RowDigest.Fp48)
+
+  /** The chunk checksum of a 48-bit lane column: the sums of its high and
+    * low 24-bit halves, named `<prefix>checksum_hi` / `<prefix>checksum_lo`.
+    * Each half is below 2^24, so a half-sum cannot overflow a BIGINT below
+    * 2^39 rows per chunk, and (hi, lo) gives the full sum hi·2^24 + lo.
+    */
+  def checksumSums(fp48: Column, prefix: String = ""): Seq[Column] = Seq(
+    sum(shiftright(fp48, 24)).as(s"${prefix}checksum_hi"),
+    sum(fp48.bitwiseAND(lit(0xFFFFFFL))).as(s"${prefix}checksum_lo"))
 
   /** First 12 hex chars of a hex string, as a bigint (48 bits). */
   def hex48(hexCol: Column): Column =

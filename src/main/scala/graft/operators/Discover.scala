@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
@@ -22,20 +23,43 @@ object Discover {
     * job per table — no data scan), matching the reference's reliance on
     * stats (`information_schema.tables.TABLE_ROWS`).
     */
-  private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String, Long, String)]]()
-
   def manifest(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // Row counts are parquet-footer metadata; memoize per fixture dir so
-    // the discovery/config/cleanup queries don't re-issue 10 count jobs
-    // each — the reference likewise reads stats, not data (TABLE_ROWS,
-    // config.toml:16). Snapshot dirs are immutable, so the cache is safe.
-    val rows = manifestCache.computeIfAbsent(dir, _ =>
-      Tables.all.map { t =>
-        ("main", t, Tables.load(spark, dir, t).count(), Tables.pkKind(t))
-      })
-    rows.toDF("schema_name", "table_name", "table_rows", "pk_kind")
+    Tables.all.map { t =>
+      ("main", t, rowCount(spark, Tables.path(dir, t), Tables.load(spark, dir, t)),
+        Tables.pkKind(t))
+    }.toDF("schema_name", "table_name", "table_rows", "pk_kind")
+  }
+
+  /** Row counts by table path, with the file status (path, length, mtime
+    * of every file under it) they were counted at.
+    */
+  private val countCache =
+    new java.util.concurrent.ConcurrentHashMap[String, (Seq[(String, Long, Long)], Long)]()
+
+  /** Row count of the table at `path`. Counting is footer metadata but
+    * still one Spark job per table, so the count is reused until the
+    * table's file status changes: the discovery/config/cleanup queries
+    * don't re-issue 10 count jobs each, and a table rewritten in place
+    * (say, during a long `--detach` run) is recounted. The reference
+    * likewise reads stats, not data (TABLE_ROWS, config.toml:16).
+    */
+  private def rowCount(spark: SparkSession, path: String, table: => DataFrame): Long = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // listStatus, not listFiles: a LocatedFileStatus copies each file's
+    // permissions, which the local file system reads by forking a process
+    def files(s: FileStatus): Seq[FileStatus] =
+      if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(files) else Seq(s)
+    val status = files(fs.getFileStatus(p))
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+    val hit = countCache.get(path)
+    if (hit != null && hit._1 == status) hit._2
+    else {
+      val n = table.count()
+      countCache.put(path, (status, n))
+      n
+    }
   }
 
   /** Reference default check_sql translated to the manifest relation, with

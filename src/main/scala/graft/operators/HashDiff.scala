@@ -39,7 +39,7 @@ object HashDiff {
 
   /** (fp BINARY(16), count) for one side — the narrow count pass. */
   private def counted(df: DataFrame, cnt: String): DataFrame =
-    df.select(unhex(Canonical.fingerprint(fpCols(df))).as("fp"))
+    df.select(Canonical.fingerprintBytes(fpCols(df)).as("fp"))
       .groupBy("fp").agg(count(lit(1)).as(cnt))
 
   private def joined(up: DataFrame, down: DataFrame): DataFrame =
@@ -71,7 +71,7 @@ object HashDiff {
     // Rows with equal fingerprints serialize identically, so one min()
     // sample per fp equals the per-side min/coalesce the oracle computes.
     def sideVals(df: DataFrame): DataFrame =
-      df.select(unhex(Canonical.fingerprint(fpCols(df))).as("fp"),
+      df.select(Canonical.fingerprintBytes(fpCols(df)).as("fp"),
         Canonical.serialCsv(fpCols(df)).as("vals"))
     val samples = sideVals(up).unionByName(sideVals(down))
       .join(fps, Seq("fp"), "left_semi")

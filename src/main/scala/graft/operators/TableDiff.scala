@@ -16,11 +16,12 @@ import org.apache.spark.sql.functions._
   *     join on PK, classify missing / extra / mismatch     [SURVEY.md J2]
   *
   * Scale posture (100 TB): phase 1 is one shuffle per side (partial
-  * aggregation map-side, 48-bit fingerprints sum without overflow); the bad
-  * chunk list is small in the common near-identical case, so phase 2 prunes
-  * with either (a) pushed-down PK range predicates when few chunks differ —
-  * the parquet scan then skips row groups via min/max stats, the direct
-  * analogue of the reference's index-hinted chunk range scans
+  * aggregation map-side; the 48-bit fingerprints sum as two 24-bit halves,
+  * which no chunk size overflows); the bad chunk list is small in the
+  * common near-identical case, so phase 2 prunes with either (a)
+  * pushed-down PK range predicates when few chunks differ — the parquet
+  * scan then skips row groups via min/max stats, the direct analogue of
+  * the reference's index-hinted chunk range scans
   * (`my_database_users.toml:21,30`) — or (b) a broadcast semi-join on
   * chunk_id when many differ. Nothing unbounded is collected: the range
   * pushdown path caps the collected chunk list and falls back to (b).
@@ -43,8 +44,11 @@ object TableDiff {
     *                   semi-join / flat tiers. Size the bucket count WELL
     *                   ABOVE the expected number of drifted rows (so most
     *                   buckets stay clean and the semi-join actually
-    *                   prunes — VERDICT r03 #2): at 100 TB with
-    *                   replication-lag-sized drift, 2^16..2^20 buckets.
+    *                   prunes — VERDICT r03 #2): at 100 TB (~10^11 rows)
+    *                   with replication-lag-sized drift, 2^16..2^20
+    *                   buckets, i.e. ~10^5..10^6 rows a bucket. Any count
+    *                   is safe for the checksum lane, down to one bucket:
+    *                   its split half-sums hold 2^39 rows per chunk.
     */
   case class DiffSpec(
       pkCols: Seq[String],
@@ -89,10 +93,13 @@ object TableDiff {
   /** Per-chunk (row count, commutative checksum). One shuffle; partial agg
     * happens map-side (HashAggregateExec partial/final).
     *
-    * `spec.crcCompat` switches the checksum lane from SUM-of-48-bit-md5
-    * (the engine default — order-independent AND duplicate-sensitive) to
-    * sync_diff_inspector's published `BIT_XOR(CRC32(serial))`, letting a
-    * migrating user cross-validate chunk checksums against a live
+    * The default checksum is the split sum of the 48-bit md5 lane,
+    * `checksum_hi` / `checksum_lo` ([[Canonical.checksumSums]]):
+    * order-independent, duplicate-sensitive, and no chunk of fewer than
+    * 2^39 rows can overflow it. `spec.crcCompat` replaces it with one
+    * `checksum` column holding sync_diff_inspector's published
+    * `BIT_XOR(CRC32(serial))`, letting a migrating user
+    * cross-validate chunk checksums against a live
     * TiDB/MySQL endpoint byte for byte (see [[Canonical.crcRow]] for the
     * construction and the XOR duplicate-blindness caveat that keeps this
     * opt-in). Both lanes are map-side-combining single-shuffle aggregates.
@@ -114,7 +121,7 @@ object TableDiff {
     } else
       withFingerprint(df, spec)
         .groupBy("chunk_id")
-        .agg(count(lit(1)).as("cnt"), sum(col("row_fp")).as("checksum"))
+        .agg(count(lit(1)).as("cnt"), Canonical.checksumSums(col("row_fp")): _*)
 
   /** Joined per-chunk relation of both sides with a badness flag — shared
     * by [[badChunks]] (filter) and [[summary]] (aggregate) so the report
@@ -123,14 +130,14 @@ object TableDiff {
     */
   private def chunkJoin(up: DataFrame, down: DataFrame, spec: DiffSpec): DataFrame = {
     val u = chunkChecksums(up, spec)
-      .withColumnsRenamed(Map("cnt" -> "up_cnt", "checksum" -> "up_checksum"))
-    val d = chunkChecksums(down, spec)
-      .withColumnsRenamed(Map("cnt" -> "down_cnt", "checksum" -> "down_checksum"))
-    u.join(d, Seq("chunk_id"), "full_outer")
+    val lanes = u.columns.filter(_ != "chunk_id") // cnt + the checksum lane(s)
+    def side(df: DataFrame, p: String) =
+      df.withColumnsRenamed(lanes.map(c => c -> s"$p$c").toMap)
+    side(u, "up_").join(side(chunkChecksums(down, spec), "down_"),
+        Seq("chunk_id"), "full_outer")
       .withColumn("is_bad",
         col("up_cnt").isNull || col("down_cnt").isNull ||
-          col("up_cnt") =!= col("down_cnt") ||
-          col("up_checksum") =!= col("down_checksum"))
+          lanes.map(c => col(s"up_$c") =!= col(s"down_$c")).reduce(_ || _))
   }
 
   /** One-pass per-table comparison summary: both row counts plus the

@@ -33,107 +33,11 @@ object CoreQueries {
   private def rowDiffDf(s: SparkSession, dir: String): DataFrame =
     TableDiff.rowDiff(ord(s, dir), Perturb.ordersDownstream(ord(s, dir)), ordSpec)
 
-  private def fpColsWith(df: DataFrame, over: Map[String, Column])
-      : Seq[(Column, org.apache.spark.sql.types.DataType)] =
-    df.schema.fields.toSeq.map(f =>
-      (over.getOrElse(f.name, col(f.name)), f.dataType))
-
-  /** [[TableDiff.summary]](orders, [[Perturb.ordersDownstream]](orders),
-    * ordSpec), computed from ONE scan of orders (guide §8 — use what the
-    * optimizer cannot know): the verify-harness downstream is a
-    * deterministic ROW-LOCAL derivation of upstream, so each row emits
-    * both checksum lanes at once — and the downstream fingerprint REUSES
-    * the upstream md5 wherever the derivation leaves the row untouched
-    * (all but the ~1/991 mutated and ~1/983 inserted rows), instead of
-    * re-serializing and re-hashing the whole table a second time. The
-    * merged per-chunk lanes aggregate to exactly the full-outer
-    * chunkJoin's summary: a chunk group exists iff some lane emitted into
-    * it, so `cnt = 0` is the join's NULL side, and the checksum lanes are
-    * order-free BIGINT sums. The generic two-relation operator is
-    * untouched — production sides are independent tables; this fusion is
-    * the face's derived-downstream special case.
-    */
-  private[graft] def ordersSummaryFused(orders: DataFrame): DataFrame = {
-    val key = col("o_orderkey")
-    val w = ordSpec.chunkWidth
-    val off = orders.agg(
-      (coalesce(max(key), lit(0L)) + 1L).as("__off"))
-    val fpMut = Canonical.fingerprint48(fpColsWith(orders,
-      Map("o_totalprice" -> (col("o_totalprice") + 1))))
-    val fpExtra = Canonical.fingerprint48(fpColsWith(orders,
-      Map("o_orderkey" -> (key + col("__off")))))
-    val lanes = orders.crossJoin(broadcast(off))
-      .withColumn("__fp",
-        Canonical.fingerprint48(fpColsWith(orders, Map.empty)))
-      .select(explode(array(
-        struct(Canonical.chunkId(key, w).as("chunk_id"),
-          col("__fp").as("fp"), lit(true).as("up")),
-        when(!(key % 997 === 1),
-          struct(Canonical.chunkId(key, w).as("chunk_id"),
-            when(key % 991 === 2, fpMut).otherwise(col("__fp")).as("fp"),
-            lit(false).as("up"))),
-        when(key % 983 === 3,
-          struct(Canonical.chunkId(key + col("__off"), w).as("chunk_id"),
-            fpExtra.as("fp"), lit(false).as("up"))))).as("l"))
-      .filter(col("l").isNotNull)
-      .select(col("l.chunk_id").as("chunk_id"), col("l.fp").as("fp"),
-        col("l.up").as("up"))
-    lanes.groupBy("chunk_id").agg(
-      count(when(col("up"), 1)).as("up_cnt"),
-      sum(when(col("up"), col("fp"))).as("up_checksum"),
-      count(when(!col("up"), 1)).as("down_cnt"),
-      sum(when(!col("up"), col("fp"))).as("down_checksum"))
-      .agg(
-        sum(col("up_cnt")).as("upcount"),
-        sum(col("down_cnt")).as("downcount"),
-        sum(when(col("up_cnt") === 0 || col("down_cnt") === 0 ||
-          col("up_cnt") =!= col("down_cnt") ||
-          col("up_checksum") =!= col("down_checksum"), 1L)
-          .otherwise(0L)).as("bad_chunks"))
-  }
-
-  /** [[HashDiff.summary]](lineitem, [[Perturb.lineitemDownstream]]) from
-    * ONE scan — the multiset twin of [[ordersSummaryFused]]: both lanes'
-    * fingerprints emit per row (the full 128-bit lane, HashDiff's
-    * collision discipline), the unmutated majority reuses the upstream
-    * md5, and the merged per-fingerprint counts aggregate to exactly the
-    * full-outer joined summary (a group's absent side is `cnt = 0`, the
-    * join's coalesced NULL).
-    */
-  private[graft] def lineitemSummaryFused(li: DataFrame): DataFrame = {
-    val k = col("l_orderkey")
-    def fp128(over: Map[String, Column]) =
-      unhex(Canonical.fingerprint(fpColsWith(li, over)))
-    val fpMut = fp128(Map("l_quantity" -> (col("l_quantity") + 1)))
-    val fpExtra = fp128(
-      Map("l_linenumber" -> (col("l_linenumber") + 100).cast("int")))
-    val lanes = li
-      .withColumn("__fp", fp128(Map.empty))
-      .select(explode(array(
-        struct(col("__fp").as("fp"), lit(true).as("up")),
-        when(!(k % 997 === 1),
-          struct(when(k % 991 === 2, fpMut).otherwise(col("__fp")).as("fp"),
-            lit(false).as("up"))),
-        when(k % 983 === 3 && col("l_linenumber") === 1,
-          struct(fpExtra.as("fp"), lit(false).as("up"))))).as("l"))
-      .filter(col("l").isNotNull)
-      .select(col("l.fp").as("fp"), col("l.up").as("up"))
-    lanes.groupBy("fp").agg(
-      count(when(col("up"), 1)).as("up_cnt"),
-      count(when(!col("up"), 1)).as("down_cnt"))
-      .agg(
-        sum(col("up_cnt")).as("upcount"),
-        sum(col("down_cnt")).as("downcount"),
-        sum(when(col("up_cnt") =!= col("down_cnt"), 1L).otherwise(0L))
-          .as("bad_fingerprints"))
-  }
-
   /** One-pass per table: counts + diff verdict come from a single
     * chunk/fingerprint-level aggregation ([[TableDiff.summary]] /
     * [[HashDiff.summary]]) instead of re-running the full diff pipeline
-    * per verdict/count (90s → seconds at sf0.1, ADVICE r01). Since r21
-    * each table's summary is the FUSED one-scan form above — one md5
-    * pass per table instead of one per side.
+    * per verdict/count (90s → seconds at sf0.1, ADVICE r01) — the same
+    * calls a production compare makes, over the Perturb downstream.
     */
   private def compareReport(s: SparkSession, dir: String): DataFrame = {
     val orders = ord(s, dir)
@@ -144,8 +48,10 @@ object CoreQueries {
     // session) instead of serially (VERDICT r03 #9).
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
-    val of = Future(ordersSummaryFused(orders).collect()(0))
-    val lf = Future(lineitemSummaryFused(lineitem).collect()(0))
+    val of = Future(TableDiff.summary(orders,
+      Perturb.ordersDownstream(orders), ordSpec).collect()(0))
+    val lf = Future(HashDiff.summary(lineitem,
+      Perturb.lineitemDownstream(lineitem)).collect()(0))
     val (o, l) = Await.result(of.zip(lf),
       scala.concurrent.duration.Duration.Inf)
     Report.withTotal(Report.toDF(s, Seq(
@@ -993,7 +899,7 @@ object CoreQueries {
 
     "chunk_checksum" ->
       s"""SELECT l_orderkey // 500 AS chunk_id, count(*) AS cnt,
-         |       CAST(SUM($liFp48) AS BIGINT) AS checksum
+         |       ${checksumSql(liFp48)}
          |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
 
     "chunk_checksum_crc" ->
@@ -1007,14 +913,16 @@ object CoreQueries {
     "diff_chunks" ->
       s"""WITH $oDownCte,
          |uc AS (SELECT o_orderkey // 500 AS chunk_id, count(*) AS up_cnt,
-         |              CAST(SUM($oFp48) AS BIGINT) AS up_checksum FROM orders GROUP BY 1),
+         |              ${checksumSql(oFp48, "up_")} FROM orders GROUP BY 1),
          |dc AS (SELECT o_orderkey // 500 AS chunk_id, count(*) AS down_cnt,
-         |              CAST(SUM($oFp48) AS BIGINT) AS down_checksum FROM odown GROUP BY 1)
+         |              ${checksumSql(oFp48, "down_")} FROM odown GROUP BY 1)
          |SELECT COALESCE(uc.chunk_id, dc.chunk_id) AS chunk_id,
-         |       up_cnt, up_checksum, down_cnt, down_checksum
+         |       up_cnt, up_checksum_hi, up_checksum_lo,
+         |       down_cnt, down_checksum_hi, down_checksum_lo
          |FROM uc FULL OUTER JOIN dc ON uc.chunk_id = dc.chunk_id
-         |WHERE up_cnt IS NULL OR down_cnt IS NULL
-         |   OR up_cnt <> down_cnt OR up_checksum <> down_checksum
+         |WHERE up_cnt IS NULL OR down_cnt IS NULL OR up_cnt <> down_cnt
+         |   OR up_checksum_hi <> down_checksum_hi
+         |   OR up_checksum_lo <> down_checksum_lo
          |ORDER BY chunk_id""".stripMargin,
 
     "row_diff" ->

@@ -941,7 +941,7 @@ object EventQueries {
 
     "events_hourly_checksum" ->
       s"""SELECT date_trunc('hour', ts) AS window_start, event_type,
-         |       count(*) AS cnt, CAST(SUM($evFp48) AS BIGINT) AS checksum
+         |       count(*) AS cnt, ${Oracle.checksumSql(evFp48)}
          |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
 
     "events_windowed_diff" ->
@@ -954,12 +954,13 @@ object EventQueries {
          |agg AS (
          |  SELECT date_trunc('hour', ts) AS window_start, event_type,
          |    CAST(SUM(CASE WHEN side = 0 THEN 1 ELSE 0 END) AS BIGINT) AS up_cnt,
-         |    CAST(SUM(CASE WHEN side = 0 THEN $evFp48 ELSE 0 END) AS BIGINT) AS up_checksum,
+         |    ${Oracle.checksumSql(s"CASE WHEN side = 0 THEN $evFp48 ELSE 0 END", "up_")},
          |    CAST(SUM(CASE WHEN side = 1 THEN 1 ELSE 0 END) AS BIGINT) AS down_cnt,
-         |    CAST(SUM(CASE WHEN side = 1 THEN $evFp48 ELSE 0 END) AS BIGINT) AS down_checksum
+         |    ${Oracle.checksumSql(s"CASE WHEN side = 1 THEN $evFp48 ELSE 0 END", "down_")}
          |  FROM u GROUP BY 1, 2)
          |SELECT * FROM agg
-         |WHERE up_cnt <> down_cnt OR up_checksum <> down_checksum
+         |WHERE up_cnt <> down_cnt OR up_checksum_hi <> down_checksum_hi
+         |   OR up_checksum_lo <> down_checksum_lo
          |ORDER BY window_start, event_type""".stripMargin,
 
     "events_rollup" ->

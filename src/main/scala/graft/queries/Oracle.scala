@@ -31,6 +31,14 @@ object Oracle {
   def fp48Sql(serial: String): String =
     s"CAST(('0x' || substr(md5($serial),1,12)) AS BIGINT)"
 
+  /** Split chunk checksum of a 48-bit lane expression (mirror of
+    * [[graft.functions.Canonical.checksumSums]]): the sums of its high
+    * and low 24-bit halves.
+    */
+  def checksumSql(fp48: String, prefix: String = ""): String =
+    s"CAST(SUM(($fp48) >> 24) AS BIGINT) AS ${prefix}checksum_hi, " +
+      s"CAST(SUM(($fp48) & 16777215) AS BIGINT) AS ${prefix}checksum_lo"
+
   /** Executable SQL-literal form of one column (mirror of
     * [[graft.functions.Canonical.sqlLiteral]] — repair-statement payload).
     */

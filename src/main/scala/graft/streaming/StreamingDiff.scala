@@ -13,8 +13,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * same window on a replica — once the watermark closes it.
   *
   * Scale posture: state per open window x key only (watermark bounds it);
-  * commutative 48-bit checksum sums aggregate incrementally — identical
-  * math to the batch [[graft.operators.TableDiff.chunkChecksums]], so a
+  * the commutative checksum (the two 24-bit half-sums of the 48-bit lane,
+  * [[graft.functions.Canonical.checksumSums]]) aggregates incrementally —
+  * identical math to the batch [[graft.operators.TableDiff.chunkChecksums]], so a
   * completed stream window equals the batch answer over the same rows
   * (verified in the spec and by the batch `events_hourly_checksum` oracle).
   */
@@ -39,9 +40,9 @@ object StreamingDiff {
     val in = watermark.fold(events)(w => events.withWatermark("ts", w))
     in.withColumn("row_fp", eventFp(events))
       .groupBy(window(col("ts"), windowDur).as("w"), col("event_type"))
-      .agg(count(lit(1)).as("cnt"), sum(col("row_fp")).as("checksum"))
+      .agg(count(lit(1)).as("cnt"), Canonical.checksumSums(col("row_fp")): _*)
       .select(col("w.start").as("window_start"), col("event_type"),
-        col("cnt"), col("checksum"))
+        col("cnt"), col("checksum_hi"), col("checksum_lo"))
   }
 
   /** Continuous dual-stream diff: tag each side, union, and aggregate
@@ -58,17 +59,22 @@ object StreamingDiff {
       val in = watermark.fold(df)(w => df.withWatermark("ts", w))
       in.withColumn("row_fp", eventFp(df)).withColumn("side", lit(side))
     }
+    // per side: row count and split checksum, prefixed up_ / down_
+    def lanes(side: Int, prefix: String): Seq[Column] = {
+      val mine = col("side") === side
+      sum(when(mine, 1L).otherwise(0L)).as(s"${prefix}cnt") +:
+        Canonical.checksumSums(when(mine, col("row_fp")).otherwise(0L), prefix)
+    }
+    val aggs = lanes(0, "up_") ++ lanes(1, "down_")
     tagged(up, 0).unionByName(tagged(down, 1))
       .groupBy(window(col("ts"), windowDur).as("w"), col("event_type"))
-      .agg(
-        sum(when(col("side") === 0, 1L).otherwise(0L)).as("up_cnt"),
-        sum(when(col("side") === 0, col("row_fp")).otherwise(0L)).as("up_checksum"),
-        sum(when(col("side") === 1, 1L).otherwise(0L)).as("down_cnt"),
-        sum(when(col("side") === 1, col("row_fp")).otherwise(0L)).as("down_checksum"))
+      .agg(aggs.head, aggs.tail: _*)
       .filter(col("up_cnt") =!= col("down_cnt") ||
-        col("up_checksum") =!= col("down_checksum"))
+        col("up_checksum_hi") =!= col("down_checksum_hi") ||
+        col("up_checksum_lo") =!= col("down_checksum_lo"))
       .select(col("w.start").as("window_start"), col("event_type"),
-        col("up_cnt"), col("up_checksum"), col("down_cnt"), col("down_checksum"))
+        col("up_cnt"), col("up_checksum_hi"), col("up_checksum_lo"),
+        col("down_cnt"), col("down_checksum_hi"), col("down_checksum_lo"))
   }
 
   /** Streaming exactly-once dedup on the event key within the watermark

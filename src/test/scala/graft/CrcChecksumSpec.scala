@@ -70,10 +70,11 @@ class CrcChecksumSpec extends SparkSpec {
     // checksums agree even though counts differ — the cnt column (and the
     // default md5-SUM lane) is what catches duplicate drift.
     assert(cs == cd)
-    val md5Base = TableDiff.chunkChecksums(base, s.copy(crcCompat = false))
-      .collect()(0).getLong(2)
-    val md5Dup = TableDiff.chunkChecksums(dup, s.copy(crcCompat = false))
-      .collect()(0).getLong(2)
+    def md5Lane(df: org.apache.spark.sql.DataFrame) =
+      TableDiff.chunkChecksums(df, s.copy(crcCompat = false))
+        .select("checksum_hi", "checksum_lo").collect()(0)
+    val md5Base = md5Lane(base)
+    val md5Dup = md5Lane(dup)
     assert(md5Base != md5Dup)
   }
 }

@@ -66,6 +66,23 @@ class DiscoverSpec extends SparkSpec {
     }
   }
 
+  test("manifest recounts a table rewritten in place, and only that table") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_manifest_")
+    Tables.all.foreach(t => java.nio.file.Files.copy(
+      java.nio.file.Paths.get(Tables.path(sfDir, t)),
+      dir.resolve(s"$t.parquet")))
+    def counts = Discover.manifest(spark, dir.toString).collect()
+      .map(r => r.getString(1) -> r.getLong(2)).toMap
+    val before = counts
+    val orders = dir.resolve("orders.parquet")
+    val kept = Tables.load(spark, sfDir, "orders").limit(7)
+    java.nio.file.Files.delete(orders)
+    kept.write.parquet(orders.toString)
+    val after = counts
+    assert(before("orders") > 7 && after("orders") == 7)
+    assert(after - "orders" == before - "orders")
+  }
+
   test("extra columns are tolerated and truncated (step1 behavior)") {
     val out = Discover.discover(spark, sfDir,
       "SELECT schema_name, table_name, table_rows FROM graft_manifest")

@@ -224,7 +224,7 @@ class StreamingSpec extends SparkSpec {
         .orderBy("window_start", "event_type").collect().toSeq
       assert(got == want)
       assert(want.size == 2) // (h0 click count drift), (h1 error checksum drift)
-      val counts = got.map(r => (r.getLong(2), r.getLong(4))) // (up_cnt, down_cnt)
+      val counts = got.map(r => (r.getAs[Long]("up_cnt"), r.getAs[Long]("down_cnt")))
       assert(counts.contains((2L, 1L))) // the dropped h0 click
     } finally q.stop()
   }

@@ -1,7 +1,10 @@
 package graft
 
+import graft.functions.Canonical
 import graft.operators.{HashDiff, Perturb, TableDiff}
+import graft.streaming.StreamingDiff
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
 
 class TableDiffSpec extends SparkSpec {
 
@@ -43,6 +46,36 @@ class TableDiffSpec extends SparkSpec {
     assert(s.getLong(0) == orders.count())
     assert(s.getLong(1) == down.count())
     assert(s.getLong(2) == TableDiff.badChunks(orders, down, spec).count())
+  }
+
+  test("checksum lane does not overflow with 10^5 rows in one chunk or bucket") {
+    // 10^5 48-bit fingerprints sum to ~1.4e19 > 2^63: one signed BIGINT
+    // sum overflows (ARITHMETIC_OVERFLOW under ANSI), the split lane not
+    val n = 100000L
+    val t = spark.range(0, n)
+      .select(col("id").as("k"), (col("id") * 7).cast("string").as("v"))
+    val wide = TableDiff.DiffSpec(Seq("k"), "k", 1000000)
+    Seq(wide, wide.copy(hashBuckets = Some(1))).foreach { s =>
+      val r = TableDiff.summary(t, t, s).collect()(0)
+      assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((n, n, 0L)))
+    }
+    val down = t.withColumn("v",
+      when(col("k") === 4242, lit("x")).otherwise(col("v")))
+    assert(TableDiff.summary(t, down, wide).collect()(0).getLong(2) == 1L)
+    // (hi, lo) is the exact 48-bit sum
+    val fp = Canonical.fingerprint48(Seq((col("k"), LongType), (col("v"), StringType)))
+    val exact = t.select(fp.cast("decimal(20,0)").as("fp"))
+      .agg(sum("fp")).collect()(0).getDecimal(0)
+    val c = TableDiff.chunkChecksums(t, wide).collect()(0)
+    assert(BigDecimal(c.getAs[Long]("checksum_hi")) * (1 << 24) +
+      c.getAs[Long]("checksum_lo") == BigDecimal(exact))
+    // the streaming lane: one window holding every row
+    val events = t.select(col("k").as("event_id"), col("k").as("user_id"),
+      lit("click").as("event_type"), (col("k") % 1000 / 10.0).as("value"),
+      lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("ts"))
+    assert(StreamingDiff.windowedChecksums(events, "1 hour")
+      .collect()(0).getAs[Long]("cnt") == n)
+    assert(StreamingDiff.windowedDiff(events, events, "1 hour").isEmpty)
   }
 
   test("chunkRangePredicate merges adjacent chunks into one range") {
