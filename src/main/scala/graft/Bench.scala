@@ -1,78 +1,48 @@
 package graft
+import graft.Harness.{json, ms, reps}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import scala.collection.mutable.{ArrayBuffer, LinkedHashMap}
+
+/** Query benchmark on `SPARK_GRAFT_SF_DIR` (default sf0.1), min of
+  * [[Harness.reps]] interleaved reps per query.
+  *
+  * usage: runMain graft.Bench              every query; one JSON line on
+  *                                         stdout + the BENCH_QUERIES.json
+  *                                         sidecar (driver contract)
+  *        runMain graft.Bench q1 [q2 ...]  only the named queries: their
+  *                                         samples, then one listened rep
+  *                                         each with its Spark jobs; no
+  *                                         sidecar
+  */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Per-query repetitions: the reported time is the MIN of `reps` runs.
-    // A single-shot measurement on a shared machine records scheduler
-    // contention as engine regression (round 3's committed artifact was
-    // 6.6x off a clean re-run of the identical build — VERDICT r03 #1);
-    // min-of-k is the standard noise floor. Default 5 (VERDICT r15 #3):
-    // the reps-5 protocol produced back-to-back-identical totals and a
-    // warmup-only noisy list where reps-3 kept re-flagging spikes —
-    // reps-5 IS the round-close protocol now, not an opt-in.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt.max(1)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the session (codegen, file listing, JIT) outside the timings so
-    // the first query measures itself, not startup.
-    Tables.all.foreach(t => Tables.load(spark, sfDir, t).count())
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val samples = scala.collection.mutable.LinkedHashMap.empty[String, List[Double]]
-    // The rep loop is the OUTER loop: k full passes over all queries, min
-    // per query across passes. Back-to-back reps (r4's shape) let a single
-    // contended minute corrupt ALL samples of one query while leaving its
-    // neighbors clean (BENCH_r04's diff_chunks [20.2, 65.6, 21.5] vs a
-    // 0.77 s clean re-run — VERDICT r04 "What's wrong" #3); interleaving
-    // spreads any contention window thinly across every query instead.
-    (1 to reps).foreach { _ =>
-      SparkEntry.queries.foreach { case (name, fn) =>
-        if (!errors.contains(name)) {
-          val t0 = System.nanoTime()
-          // A crashed query must FAIL the bench (exit 1) and contribute NO
-          // timing: recording time-to-crash would mix real runtimes with
-          // partial ones in total (ADVICE r03).
-          try {
-            fn(spark, sfDir).count()
-            val dt = (System.nanoTime() - t0) / 1e9
-            samples(name) = samples.getOrElse(name, Nil) :+ dt
-          } catch {
-            case e: Throwable =>
-              errors(name) = s"${e.getClass.getSimpleName}: ${
-                Option(e.getMessage).getOrElse("").takeWhile(_ != '\n').take(200)}"
-              samples.remove(name)
-          }
-        }
-      }
-    }
-    // JSON string escape incl. ALL control chars (<0x20): exception
-    // messages can carry tabs/CRs that would break the driver's json.load
-    // (ADVICE r03).
-    def jstr(s: String) = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    val queries = SparkEntry.queries
+    val unknown = args.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val spark = Harness.session()
+    Harness.warm(spark, Seq(sfDir))
+    val exit = if (args.isEmpty) suite(spark, queries, sfDir)
+      else subset(spark, queries, sfDir, args.toSeq.distinct)
+    spark.stop()
+    if (exit != 0) sys.exit(exit)
+  }
+
+  private def suite(spark: SparkSession, queries: Map[String, Harness.Query],
+                    sfDir: String): Int = {
+    val t = Harness.time(spark, queries, queries.keys.toSeq.map(_ -> sfDir), reps)
+    val samples = t.samples.map { case ((k, _), v) => k -> v }
+    val errors = t.errors.map { case ((k, _), v) => k -> v }
     // The driver captures only a bounded tail of stdout; with 106 queries
     // even the millisecond-precision map outgrew it (BENCH_r07 kept 64 of
     // 106 timings; r5 hit the same wall with per-sample arrays). The FULL
     // per-query map therefore goes to a sidecar FILE (committed per round)
     // + stderr, and the stdout line stays bounded forever: totals, errors,
     // and only the top-16 slowest queries (the ones worth reading first).
-    def ms(v: Double) = f"$v%.3f"
     val best = samples.map { case (k, v) => k -> v.min }
     def qmap(m: Iterable[(String, Double)]) =
-      m.map { case (k, v) => jstr(k) + ":" + ms(v) }.mkString("{", ",", "}")
+      m.map { case (k, v) => json(k) + ":" + ms(v) }.mkString("{", ",", "}")
     // The BASELINE.md comparison set must survive in stdout regardless of
     // rank, so the judge can always ratio the shared headliners without
     // the sidecar.
@@ -80,13 +50,13 @@ object Bench {
       "fix_sql", "q1_pricing_summary", "discover_tables")
     val slowest = (best.toSeq.sortBy(-_._2).take(16) ++
       best.toSeq.filter(kv => headliners(kv._1))).distinct.sortBy(-_._2)
-    val errJson = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }
+    val errJson = errors.map { case (k, v) => json(k) + ":" + json(v) }
       .mkString("{", ",", "}")
     val total = if (best.nonEmpty) best.values.sum else 0.0
     // Per-sample detail goes to STDERR so variance stays inspectable
     // without bloating the parsed line.
     val samplesJson = samples
-      .map { case (k, v) => jstr(k) + ":" + v.map(ms).mkString("[", ",", "]") }
+      .map { case (k, v) => json(k) + ":" + v.map(ms).mkString("[", ",", "]") }
       .mkString("{", ",", "}")
     System.err.println(s"""bench samples (reps=$reps, interleaved passes): $samplesJson""")
     // Co-tenant-noise self-report (r8 and r10 both produced phantom
@@ -101,26 +71,62 @@ object Bench {
     // stdout stays bounded on a fully-contended box: worst 12 by ratio
     val noisyJson = noisy.toSeq
       .sortBy { case (_, v) => -(v.max / v.min) }.take(12)
-      .map { case (k, v) => jstr(k) + ":" + v.map(ms).mkString("[", ",", "]") }
+      .map { case (k, v) => json(k) + ":" + v.map(ms).mkString("[", ",", "]") }
       .mkString("{", ",", "}")
     val sidecar = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_QUERIES.json")
     val sidecarJson =
       s"""{"metric":"total","value":${ms(total)},"unit":"sec","queries":${
         qmap(best)},"reps":$reps,"samples":$samplesJson,"noisy":${
         noisy.nonEmpty},"noisy_queries":$noisyJson,"errors":$errJson,"sf":"$sfDir"}"""
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(sidecar), sidecarJson + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"bench: sidecar write failed: ${e.getMessage}")
-    }
+    Harness.write(sidecar, sidecarJson)
     // Key stays "queries" (driver contract); the bounded subset is the
     // headliners + top-16 slowest, full map in queries_file.
     println(s"""{"metric":"total","value":${ms(total)},"unit":"sec","nqueries":${
-      best.size},"queries":${qmap(slowest)},"queries_file":${jstr(sidecar)},"reps":$reps,"noisy":${
+      best.size},"queries":${qmap(slowest)},"queries_file":${json(sidecar)},"reps":$reps,"noisy":${
       noisy.nonEmpty},"noisy_queries":$noisyJson,"errors":$errJson,"sf":"$sfDir"}""")
-    spark.stop()
-    if (errors.nonEmpty) {
+    if (errors.nonEmpty)
       System.err.println(s"bench: ${errors.size} quer${if (errors.size == 1) "y" else "ies"} failed: ${errors.keys.mkString(", ")}")
-      sys.exit(1)
+    t.exit
+  }
+
+  /** Re-measure a few queries in seconds instead of a full suite pass.
+    * Writes no sidecar, so a subset run can never overwrite the suite's.
+    */
+  private def subset(spark: SparkSession, queries: Map[String, Harness.Query],
+                     sfDir: String, names: Seq[String]): Int = {
+    val t = Harness.time(spark, queries, names.map(_ -> sfDir), reps)
+    t.samples.foreach { case ((name, _), ss) =>
+      println(f"$name%-28s min=${ss.min}%.3f s  samples=${ss.map(ms).mkString("[", ",", "]")}")
     }
+    t.errors.foreach { case ((name, _), e) => println(s"$name FAILED: $e") }
+    names.filterNot(n => t.errors.contains((n, sfDir)))
+      .foreach(name => jobs(spark, name, queries(name)(spark, sfDir).count()))
+    t.exit
+  }
+
+  /** One more rep of `name`, listened: how many Spark jobs it fires and
+    * how long each runs, so an overhead-bound query shows where its fixed
+    * cost sits (the rest of the wall time is planning/driver work).
+    */
+  private def jobs(spark: SparkSession, name: String, run: => Unit): Unit = {
+    val starts = LinkedHashMap.empty[Int, SparkListenerJobStart]
+    val jobs = ArrayBuffer.empty[(String, Double)]
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.synchronized(starts(js.jobId) = js)
+      override def onJobEnd(je: SparkListenerJobEnd): Unit = jobs.synchronized {
+        starts.remove(je.jobId).foreach { js => jobs += ((s"stages=${js.stageInfos.size} ${
+          js.stageInfos.map(_.name).mkString(" | ").take(120)}", (je.time - js.time) / 1e3)) }
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    val t0 = System.nanoTime()
+    run
+    val dt = (System.nanoTime() - t0) / 1e9
+    Thread.sleep(400) // let the listener bus deliver the last job ends
+    spark.sparkContext.removeSparkListener(l)
+    val inJobs = jobs.map(_._2).sum
+    println(f"[jobs] $name -> ${jobs.size} jobs, $dt%.3f s total, $inJobs%.3f s in jobs (rest = planning/driver)")
+    jobs.foreach { case (desc, d) => println(f"   $d%7.3f  $desc") }
   }
 }

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.Harness.{json, ms}
 
 /** Scaling-curve harness (VERDICT r11 #4): run the headline query
   * families at sf0.001 / sf0.01 / sf0.1 (plus sf1 when generated — see
@@ -17,16 +17,15 @@ import org.apache.spark.sql.SparkSession
   * scan-bound baselines (q1_pricing_summary, hashdiff_lineitem) as the
   * known-linear control group.
   *
-  * Bench protocol shared with [[Bench]]: min-of-reps with the rep loop
-  * OUTER (interleaved passes — a contended minute corrupts one sample
-  * of many queries, not all samples of one), warm-up counts outside
-  * timings, bounded stdout + full sidecar file.
-  *
-  * Failure accounting (ADVICE r12 #4): errors are keyed by (family,
-  * sf), never by family alone — a transient failure at one scale
-  * neither suppresses later reps at other scales nor erases samples
-  * already collected. A family with any missing scale point still
+  * Timing is [[Harness.time]], as for [[Bench]]: warm-up outside the
+  * timings, min of interleaved reps. Its cells are (family, sf dir), so
+  * a failure at one scale neither suppresses later reps at other scales
+  * nor erases their samples. A family with any missing scale point still
   * emits, with the decades it can support and an `"errors"` marker.
+  *
+  * The r12–r20 sidecars were measured at `SPARK_GRAFT_CPUS=32` (then the
+  * default here) and `SPARK_GRAFT_BENCH_REPS=3`; pass both to extend
+  * that series like for like.
   */
 object BenchScaling {
 
@@ -77,13 +76,11 @@ object BenchScaling {
     // generation instead of CURRENT must add no scale term)
     "index_lifecycle_opq", "ann_opq_ingest", "index_probe_pinned")
 
+  /** usage: runMain graft.BenchScaling [family ...]   (default: all) */
   def main(args: Array[String]): Unit = {
-    // SPARK_GRAFT_SCALING_FAMILIES=a,b,c restricts the run — the
-    // quiet-window re-measure tool (VERDICT r17 #6: one drifted family
-    // should not cost a full 18-family sweep to adjudicate)
-    val families = sys.env.get("SPARK_GRAFT_SCALING_FAMILIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .fold(Families)(only => Families.filter(only))
+    val unknown = args.filterNot(Families.contains)
+    require(unknown.isEmpty, s"unknown families: ${unknown.mkString(", ")}")
+    val families = if (args.isEmpty) Families else Families.filter(args.toSet)
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_BASE", "/root/testdata")
     // the sf1 decade lives outside the driver's read-only fixture tree
     // (GenFixtures writes it under the repo); include it when present
@@ -92,53 +89,22 @@ object BenchScaling {
     val sfs = Seq(0.001, 0.01, 0.1).map(sf => (s"$base/sf$sf", sf)) ++
       (if (new java.io.File(s"$sf1Dir/lineitem.parquet").exists())
         Seq((sf1Dir, 1.0)) else Nil)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    sfs.foreach { case (dir, _) =>
-      Tables.all.foreach(t => Tables.load(spark, dir, t).count())
-    }
-    val samples =
-      scala.collection.mutable.LinkedHashMap.empty[(String, Double), List[Double]]
-    val errors = scala.collection.mutable.LinkedHashMap.empty[(String, Double), String]
-    (1 to reps).foreach { _ =>
-      for ((dir, sf) <- sfs; name <- families
-           if !errors.contains((name, sf))) {
-        val t0 = System.nanoTime()
-        try {
-          SparkEntry.queries(name)(spark, dir).count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          samples((name, sf)) = samples.getOrElse((name, sf), Nil) :+ dt
-        } catch {
-          case e: Throwable =>
-            errors((name, sf)) = s"${e.getClass.getSimpleName}: ${
-              Option(e.getMessage).getOrElse("").takeWhile(_ != '\n').take(200)}"
-        }
-      }
-    }
-    def ms(v: Double) = f"$v%.3f"
-    def jstr(s: String) = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
+    val spark = Harness.session()
+    Harness.warm(spark, sfs.map(_._1))
+    val t = Harness.time(spark, SparkEntry.queries,
+      for ((dir, _) <- sfs; name <- families) yield (name, dir), Harness.reps)
     val sfVals = sfs.map(_._2)
     val fams = families.map { name =>
-      val best = sfVals.flatMap(sf =>
-        samples.get((name, sf)).map(ss => sf -> ss.min)).toMap
+      val best = sfs.flatMap { case (dir, sf) =>
+        t.samples.get((name, dir)).map(ss => sf -> ss.min) }.toMap
       def expo(lo: Double, hi: Double): Option[Double] =
         for (t0 <- best.get(lo); t1 <- best.get(hi))
           yield math.log(t1 / t0) / math.log(hi / lo)
       val timesJson = sfVals.collect {
-        case sf if best.contains(sf) => jstr(s"sf$sf") + ":" + ms(best(sf))
+        case sf if best.contains(sf) => json(s"sf$sf") + ":" + ms(best(sf))
       }
       val decades = sfVals.zip(sfVals.drop(1)).flatMap { case (lo, hi) =>
-        expo(lo, hi).map(e => jstr(s"exp_sf${lo}_sf$hi") + ":" + ms(e))
+        expo(lo, hi).map(e => json(s"exp_sf${lo}_sf$hi") + ":" + ms(e))
       }
       // exp_top_decade falls back to the highest decade with both
       // endpoints present; "top_decade" NAMES that decade (ADVICE r13)
@@ -149,15 +115,16 @@ object BenchScaling {
         .headOption
         .map { case (lo, hi, e) => Seq(
           "\"exp_top_decade\":" + ms(e),
-          "\"top_decade\":" + jstr(s"sf${lo}_sf$hi")) }
+          "\"top_decade\":" + json(s"sf${lo}_sf$hi")) }
         .getOrElse(Nil)
-      jstr(name) + ":{" + (timesJson ++ decades ++ top).mkString(",") + "}"
+      json(name) + ":{" + (timesJson ++ decades ++ top).mkString(",") + "}"
     }.mkString("{", ",", "}")
-    val errJson = errors.map { case ((nm, sf), v) =>
-      jstr(s"$nm@sf$sf") + ":" + jstr(v)
+    val sfOf = sfs.toMap
+    val errJson = t.errors.map { case ((nm, dir), v) =>
+      json(s"$nm@sf${sfOf(dir)}") + ":" + json(v)
     }.mkString("{", ",", "}")
     val out =
-      s"""{"metric":"scaling_exponent","families":$fams,"reps":$reps,""" +
+      s"""{"metric":"scaling_exponent","families":$fams,"reps":${Harness.reps},""" +
         s""""sfs":[${sfVals.mkString(",")}],"errors":$errJson,""" +
         s""""note":"exp = ln(t_hi/t_lo)/ln(sf_hi/sf_lo); """ +
         s"""1.0 = linear in data, ~0 = overhead-bound"}"""
@@ -177,13 +144,9 @@ object BenchScaling {
           "SPARK_GRAFT_SCALING_OUT to choose a path)")
         sidecar + ".new"
       } else sidecar
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(target), out + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"scaling: sidecar write failed: ${e.getMessage}")
-    }
+    Harness.write(target, out)
     println(out)
     spark.stop()
-    if (errors.nonEmpty) sys.exit(1)
+    if (t.exit != 0) sys.exit(t.exit)
   }
 }

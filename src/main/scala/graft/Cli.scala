@@ -756,21 +756,16 @@ object Cli {
     * dependencies.
     */
   private def indexDoctorJson(idxDir: String, f: IndexFacts): Int = {
-    def js(s: String) = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import Harness.json
     f.audit match {
       case scala.util.Failure(e) =>
-        println(s"""{"dir":${js(idxDir)},"error":${js(firstLine(e))},""" +
+        println(s"""{"dir":${json(idxDir)},"error":${json(firstLine(e))},""" +
           s""""exit":${f.exit}}""")
       case scala.util.Success(rows) =>
         val lists = rows.map { r =>
           s"""{"ccid":${r.getInt(0)},"n_rows":${r.getLong(1)},""" +
             s""""n_files":${r.getLong(2)},"bytes":${r.getLong(3)},""" +
-            s""""flag":${js(r.getString(4))}}"""
+            s""""flag":${json(r.getString(4))}}"""
         }.mkString("[", ",", "]")
         val tombJson = f.tombs.fold("null") {
           case scala.util.Success(t) => t.fold("null") { t =>
@@ -781,25 +776,25 @@ object Cli {
               s""""over_broadcast_budget":${t.overBudget}}"""
           }
           case scala.util.Failure(e) =>
-            s"""{"inconsistent":true,"error":${js(firstLine(e))}}"""
+            s"""{"inconsistent":true,"error":${json(firstLine(e))}}"""
         }
         val booksJson = f.books.fold("null") {
           case scala.util.Success(b) =>
-            s"""{"status":"present","scheme":${js(b.meta.scheme.name)},""" +
+            s"""{"status":"present","scheme":${json(b.meta.scheme.name)},""" +
               s""""coarse":${b.coarse},"subs":${b.subs},""" +
               s""""ks":${b.meta.ks},"dim":${b.meta.dim}}"""
           case scala.util.Failure(_: java.util.NoSuchElementException) =>
             """{"status":"absent"}"""
           case scala.util.Failure(e) =>
-            s"""{"status":"unreadable","error":${js(firstLine(e))}}"""
+            s"""{"status":"unreadable","error":${json(firstLine(e))}}"""
         }
         val leaseJson = f.lease.fold("null") { l =>
-          s"""{"holder":${js(l.holder)},"op":${js(l.op)},""" +
+          s"""{"holder":${json(l.holder)},"op":${json(l.op)},""" +
             s""""age_seconds":${l.ageSeconds},"stale":${l.stale}}"""
         }
         val gen = f.store.map(_._1.toString).getOrElse("null")
-        println(s"""{"dir":${js(idxDir)},"store":${f.store.nonEmpty},""" +
-          s""""generation":$gen,"resolved_dir":${js(f.resolved)},""" +
+        println(s"""{"dir":${json(idxDir)},"store":${f.store.nonEmpty},""" +
+          s""""generation":$gen,"resolved_dir":${json(f.resolved)},""" +
           s""""lists":$lists,"tombstones":$tombJson,"books":$booksJson,""" +
           s""""lease":$leaseJson,""" +
           s""""past_clamp":${f.pastClamp.mkString("[", ",", "]")},""" +

@@ -60,13 +60,18 @@ object TableDiff {
       hashBuckets: Option[Int] = None,
       crcCompat: Boolean = false)
 
-  /** Chunk-id expression for a side under the spec's chunking mode. */
-  private def chunkCol(df: DataFrame, spec: DiffSpec): Column =
+  /** Chunk-id expression under the spec's chunking mode: a range of the
+    * chunk column, or a hash bucket of the row's 48-bit fingerprint
+    * `fp48` (evaluated only in hash mode, so a caller that already
+    * computed `row_fp` passes that column and pays one digest per row).
+    */
+  private def chunkCol(spec: DiffSpec, fp48: => Column): Column =
     spec.hashBuckets match {
-      case Some(b) =>
-        Canonical.chunkIdFromFp(Canonical.fingerprint48(fpCols(df)), b)
+      case Some(b) => Canonical.chunkIdFromFp(fp48, b)
       case None => Canonical.chunkId(col(spec.chunkBy), spec.chunkWidth)
     }
+
+  private def fp48(df: DataFrame): Column = Canonical.fingerprint48(fpCols(df))
 
   private def fpCols(df: DataFrame): Seq[(Column, org.apache.spark.sql.types.DataType)] =
     df.schema.fields.toSeq.map(f => (col(f.name), f.dataType))
@@ -76,18 +81,12 @@ object TableDiff {
     * [[graft.functions.Canonical]] collision discipline).
     */
   def withFingerprint(df: DataFrame, spec: DiffSpec): DataFrame = {
-    val base = df.filter(expr(spec.range))
-      .withColumn("row_fp", Canonical.fingerprint48(fpCols(df)))
-    spec.hashBuckets match {
-      // hash mode: ONE md5 per row serves both the checksum lane and the
-      // chunk id (VERDICT r03 #2 — the chunk id derives from row_fp, not
-      // from a second digest of the PK serial)
-      case Some(b) =>
-        base.withColumn("chunk_id", Canonical.chunkIdFromFp(col("row_fp"), b))
-      case None =>
-        base.withColumn("chunk_id",
-          Canonical.chunkId(col(spec.chunkBy), spec.chunkWidth))
-    }
+    // hash mode: ONE digest per row serves both the checksum lane and the
+    // chunk id (VERDICT r03 #2 — the chunk id derives from row_fp, not
+    // from a second digest of the PK serial)
+    df.filter(expr(spec.range))
+      .withColumn("row_fp", fp48(df))
+      .withColumn("chunk_id", chunkCol(spec, col("row_fp")))
   }
 
   /** Per-chunk (row count, commutative checksum). One shuffle; partial agg
@@ -108,15 +107,10 @@ object TableDiff {
     if (spec.crcCompat) {
       // crc lane only — the md5 lane is not computed here unless hash
       // bucketing needs it for the chunk id.
-      val base = df.filter(expr(spec.range))
+      df.filter(expr(spec.range))
         .withColumn("row_crc", Canonical.crcRow(fpCols(df)))
-      val chunked = spec.hashBuckets match {
-        case Some(b) => base.withColumn("chunk_id",
-          Canonical.chunkIdFromFp(Canonical.fingerprint48(fpCols(df)), b))
-        case None => base.withColumn("chunk_id",
-          Canonical.chunkId(col(spec.chunkBy), spec.chunkWidth))
-      }
-      chunked.groupBy("chunk_id")
+        .withColumn("chunk_id", chunkCol(spec, fp48(df)))
+        .groupBy("chunk_id")
         .agg(count(lit(1)).as("cnt"), expr("bit_xor(row_crc)").as("checksum"))
     } else
       withFingerprint(df, spec)
@@ -168,14 +162,18 @@ object TableDiff {
       }
 
   /** Pushed-down PK range predicate covering the given chunk ids: adjacent
-    * chunks merge into one `BETWEEN`, so the parquet scan skips clean row
+    * chunks merge into one range, so the parquet scan skips clean row
     * groups via min/max stats — the direct analogue of the reference's
     * index-hinted chunk range scans (`my_database_users.toml:21,30`).
+    * Bounds are half-open, `lo <= k < hi + 1`, because a chunk holds
+    * every k with `floor(k / width)` = its id: a fractional or decimal
+    * key such as 9.5 lies in chunk 0 but outside `BETWEEN 0 AND 9`.
     */
   def chunkRangePredicate(ids: Seq[Long], spec: DiffSpec): Column =
     if (ids.isEmpty) lit(false)
     else mergedRanges(ids, spec)
-      .map { case (lo, hi) => col(spec.chunkBy).between(lo, hi) }
+      .map { case (lo, hi) =>
+        col(spec.chunkBy) >= lo && col(spec.chunkBy) < hi + 1 }
       .reduce(_ || _)
 
   /** Semi-join one side down to the given (bad) chunk ids — the phase-2
@@ -188,7 +186,7 @@ object TableDiff {
     import spark.implicits._
     val idDf = ids.toDF("__bad_chunk_id")
     df.join(broadcast(idDf),
-      chunkCol(df, spec) === col("__bad_chunk_id"), "left_semi")
+      chunkCol(spec, fp48(df)) === col("__bad_chunk_id"), "left_semi")
   }
 
   /** Phase-2 row-level full-outer diff restricted to bad chunks.
@@ -232,7 +230,7 @@ object TableDiff {
       .collect().map(_.getLong(0)).toSeq
 
     // The pushdown tier is gated on the count of MERGED ranges, not raw
-    // chunk ids: a big OR-of-BETWEEN over scattered singleton chunks
+    // chunk ids: a big OR of ranges over scattered singleton chunks
     // costs more per scanned row than a broadcast hash semi-join and
     // skips no row groups (plan-audited at sf0.1: ~190 scattered ranges
     // benched slower than the semi tier). Few/contiguous ranges are the

@@ -85,6 +85,23 @@ class TableDiffSpec extends SparkSpec {
     assert(hits == 1000 + 500)
   }
 
+  test("range tier keeps fractional and decimal keys at a chunk's top edge") {
+    // chunk_id = floor(k / 10) puts k = 9.5 in chunk 0; a closed
+    // BETWEEN 0 AND 9 prune would drop it from the row pass
+    val t = spark.range(0, 40).select((col("id") + 0.5).as("k"),
+      col("id").cast("string").as("v"))
+    Seq("double", "decimal(10,1)").foreach { tpe =>
+      val up = t.withColumn("k", col("k").cast(tpe))
+      val down = up.withColumn("v",
+        when(col("k") === 9.5, lit("drift")).otherwise(col("v")))
+      val s = TableDiff.DiffSpec(Seq("k"), "k", 10)
+      val two = TableDiff.rowDiff(up, down, s).collect().toSeq
+      val flat = TableDiff.rowDiff(up, down, s, twoPhase = false).collect().toSeq
+      assert(flat.map(_.get(1)) == Seq("value_mismatch"), tpe)
+      assert(two == flat, tpe)
+    }
+  }
+
   test("two-phase and flat row diff agree") {
     val down = Perturb.ordersDownstream(orders)
     val two = TableDiff.rowDiff(orders, down, spec, twoPhase = true)
