@@ -117,7 +117,7 @@ object Cli {
         println("cancelled")
         0
       } else if (!flags.contains("--detach"))
-        runAllOnce(c, dir, spark, println, None)
+        runAllOnce(c, dir, spark, runStamp(), println, None)
       else {
         // Detached execution parity (`run_all.sh:87-110`): the compare
         // runs off the CLI control flow, progress goes to a log file,
@@ -126,8 +126,7 @@ object Cli {
         // returns 0 immediately. Process-level survival past the
         // launching shell stays the shell's job (`nohup … &`), exactly
         // as the reference itself delegates to nohup.
-        val runId = java.time.LocalDateTime.now.format(
-          java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd_HHmmss"))
+        val runId = runStamp()
         java.nio.file.Files.createDirectories(
           java.nio.file.Paths.get(c.outputDir))
         val logPath = java.nio.file.Paths.get(
@@ -143,7 +142,7 @@ object Cli {
         }
         val worker = new Thread(() => {
           val code =
-            try runAllOnce(c, dir, spark, logLine, Some(reportPath))
+            try runAllOnce(c, dir, spark, runId, logLine, Some(reportPath))
             catch { case e: Throwable => logLine(s"failed: $e"); 1 }
           // the status write is a caller-visible contract (pollers wait
           // on it) — if it fails, say so in the log instead of letting
@@ -188,27 +187,14 @@ object Cli {
             s"no task configs in ${c.outputDir}; run `generate` first")
           1
         } else {
-          // run id defaults to the reference's wall-clock stamp
-          // (`step3_run_syncdiff.sh` TIMESTAMP); tests pass it explicitly
-          val runId = rest.headOption.getOrElse(
-            java.time.LocalDateTime.now.format(
-              java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd_HHmmss")))
           val tasks = taskFiles.toSeq.map { f =>
             val (schema, table, chunk, so) = EngineConf.parseTaskToml(
               java.nio.file.Files.readString(f.toPath))
-            val spec = Tables.primaryKeys.get(table).collect {
-              case Seq(pk) if Tables.pkKind(table) == "NONCLUSTERED" =>
-                TableDiff.DiffSpec(Seq(pk), pk, chunk)
-            }
-            Orchestrate.Task(schema, table, spec, so)
+            Orchestrate.task(schema, table, chunk, so)
           }
-          val reports = Orchestrate.compareTaskReports(spark, dir, tasks,
-            (_, up) => up, tableParallelism = c.threadCount,
-            onProgress = (d, n, pct) => println(s"progress: $d/$n ($pct%)"))
-          ReportIngest.writeSummaries(reports, c.outputDir, runId)
-          val df = Report.withTotal(Report.toDF(spark, reports))
-          println(Report.render(df))
-          Report.exitCode(df)
+          // tests pass the run id explicitly
+          compareAndReport(c, dir, spark, rest.headOption.getOrElse(runStamp()),
+            tasks, println, None)
         }
       }
 
@@ -430,7 +416,7 @@ object Cli {
       val dirF = new java.io.File(dir)
       val reachable = dirF.exists()
       val readable = reachable && dirF.canRead &&
-        new java.io.File(dirF, "orders.parquet").exists()
+        scala.util.Try(Discover.tables(spark, dir).nonEmpty).getOrElse(false)
       val catalog = confOk.flatMap(c =>
         scala.util.Try(Discover.discover(spark, dir, c.checkSql)))
       val matched = catalog.flatMap(t => scala.util.Try(t.limit(1).count()))
@@ -477,12 +463,11 @@ object Cli {
   }
 
   /** One locked run-all pass — shared by the foreground and `--detach`
-    * paths; `log` receives progress + the rendered report, `reportFile`
-    * additionally persists the report (the reference's
-    * final_report_<ts>.txt tee, `step3_run_syncdiff.sh:149-152`).
+    * paths: discover, then [[compareAndReport]].
     */
   private def runAllOnce(c: EngineConf, dir: String,
-                         spark: SparkSession, log: String => Unit,
+                         spark: SparkSession, runId: String,
+                         log: String => Unit,
                          reportFile: Option[java.nio.file.Path]): Int = {
     // Singleton run lock — the reference's PID-file guard
     // (`run_syncdiff_config.sh:81-93`): a second concurrent run-all
@@ -503,25 +488,45 @@ object Cli {
         s"another run-all holds ${c.outputDir}/.graft.lock; exiting")
       lockChannel.close()
       3
-    } else try {
-      val specs = Tables.primaryKeys.collect {
-        case (t, Seq(pk)) if Tables.pkKind(t) == "NONCLUSTERED" =>
-          t -> TableDiff.DiffSpec(Seq(pk), pk, c.chunkSize)
-      }
-      val report = Orchestrate.runAll(spark, dir, c.checkSql,
-        (_, up) => up, specs, tableParallelism = c.threadCount,
-        structOnly = c.structOnly,
-        onProgress = (d, n, pct) => log(s"progress: $d/$n ($pct%)"))
-      val rendered = Report.render(report)
-      log(rendered)
-      reportFile.foreach(p =>
-        java.nio.file.Files.writeString(p, rendered + "\n"))
-      Report.exitCode(report)
-    } finally {
+    } else try compareAndReport(c, dir, spark, runId,
+      Orchestrate.discoverTasks(spark, dir, c.checkSql, c.chunkSize,
+        c.structOnly), log, reportFile)
+    finally {
       lock.release()
       lockChannel.close()
     }
   }
+
+  /** Steps 3-4 for a task list, shared by `compare` and `run-all`:
+    * compare every task, write its `<table>_<runId>/summary.txt` under
+    * the output dir (what `report` re-harvests), log the merged report
+    * and return its exit code. `reportFile` additionally persists the
+    * report (the reference's final_report_<ts>.txt tee,
+    * `step3_run_syncdiff.sh:149-152`). The downstream is the identity:
+    * each table is compared with itself until the slave source is read.
+    */
+  private def compareAndReport(c: EngineConf, dir: String,
+                               spark: SparkSession, runId: String,
+                               tasks: Seq[Orchestrate.Task],
+                               log: String => Unit,
+                               reportFile: Option[java.nio.file.Path]): Int = {
+    val reports = Orchestrate.compareTaskReports(spark, dir, tasks,
+      (_, up) => up, c.threadCount,
+      (d, n, pct) => log(s"progress: $d/$n ($pct%)"))
+    ReportIngest.writeSummaries(reports, c.outputDir, runId)
+    val report = Report.withTotal(Report.toDF(spark, reports))
+    val rendered = Report.render(report)
+    log(rendered)
+    reportFile.foreach(p =>
+      java.nio.file.Files.writeString(p, rendered + "\n"))
+    Report.exitCode(report)
+  }
+
+  /** Run id: the reference's wall-clock stamp (`step3_run_syncdiff.sh`
+    * TIMESTAMP), which `ReportIngest.ingestSummaries` parses back.
+    */
+  private def runStamp(): String = java.time.LocalDateTime.now.format(
+    java.time.format.DateTimeFormatter.ofPattern("yyyyMMdd_HHmmss"))
 
   /** Trailing `--key value` option pairs for the store-mutation
     * subcommands — None when the tail doesn't parse as pairs from

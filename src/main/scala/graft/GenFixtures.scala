@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** sf1 fixture generator (VERDICT r12 #2): the driver ships
@@ -19,7 +19,8 @@ import org.apache.spark.sql.functions._
   * for BenchScaling's top decade; correctness (DuckDB oracle) stays on
   * the driver's read-only fixtures.
   *
-  * Usage: runMain graft.GenFixtures <outDir> [sf]   (default sf=1.0)
+  * Usage: runMain graft.GenFixtures <outDir> [sf]   (default sf=1.0;
+  * the session is [[Harness.session]]'s, `SPARK_GRAFT_CPUS` default 4)
   */
 object GenFixtures {
 
@@ -53,15 +54,7 @@ object GenFixtures {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/root/repo/testdata/sf1")
     val sf = if (args.length > 1) args(1).toDouble else 1.0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-genfixtures")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     import spark.implicits._
 
     def n(base: Long): Long = math.max(1L, (base * sf).toLong)

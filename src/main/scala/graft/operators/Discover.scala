@@ -18,17 +18,30 @@ import org.apache.spark.sql.types.StringType
   */
 object Discover {
 
-  /** Catalog manifest: (schema_name, table_name, table_rows, pk_kind).
-    * Row counts come from parquet footer metadata (a metadata-only Spark
-    * job per table — no data scan), matching the reference's reliance on
-    * stats (`information_schema.tables.TABLE_ROWS`).
+  /** Catalog manifest: (schema_name, table_name, table_rows, pk_kind),
+    * one row per [[tables]] entry of `dir`. Row counts come from parquet
+    * footer metadata (a metadata-only Spark job per table — no data
+    * scan), matching the reference's reliance on stats
+    * (`information_schema.tables.TABLE_ROWS`). A table with no declared
+    * kind reads NONCLUSTERED, which is what TiDB reports for a table
+    * without a clustered primary key.
     */
   def manifest(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.all.map { t =>
+    tables(spark, dir).map { t =>
       ("main", t, rowCount(spark, Tables.path(dir, t), Tables.load(spark, dir, t)),
-        Tables.pkKind(t))
+        Tables.pkKind.getOrElse(t, "NONCLUSTERED"))
     }.toDF("schema_name", "table_name", "table_rows", "pk_kind")
+  }
+
+  /** Names of the tables in a source directory: its `<name>.parquet`
+    * entries (file or directory), sorted.
+    */
+  def tables(spark: SparkSession, dir: String): Seq[String] = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+      .map(_.getPath.getName).filter(_.endsWith(".parquet"))
+      .map(_.stripSuffix(".parquet")).sorted.toSeq
   }
 
   /** Row counts by table path, with the file status (path, length, mtime

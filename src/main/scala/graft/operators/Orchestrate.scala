@@ -16,23 +16,44 @@ object Orchestrate {
 
   /** One compare task — a table plus its diff knobs. The reference's
     * per-table task TOML (`step2_generate_configs.sh:112-124`) carries
-    * exactly these fields; `spec = None` falls back to the keyless
-    * multiset diff ([[HashDiff]]); `structOnly` mirrors the TOML's
-    * `check-struct-only` (`my_database_users.toml:11`): compare schemas
-    * only and SKIP the data stage entirely — no data summary job runs;
-    * data_result reads "skipped" and counts are 0 (never computed).
+    * exactly these fields; [[task]] picks `spec`, and `spec = None` falls
+    * back to the keyless multiset diff ([[HashDiff]]); `structOnly`
+    * mirrors the TOML's `check-struct-only`
+    * (`my_database_users.toml:11`): compare schemas only and SKIP the
+    * data stage entirely — no data summary job runs; data_result reads
+    * "skipped" and counts are 0 (never computed).
     */
   case class Task(schema: String, table: String,
                   spec: Option[TableDiff.DiffSpec],
                   structOnly: Boolean)
 
-  /** Compare every discovered table against its downstream derivation.
+  /** The one routing rule: a table whose declared primary key is a
+    * single column is diffed keyed, chunked on that column
+    * `chunkWidth` key values at a time ([[TableDiff]]); a composite key
+    * or no declared key falls back to the keyless multiset diff
+    * ([[HashDiff]]). Key uniqueness is what the keyed diff needs, so the
+    * TiDB clustering class (`pk_kind`) plays no part here.
+    */
+  def task(schema: String, table: String, chunkWidth: Long,
+           structOnly: Boolean): Task =
+    Task(schema, table, Tables.primaryKeys.get(table).collect {
+      case Seq(pk) => TableDiff.DiffSpec(Seq(pk), pk, chunkWidth)
+    }, structOnly)
+
+  /** Discovery's table list (`check_sql` over the manifest) as compare
+    * tasks — steps 1-2 of the reference's `run_all.sh`.
+    */
+  def discoverTasks(spark: SparkSession, dir: String, checkSql: String,
+                    chunkWidth: Long, structOnly: Boolean): Seq[Task] =
+    Discover.discover(spark, dir, checkSql).collect().toSeq
+      .map(r => task(r.getString(0), r.getString(1), chunkWidth, structOnly))
+
+  /** Compare every discovered table against its downstream derivation
+    * and return the merged report with its TOTAL row.
     *
     * @param downstream   derives the replica side for a table (in prod: a
     *                     second source reader; in verify: a perturbation)
-    * @param keyedSpecs   diff spec per table with a usable unique PK;
-    *                     tables absent here fall back to the keyless
-    *                     multiset diff ([[HashDiff]])
+    * @param chunkWidth   chunk width of every keyed table ([[task]])
     * @param structOnly   see [[Task.structOnly]]
     */
   def runAll(
@@ -40,17 +61,13 @@ object Orchestrate {
       dir: String,
       checkSql: String,
       downstream: (String, DataFrame) => DataFrame,
-      keyedSpecs: Map[String, TableDiff.DiffSpec],
+      chunkWidth: Long,
       tableParallelism: Int = 1,
       structOnly: Boolean = false,
-      onProgress: (Int, Int, Int) => Unit = (_, _, _) => ()): DataFrame = {
-    val tasks = Discover.discover(spark, dir, checkSql)
-      .collect().map(r => Task(r.getString(0), r.getString(1),
-        keyedSpecs.get(r.getString(1)), structOnly)).toSeq
-    Report.withTotal(Report.toDF(spark,
-      compareTaskReports(spark, dir, tasks, downstream, tableParallelism,
-        onProgress)))
-  }
+      onProgress: (Int, Int, Int) => Unit = (_, _, _) => ()): DataFrame =
+    Report.withTotal(Report.toDF(spark, compareTaskReports(spark, dir,
+      discoverTasks(spark, dir, checkSql, chunkWidth, structOnly),
+      downstream, tableParallelism, onProgress)))
 
   /** Step-3 STANDALONE compare: run a FIXED task list (recovered from
     * previously generated task TOMLs — the reference's entry point C,

@@ -33,33 +33,18 @@ object CoreQueries {
   private def rowDiffDf(s: SparkSession, dir: String): DataFrame =
     TableDiff.rowDiff(ord(s, dir), Perturb.ordersDownstream(ord(s, dir)), ordSpec)
 
-  /** One-pass per table: counts + diff verdict come from a single
-    * chunk/fingerprint-level aggregation ([[TableDiff.summary]] /
-    * [[HashDiff.summary]]) instead of re-running the full diff pipeline
-    * per verdict/count (90s → seconds at sf0.1, ADVICE r01) — the same
-    * calls a production compare makes, over the Perturb downstream.
+  /** The compare pipeline over two explicit tasks — orders keyed,
+    * lineitem keyless — against the Perturb downstreams: one
+    * chunk/fingerprint-level aggregation per table
+    * ([[TableDiff.summary]] / [[HashDiff.summary]]), the two tables run
+    * concurrently, as a production compare runs them.
     */
-  private def compareReport(s: SparkSession, dir: String): DataFrame = {
-    val orders = ord(s, dir)
-    val lineitem = li(s, dir)
-    def verdict(bad: Long) = if (bad > 0) "diff" else "ok"
-    // The two per-table summaries are independent single-row actions —
-    // run them concurrently (Spark actions are thread-safe on one
-    // session) instead of serially (VERDICT r03 #9).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val of = Future(TableDiff.summary(orders,
-      Perturb.ordersDownstream(orders), ordSpec).collect()(0))
-    val lf = Future(HashDiff.summary(lineitem,
-      Perturb.lineitemDownstream(lineitem)).collect()(0))
-    val (o, l) = Await.result(of.zip(lf),
-      scala.concurrent.duration.Duration.Inf)
-    Report.withTotal(Report.toDF(s, Seq(
-      Report.TableReport("lineitem", "ok", verdict(l.getLong(2)),
-        l.getLong(0), l.getLong(1)),
-      Report.TableReport("orders", "ok", verdict(o.getLong(2)),
-        o.getLong(0), o.getLong(1)))))
-  }
+  private def compareReport(s: SparkSession, dir: String): DataFrame =
+    Report.withTotal(Report.toDF(s, Orchestrate.compareTaskReports(s, dir,
+      Seq(Orchestrate.Task("main", "orders", Some(ordSpec), structOnly = false),
+        Orchestrate.Task("main", "lineitem", None, structOnly = false)),
+      (t, up) => if (t == "orders") Perturb.ordersDownstream(up)
+        else Perturb.lineitemDownstream(up), 2)))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "discover_tables" -> ((s, dir) =>
@@ -74,16 +59,16 @@ object CoreQueries {
 
     // The full §3.1 orchestration lifecycle as ONE oracle-checked relation
     // (VERDICT r04 next #8): discover (check_sql over the manifest) ->
-    // per-table structure check -> data stage (keyed diff where a spec
-    // exists, keyless multiset elsewhere) -> merged report with the TOTAL
-    // tallies. Downstream = perturbed orders (the keyed path goes "diff"),
-    // identity elsewhere — the deterministic verdict mix the exit-code
-    // spec asserts on.
+    // per-table structure check -> data stage (routed by
+    // Orchestrate.task: keyed on a single-column key, keyless multiset
+    // elsewhere) -> merged report with the TOTAL tallies. Downstream =
+    // perturbed orders (the keyed path goes "diff"), identity elsewhere —
+    // the deterministic verdict mix the exit-code spec asserts on.
     "run_all_report" -> ((s, dir) =>
       Orchestrate.runAll(s, dir, Discover.defaultCheckSql(5000),
         downstream = (t, up) =>
           if (t == "orders") Perturb.ordersDownstream(up) else up,
-        keyedSpecs = Map("orders" -> ordSpec),
+        chunkWidth = ordSpec.chunkWidth,
         // reference-style table-level concurrency (config.toml:20) — C2
         // exercised under the oracle, and Future.sequence keeps report
         // order deterministic
@@ -791,9 +776,17 @@ object CoreQueries {
 
   private[queries] lazy val manifestCteSql: String = manifestCte
 
+  /** The fixture tables declared NONCLUSTERED (the compare targets,
+    * FIXTURES.md), written out so the oracle's manifest does not read
+    * the engine's own declaration.
+    */
+  private val nonclustered = Set("orders", "lineitem", "events")
+
   private lazy val manifestCte: String = {
-    val rows = Tables.all.map(t =>
-      s"SELECT 'main' AS schema_name, '$t' AS table_name, (SELECT count(*) FROM $t) AS table_rows, '${Tables.pkKind(t)}' AS pk_kind")
+    val rows = Tables.all.map { t =>
+      val kind = if (nonclustered(t)) "NONCLUSTERED" else "CLUSTERED"
+      s"SELECT 'main' AS schema_name, '$t' AS table_name, (SELECT count(*) FROM $t) AS table_rows, '$kind' AS pk_kind"
+    }
     s"manifest AS (${rows.mkString("\n  UNION ALL ")})"
   }
 

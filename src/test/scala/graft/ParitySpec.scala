@@ -334,6 +334,42 @@ class CliSpec extends SparkSpec {
     assert(Cli.run(Array("report", conf), spark) == 0)
   }
 
+  /** `<table>_<runId>` summary dirs under `out`, sorted. */
+  private def summaryDirs(out: String): Seq[String] =
+    new java.io.File(out).list().toSeq
+      .filter(d => d.matches(".*_\\d{8}_\\d{6}") &&
+        new java.io.File(s"$out/$d/summary.txt").exists())
+      .sorted
+
+  test("run-all leaves one summary.txt per table; report renders the same rows and exit code") {
+    val out = Files.createTempDirectory("graft_runall").toString
+    val conf = confWith(out)
+    val (code, runOut) = doctorOut(Array("run-all", conf, sfDir))
+    val dirs = summaryDirs(out)
+    assert(dirs.map(_.dropRight(16)) == Seq("events", "lineitem", "orders"), dirs)
+    assert(dirs.map(_.takeRight(15)).distinct.size == 1, dirs) // one run id
+    val (reportCode, reportOut) = doctorOut(Array("report", conf))
+    assert(reportCode == code)
+    assert(runOut.endsWith(reportOut), s"$runOut\n---\n$reportOut")
+  }
+
+  test("discover, run-all and doctor take their tables from the source dir") {
+    // events plus a table no fixture map knows, and none of the others
+    val src = Files.createTempDirectory("graft_src")
+    for (t <- Seq("events", "widgets"))
+      Files.copy(java.nio.file.Paths.get(sfDir, "events.parquet"),
+        src.resolve(s"$t.parquet"))
+    val out = Files.createTempDirectory("graft_src_out").toString
+    val conf = confWith(out)
+    assert(Discover.discover(spark, src.toString, Discover.defaultCheckSql(500))
+      .collect().map(_.getString(1)).toSeq == Seq("events", "widgets"))
+    // widgets has no declared key, so it is compared keyless
+    assert(Orchestrate.task("main", "widgets", 500, structOnly = false).spec.isEmpty)
+    assert(Cli.run(Array("run-all", conf, src.toString), spark) == 0)
+    assert(summaryDirs(out).map(_.dropRight(16)) == Seq("events", "widgets"))
+    assert(Cli.run(Array("doctor", conf, src.toString), spark) == 0)
+  }
+
   private def doctorOut(args: Array[String]): (Int, String) = {
     val buf = new java.io.ByteArrayOutputStream()
     val code = Console.withOut(new java.io.PrintStream(buf)) {

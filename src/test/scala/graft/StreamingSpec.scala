@@ -324,14 +324,25 @@ class EngineConfSpec extends SparkSpec {
 class OrchestrateSpec extends SparkSpec {
   import graft.operators._
 
+  test("task routes a single-column key to the keyed diff, anything else keyless") {
+    def spec(t: String) = Orchestrate.task("main", t, 500, structOnly = false).spec
+    assert(spec("orders") ==
+      Some(TableDiff.DiffSpec(Seq("o_orderkey"), "o_orderkey", 500)))
+    // CLUSTERED in the manifest, but its key is one unique column
+    assert(spec("customer") ==
+      Some(TableDiff.DiffSpec(Seq("c_custkey"), "c_custkey", 500)))
+    assert(spec("lineitem").isEmpty) // composite key
+    assert(spec("widgets").isEmpty) // no declared key
+    assert(Orchestrate.task("s", "orders", 7, structOnly = true) ==
+      Orchestrate.Task("s", "orders",
+        Some(TableDiff.DiffSpec(Seq("o_orderkey"), "o_orderkey", 7)), true))
+  }
+
   test("runAll produces per-table verdicts, totals, and exit code") {
-    val specs = Map(
-      "orders" -> TableDiff.DiffSpec(Seq("o_orderkey"), "o_orderkey", 500),
-      "events" -> TableDiff.DiffSpec(Seq("event_id"), "event_id", 500))
     def down(table: String, up: org.apache.spark.sql.DataFrame) =
       if (table == "orders") Perturb.ordersDownstream(up) else up
     val rep = Orchestrate.runAll(spark, sfDir,
-      Discover.defaultCheckSql(500), down, specs)
+      Discover.defaultCheckSql(500), down, 500)
     val rows = rep.collect().map(r => r.getString(0) -> r.getString(2)).toMap
     assert(rows("orders") == "diff")
     assert(rows("events") == "ok")
@@ -353,24 +364,22 @@ class OrchestrateSpec extends SparkSpec {
         .select(up.columns.map(org.apache.spark.sql.functions.col): _*)
     }
     val rep = Orchestrate.runAll(spark, sfDir,
-      Discover.defaultCheckSql(500), poisoned, Map.empty, structOnly = true)
+      Discover.defaultCheckSql(500), poisoned, 500, structOnly = true)
       .collect().map(r => (r.getString(0), r.getString(2), r.getLong(3)))
     assert(rep.nonEmpty)
     assert(rep.filter(_._1 != "TOTAL").forall(r => r._2 == "skipped" && r._3 == 0L))
     intercept[Exception] {
       Orchestrate.runAll(spark, sfDir,
-        Discover.defaultCheckSql(500), poisoned, Map.empty).collect()
+        Discover.defaultCheckSql(500), poisoned, 500).collect()
     }
   }
 
   test("parallel table execution matches serial") {
-    val specs = Map(
-      "orders" -> TableDiff.DiffSpec(Seq("o_orderkey"), "o_orderkey", 500))
     def down(table: String, up: org.apache.spark.sql.DataFrame) = up
     val serial = Orchestrate.runAll(spark, sfDir,
-      Discover.defaultCheckSql(500), down, specs).collect().toSeq
+      Discover.defaultCheckSql(500), down, 500).collect().toSeq
     val par = Orchestrate.runAll(spark, sfDir,
-      Discover.defaultCheckSql(500), down, specs, tableParallelism = 3)
+      Discover.defaultCheckSql(500), down, 500, tableParallelism = 3)
       .collect().toSeq
     assert(serial == par)
   }
