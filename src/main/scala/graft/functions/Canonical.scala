@@ -35,11 +35,14 @@ import org.apache.spark.sql.types._
   * bucket count overflows it, and the pair determines the full 48-bit sum
   * exactly. The sums are order-independent and partial aggregation
   * (map-side combine) applies — Catalyst plans this as a two-phase
-  * HashAggregate with no extra shuffle beyond the groupBy(chunk). A chunk
-  * checksum collision is caught downstream by the row pass (full md5), so
-  * only a *simultaneous* 48-bit sum collision AND equal row counts could
-  * mask a chunk — and that chunk's rows are still compared whenever any
-  * other chunk flags.
+  * HashAggregate with no extra shuffle beyond the groupBy(chunk). Every
+  * clean verdict, keyed ([[graft.operators.TableDiff]]) and keyless
+  * ([[graft.operators.HashDiff]], whose chunks are buckets of this lane),
+  * and every phase-2 prune rests on it: a drifted chunk is passed over
+  * only if its row count AND its 48-bit sum both collide. Inside the
+  * chunks that flag, the row pass decides equality (keyed) or multiset
+  * membership (keyless) on the full 128-bit md5, so a collision there
+  * cannot make two different rows compare equal.
   *
   * Canonicalization rules (must match the oracle SQL in
   * [[graft.SparkEntry.oracleSql]] exactly):
@@ -237,10 +240,12 @@ object Canonical {
     * chunks (SURVEY.md §7.4). Derived from the row's OWN 48-bit
     * checksum-lane fingerprint, so the one md5 already paid for the
     * chunk checksum also yields the chunk id (the r3 form digested the
-    * PK serial a second time per row — VERDICT r03 #2). A mutated row's
-    * two versions may land in different buckets; each such bucket then
-    * flags by row count, so detection is preserved, and the row pass
-    * re-verifies everything on the full 128-bit lane as always. Buckets
+    * PK serial a second time per row — VERDICT r03 #2). Equal rows share
+    * a bucket, which is what lets the keyless diff prune to bad buckets
+    * without changing its result. A mutated row's two versions may land
+    * in different buckets; each such bucket then flags by row count, so
+    * detection is preserved, and the row pass re-verifies everything on
+    * the full 128-bit lane as always. Buckets
     * lose the range-pushdown row pass (no contiguous predicate exists),
     * so the row drill-down uses the semi-join/flat tiers instead.
     */

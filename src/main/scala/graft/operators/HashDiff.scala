@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.Canonical
-import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Keyless (multiset) table diff.
@@ -15,83 +15,76 @@ import org.apache.spark.sql.functions._
   * extra fingerprint); no fix-SQL keying is possible, matching the
   * reference's index requirement rationale.
   *
-  * Scale posture: one groupBy(fingerprint) shuffle per side with map-side
-  * partial counts, then an equi-join on the fingerprint — both shuffles
-  * hash-partition on the same key, so AQE coalesces and no re-shuffle
-  * happens for the join. The shuffled key is the 16-byte BINARY md5, not
-  * its 32-char hex rendering (2.5x narrower per row at 100 TB — VERDICT
-  * r03 #8); hex is restored only on the drift-bounded output. Sample
-  * payloads never ride the full-table shuffle: the count pass groups bare
-  * fingerprints, and payloads are re-derived in a second pass that is
-  * semi-join-filtered down to the (drift-bounded) differing fingerprints
-  * first — the same bounded-broadcast posture as TableDiff's bad-chunk
-  * list.
+  * Two phases, as [[TableDiff]]'s: chunks are hash buckets of the row's
+  * own fingerprint ([[Canonical.chunkIdFromFp]]), so every copy of a row
+  * lands in the same bucket and the multiset diff over the rows of the
+  * bad buckets is exactly the diff over the whole table.
+  *   - phase 1 ([[summary]], and the first step of [[diff]]): one
+  *     map-side-combining (count, checksum) aggregate per side into
+  *     2^14 buckets, then a join on bucket id. Its shuffle is bounded by
+  *     the bucket count per map task, not by the row count; a shuffle of
+  *     per-row fingerprints cannot combine (nearly every one is distinct).
+  *   - phase 2 (the rest of [[diff]]): each side keeps only the rows of
+  *     the bad buckets (a literal set of at most 2^14 ids, so
+  *     nothing unbounded reaches the driver), and only those rows pay for
+  *     the 128-bit fingerprint, the sample payload and the fingerprint
+  *     shuffle. Under pervasive drift every bucket is bad and phase 2 is
+  *     the full shuffled multiset join, never a broadcast.
   *
-  * Multiset membership is decided on the FULL 128-bit md5 fingerprint
-  * (collision discipline, [[graft.functions.Canonical]]) — this keyless
-  * path has no row drill-down to catch a truncated-hash collision, so the
-  * full lane is mandatory here.
+  * Collision discipline ([[graft.functions.Canonical]]): the clean verdict
+  * and the bucket pruning rest on the 48-bit split-sum checksum and row
+  * count per bucket, as the keyed verdict does — a drift is missed only if
+  * its bucket's count and 48-bit sum both collide. Multiset membership
+  * inside the bad buckets is decided on the full 128-bit md5.
   */
 object HashDiff {
 
-  private def fpCols(df: DataFrame) =
-    df.schema.fields.toSeq.map(f => (col(f.name), f.dataType))
+  /** Fingerprint buckets. A sweep of 2^12 / 2^14 / 2^16 on ~300 000
+    * lineitem rows gave the lowest summary + diff CPU at 2^14: fewer
+    * buckets keep more clean rows in phase 2, more widen phase 1's
+    * aggregate. Not an option; package-visible for the specs.
+    */
+  private[graft] val Buckets = 1 << 14
 
-  /** (fp BINARY(16), count) for one side — the narrow count pass. */
-  private def counted(df: DataFrame, cnt: String): DataFrame =
-    df.select(Canonical.fingerprintBytes(fpCols(df)).as("fp"))
-      .groupBy("fp").agg(count(lit(1)).as(cnt))
-
-  private def joined(up: DataFrame, down: DataFrame): DataFrame =
-    counted(up, "up_cnt")
-      .join(counted(down, "down_cnt"), Seq("fp"), "full_outer")
-      .withColumn("up_cnt", coalesce(col("up_cnt"), lit(0L)))
-      .withColumn("down_cnt", coalesce(col("down_cnt"), lit(0L)))
+  // hash-bucket mode reads no key or range column
+  private val spec = TableDiff.DiffSpec(Nil, "", 1, hashBuckets = Some(Buckets))
 
   /** Multiset diff of two homologous tables: rows whose fingerprint
     * multiplicity differs. Output: row_fp (lowercase hex), diff_kind,
     * up_cnt, down_cnt (0 when absent), sample serial payload from
-    * whichever side has the row.
+    * whichever side has the row. Phase 1 runs when this is called; an
+    * empty bad-bucket set returns an empty result that runs no job.
     */
   def diff(up: DataFrame, down: DataFrame): DataFrame = {
-    val diffs = joined(up, down).filter(col("up_cnt") =!= col("down_cnt"))
+    val bad = TableDiff.badChunks(up, down, spec).select("chunk_id")
+      .collect().map(_.getLong(0)).toSeq
 
-    // Payload pass: re-derive the serialized row ONLY for fingerprints
-    // already known to differ. A forced broadcast() of that set would be
-    // right in the common drift-bounded case but corpus-sized under
-    // pervasive drift (wrong table pairing / mass mutation) → driver OOM,
-    // the exact case TableDiff guards with maxBroadcastChunks. Here the
-    // guard is free: the fp set sits at a shuffle-stage boundary, so
-    // AQE's runtime size check converts the semi-join to broadcast-hash
-    // only when the materialized stage is actually small, and keeps the
-    // shuffled semi-join (on fp — the key both groupBys already
-    // partition on) when it is not. No driver-side count, no extra pass,
-    // and the decision is bytes-based rather than a guessed row cap.
-    val fps = diffs.select("fp")
     // Rows with equal fingerprints serialize identically, so one min()
-    // sample per fp equals the per-side min/coalesce the oracle computes.
-    def sideVals(df: DataFrame): DataFrame =
-      df.select(Canonical.fingerprintBytes(fpCols(df)).as("fp"),
-        Canonical.serialCsv(fpCols(df)).as("vals"))
-    val samples = sideVals(up).unionByName(sideVals(down))
-      .join(fps, Seq("fp"), "left_semi")
-      .groupBy("fp").agg(min(col("vals")).as("vals"))
-
-    diffs.join(samples, Seq("fp"), "left")
-      .withColumn("diff_kind",
-        when(col("up_cnt") > col("down_cnt"), lit("missing_on_down"))
-          .otherwise(lit("extra_on_down")))
+    // sample per fp and side equals the per-side min the oracle computes.
+    def side(df: DataFrame, p: String): DataFrame = {
+      val cols = TableDiff.fpCols(df)
+      df.filter(Canonical.chunkIdFromFp(Canonical.fingerprint48(cols), Buckets)
+          .isin(bad: _*))
+        .select(Canonical.fingerprintBytes(cols).as("fp"),
+          Canonical.serialCsv(cols).as("vals"))
+        .groupBy("fp")
+        .agg(count(lit(1)).as(s"${p}_cnt"), min(col("vals")).as(s"${p}_vals"))
+    }
+    val out = side(up, "up").join(side(down, "down"), Seq("fp"), "full_outer")
+      .na.fill(0L, Seq("up_cnt", "down_cnt"))
+      .filter(col("up_cnt") =!= col("down_cnt"))
       .select(lower(hex(col("fp"))).as("row_fp"),
-        col("diff_kind"), col("up_cnt"), col("down_cnt"), col("vals"))
+        when(col("up_cnt") > col("down_cnt"), lit("missing_on_down"))
+          .otherwise(lit("extra_on_down")).as("diff_kind"),
+        col("up_cnt"), col("down_cnt"),
+        least(col("up_vals"), col("down_vals")).as("vals"))
+    if (bad.nonEmpty) out
+    else up.sparkSession.createDataFrame(java.util.List.of[Row](), out.schema)
   }
 
-  /** One-pass summary (both row counts + differing-fingerprint tally) for
-    * the report stage — avoids re-running the diff per verdict/count.
+  /** Per-table summary for the report stage: both row counts and the
+    * number of bad buckets (only `> 0` carries meaning: the tables differ).
     */
   def summary(up: DataFrame, down: DataFrame): DataFrame =
-    joined(up, down).agg(
-      sum(col("up_cnt")).as("upcount"),
-      sum(col("down_cnt")).as("downcount"),
-      sum(when(col("up_cnt") =!= col("down_cnt"), 1L).otherwise(0L))
-        .as("bad_fingerprints"))
+    TableDiff.summary(up, down, spec)
 }

@@ -15,7 +15,7 @@ object Report {
   case class TableReport(
       table_name: String,
       structure: String, // "ok" | "diff"
-      data_result: String, // "ok" | "diff"
+      data_result: String, // "ok" | "diff" | "skipped"
       upcount: Long,
       downcount: Long)
 

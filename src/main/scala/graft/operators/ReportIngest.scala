@@ -46,13 +46,21 @@ object ReportIngest {
   val EquivalentPhrase =
     "The table structure and data in upstream and downstream are equivalent"
 
+  /** Verdict line of a struct-only run (`check-struct-only`), whose data
+    * stage never ran: read back as `skipped`, neither equivalent nor
+    * different.
+    */
+  val SkippedPhrase =
+    "The data check was skipped; only the table structure was compared"
+
   /** Render one per-table summary.txt body in the shape step3 parses: a
     * verdict phrase plus a backticked data row split on `|`
     * (`step3_run_syncdiff.sh:203-218`).
     */
   def renderSummary(r: Report.TableReport): String = {
     val verdict =
-      if (r.structure == "ok" && r.data_result == "ok") EquivalentPhrase
+      if (r.data_result == "skipped") SkippedPhrase
+      else if (r.structure == "ok" && r.data_result == "ok") EquivalentPhrase
       else "The upstream and downstream tables are different"
     s"""$verdict
        |`${r.table_name}` | ${r.structure} | ${r.upcount} | ${r.downcount}
@@ -95,6 +103,8 @@ object ReportIngest {
     val perFile = raw.groupBy("table_name", "run_id").agg(
       max(when(col("value").contains(EquivalentPhrase), 1).otherwise(0))
         .as("equivalent"),
+      max(when(col("value").contains(SkippedPhrase), 1).otherwise(0))
+        .as("skipped"),
       // first backticked data row (W3 first-match limit)
       min(when(col("value").startsWith("`"), col("value"))).as("data_row"))
 
@@ -111,7 +121,8 @@ object ReportIngest {
     latest.select(
       col("table_name"),
       trim(element_at(split(col("data_row"), "\\|"), 2)).as("structure"),
-      when(col("equivalent") === 1, lit("ok")).otherwise(lit("diff"))
+      when(col("skipped") === 1, lit("skipped"))
+        .when(col("equivalent") === 1, lit("ok")).otherwise(lit("diff"))
         .as("data_result"),
       guardedLong(trim(element_at(split(col("data_row"), "\\|"), 3)))
         .as("upcount"),

@@ -48,7 +48,11 @@ object TableDiff {
     *                   with replication-lag-sized drift, 2^16..2^20
     *                   buckets, i.e. ~10^5..10^6 rows a bucket. Any count
     *                   is safe for the checksum lane, down to one bucket:
-    *                   its split half-sums hold 2^39 rows per chunk.
+    *                   its split half-sums hold 2^39 rows per chunk. All
+    *                   copies of a row share a bucket, so a keyless
+    *                   multiset diff may prune to the bad buckets too
+    *                   ([[HashDiff]], at a fixed 2^14); pkCols, chunkBy and
+    *                   chunkWidth are then read only by [[rowDiff]].
     */
   case class DiffSpec(
       pkCols: Seq[String],
@@ -73,7 +77,8 @@ object TableDiff {
 
   private def fp48(df: DataFrame): Column = Canonical.fingerprint48(fpCols(df))
 
-  private def fpCols(df: DataFrame): Seq[(Column, org.apache.spark.sql.types.DataType)] =
+  /** Every column of `df` with its type: the fingerprint's input. */
+  private[operators] def fpCols(df: DataFrame): Seq[(Column, org.apache.spark.sql.types.DataType)] =
     df.schema.fields.toSeq.map(f => (col(f.name), f.dataType))
 
   /** Phase-1 input: side with chunk_id + 48-bit checksum-lane fingerprint

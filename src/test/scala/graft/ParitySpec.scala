@@ -285,8 +285,8 @@ class CliSpec extends SparkSpec {
     assert(Cli.run(Array("bogus"), spark) == 2)
   }
 
-  private def confWith(outputDir: String, checkSql: Option[String] = None)
-      : String = {
+  private def confWith(outputDir: String, checkSql: Option[String] = None,
+                       structOnly: Boolean = false): String = {
     val f = Files.createTempFile("graft_conf", ".toml")
     val sql = checkSql.getOrElse(
       "SELECT schema_name, table_name FROM graft_manifest WHERE " +
@@ -304,6 +304,7 @@ class CliSpec extends SparkSpec {
          |thread_count = "2"
          |chunk_size = "500"
          |output_dir = "$outputDir"
+         |check_struct_only = "$structOnly"
          |""".stripMargin)
     f.toString
   }
@@ -350,6 +351,20 @@ class CliSpec extends SparkSpec {
     assert(dirs.map(_.takeRight(15)).distinct.size == 1, dirs) // one run id
     val (reportCode, reportOut) = doctorOut(Array("report", conf))
     assert(reportCode == code)
+    assert(runOut.endsWith(reportOut), s"$runOut\n---\n$reportOut")
+  }
+
+  test("a struct-only run-all's skipped data stage survives summary.txt") {
+    val out = Files.createTempDirectory("graft_structonly").toString
+    val conf = confWith(out, structOnly = true)
+    val (code, runOut) = doctorOut(Array("run-all", conf, sfDir))
+    val (reportCode, reportOut) = doctorOut(Array("report", conf))
+    val ingested = ReportIngest.ingestSummaries(spark, out)
+      .select("table_name", "data_result").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(ingested == Map("events" -> "skipped", "lineitem" -> "skipped",
+      "orders" -> "skipped"))
+    assert(code == 0 && reportCode == code, reportOut)
     assert(runOut.endsWith(reportOut), s"$runOut\n---\n$reportOut")
   }
 

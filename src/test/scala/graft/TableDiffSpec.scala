@@ -3,6 +3,8 @@ package graft
 import graft.functions.Canonical
 import graft.operators.{HashDiff, Perturb, TableDiff}
 import graft.streaming.StreamingDiff
+import org.apache.spark.Listened
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
 
@@ -160,15 +162,101 @@ class TableDiffSpec extends SparkSpec {
       assert(!plan.contains("BroadcastExchange"),
         "over-threshold fp set must shuffle, not broadcast")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    // drift-bounded case: AQE's runtime sizing converts the semi-join to
-    // broadcast-hash once the fp stage materializes small (the fast path
-    // needs no manual hint)
-    val bounded = HashDiff.diff(orders, orders.limit(n.toInt - 3))
-    bounded.count()
-    val adaptive = bounded.queryExecution.executedPlan.toString
-    assert(adaptive.contains("BroadcastExchange") ||
-      adaptive.contains("BroadcastQueryStage"),
-      "drift-bounded fp set should broadcast at runtime via AQE")
+    // drift-bounded case: phase 1 runs inside diff(), so collecting the
+    // returned plan is phase 2 alone, and it shuffles no more rows than
+    // the bad buckets hold on both sides (the few dropped rows' buckets).
+    // The replica is checkpointed so that the limit's own exchange is not
+    // counted as phase 2's
+    val down3 = orders.limit(n.toInt - 3).localCheckpoint()
+    val bounded = HashDiff.diff(orders, down3)
+    val (rows, phase2) = Listened(spark.sparkContext)(bounded.collect())
+    assert(rows.length == 3)
+    val bad = TableDiff.badChunks(orders, down3,
+        spec.copy(hashBuckets = Some(HashDiff.Buckets)))
+      .select("chunk_id").collect().map(_.getLong(0)).toSeq
+    def inBad(df: DataFrame) = df.filter(
+      Canonical.chunkIdFromFp(Canonical.fingerprint48(fpCols(df)), HashDiff.Buckets)
+        .isin(bad: _*)).count()
+    val bucketRows = inBad(orders) + inBad(down3)
+    assert(phase2.shuffleRecords <= bucketRows && bucketRows < n / 100,
+      s"phase 2 shuffled ${phase2.shuffleRecords} rows; bad buckets hold $bucketRows of $n")
+  }
+
+  private def fpCols(df: DataFrame) =
+    df.schema.fields.toSeq.map(f => (col(f.name), f.dataType))
+
+  /** Independent multiset diff: `exceptAll` both ways on (fingerprint,
+    * serialCsv), each surplus row tagged with its direction, grouped with
+    * both sides' multiplicities. Rows: (row_fp, diff_kind, up_cnt,
+    * down_cnt, vals, surplus copies), in row_fp order.
+    */
+  private def multisetDiff(up: DataFrame,
+                           down: DataFrame) = {
+    def rows(df: DataFrame) = df.select(
+      Canonical.fingerprint(fpCols(df)).as("row_fp"),
+      Canonical.serialCsv(fpCols(df)).as("vals"))
+    val (u, d) = (rows(up), rows(down))
+    def counts(df: DataFrame, c: String) =
+      df.groupBy("row_fp").agg(count(lit(1)).as(c))
+    u.exceptAll(d).withColumn("diff_kind", lit("missing_on_down"))
+      .unionByName(d.exceptAll(u).withColumn("diff_kind", lit("extra_on_down")))
+      .groupBy("row_fp", "diff_kind", "vals").agg(count(lit(1)).as("surplus"))
+      .join(counts(u, "up_cnt"), Seq("row_fp"), "left")
+      .join(counts(d, "down_cnt"), Seq("row_fp"), "left")
+      .na.fill(0L, Seq("up_cnt", "down_cnt"))
+      .orderBy("row_fp").collect().toSeq
+      .map(r => (r.getAs[String]("row_fp"), r.getAs[String]("diff_kind"),
+        r.getAs[Long]("up_cnt"), r.getAs[Long]("down_cnt"),
+        r.getAs[String]("vals"), r.getAs[Long]("surplus")))
+  }
+
+  test("HashDiff equals an independent multiset diff; equal inputs run phase 1 only") {
+    def exact(up: DataFrame, down: DataFrame,
+              what: String): Seq[(String, String, Long, Long, String)] = {
+      val want = multisetDiff(up, down)
+      want.foreach { case (_, _, u, d, _, surplus) =>
+        assert(surplus == math.abs(u - d), what) }
+      val got = HashDiff.diff(up, down).orderBy("row_fp").collect().toSeq
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getString(4)))
+      assert(got == want.map(w => (w._1, w._2, w._3, w._4, w._5)), what)
+      assert(got.nonEmpty, what)
+      got
+    }
+    val byKey = orders.orderBy("o_orderkey")
+    val r = byKey.limit(1)
+    val k = r.head().getAs[Long]("o_orderkey")
+    def staled(df: DataFrame, tag: String) =
+      df.withColumn("o_orderpriority", lit(tag))
+
+    // two identical upstream rows, one of them stale downstream
+    val dup = exact(orders.unionByName(r), orders.unionByName(staled(r, "stale")),
+      "drifted duplicate")
+    assert(dup.map(x => (x._2, x._3, x._4)).toSet ==
+      Set(("missing_on_down", 2L, 1L), ("extra_on_down", 0L, 1L)))
+
+    // a stale row whose versions differ in the low 12 bits of the 48-bit
+    // lane, so they land in different buckets at any power-of-two bucket
+    // count from 2^12 up
+    def fp48(df: DataFrame) =
+      df.select(Canonical.fingerprint48(fpCols(df))).head().getLong(0)
+    val stale = (0 until 16).iterator.map(i => staled(r, s"stale $i"))
+      .find(s => ((fp48(s) ^ fp48(r)) & 0xFFFL) != 0).get
+    exact(orders, orders.filter(col("o_orderkey") =!= k).unionByName(stale),
+      "stale row across buckets")
+
+    // an inserted exact duplicate
+    assert(exact(orders, orders.unionByName(r), "inserted duplicate")
+      .map(x => (x._2, x._3, x._4)) == Seq(("extra_on_down", 1L, 2L)))
+
+    // pervasive drift: every row changes
+    assert(exact(orders, orders.withColumn("o_totalprice", col("o_totalprice") + 1.0),
+      "pervasive drift").length == 2 * orders.count())
+
+    // equal inputs: diff() runs phase 1 and finds no bad bucket, so the
+    // returned plan starts no job
+    val (same, phase1) = Listened(spark.sparkContext)(HashDiff.diff(orders, orders))
+    val (rows, phase2) = Listened(spark.sparkContext)(same.collect())
+    assert(rows.isEmpty && phase1.jobs > 0 && phase2.jobs == 0, (phase1, phase2))
   }
 
   test("range predicate restricts both sides") {
