@@ -1,8 +1,7 @@
 package graft
 import graft.Harness.{json, ms, reps}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.Listened
 import org.apache.spark.sql.SparkSession
-import scala.collection.mutable.{ArrayBuffer, LinkedHashMap}
 
 /** Query benchmark on `SPARK_GRAFT_SF_DIR` (default sf0.1), min of
   * [[Harness.reps]] interleaved reps per query.
@@ -109,24 +108,15 @@ object Bench {
     * cost sits (the rest of the wall time is planning/driver work).
     */
   private def jobs(spark: SparkSession, name: String, run: => Unit): Unit = {
-    val starts = LinkedHashMap.empty[Int, SparkListenerJobStart]
-    val jobs = ArrayBuffer.empty[(String, Double)]
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.synchronized(starts(js.jobId) = js)
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = jobs.synchronized {
-        starts.remove(je.jobId).foreach { js => jobs += ((s"stages=${js.stageInfos.size} ${
-          js.stageInfos.map(_.name).mkString(" | ").take(120)}", (je.time - js.time) / 1e3)) }
-      }
+    val (dt, c) = Listened(spark.sparkContext) {
+      val t0 = System.nanoTime()
+      run
+      (System.nanoTime() - t0) / 1e9
     }
-    spark.sparkContext.addSparkListener(l)
-    val t0 = System.nanoTime()
-    run
-    val dt = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(400) // let the listener bus deliver the last job ends
-    spark.sparkContext.removeSparkListener(l)
-    val inJobs = jobs.map(_._2).sum
-    println(f"[jobs] $name -> ${jobs.size} jobs, $dt%.3f s total, $inJobs%.3f s in jobs (rest = planning/driver)")
-    jobs.foreach { case (desc, d) => println(f"   $d%7.3f  $desc") }
+    val inJobs = c.finished.map(_.seconds).sum
+    println(f"[jobs] $name -> ${c.finished.size} jobs, $dt%.3f s total, $inJobs%.3f s in jobs (rest = planning/driver)")
+    c.finished.foreach { j =>
+      println(f"   ${j.seconds}%7.3f  stages=${j.stages.size} ${j.stages.mkString(" | ").take(120)}")
+    }
   }
 }

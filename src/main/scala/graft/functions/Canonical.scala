@@ -227,13 +227,22 @@ object Canonical {
     crc32(serial.cast(BinaryType))
   }
 
-  /** Chunk id from a numeric leading-PK column: contiguous ranges of
-    * `width` key values — the file-source analogue of the reference's
-    * PK-range chunks (`my_database_users.toml:45`, chunk-size 5000).
-    * Positive keys only in fixtures; floor handles negatives too.
+  /** Chunk id from a numeric leading-PK column of type `keyType`:
+    * contiguous ranges of `width` key values — the file-source analogue
+    * of the reference's PK-range chunks (`my_database_users.toml:45`,
+    * chunk-size 5000). The id is `floor(k / width)`, negatives included.
+    * An integral key divides exactly: a double quotient rounds a BIGINT
+    * above 2^53 that sits just below a chunk edge into the next chunk,
+    * outside the range predicate that prunes the row pass (such keys are
+    * what TiDB `AUTO_RANDOM` and snowflake ids produce). Fractional and
+    * decimal keys keep the floor of the quotient.
     */
-  def chunkId(pk: Column, width: Long): Column =
-    floor(pk / lit(width)).cast(LongType)
+  def chunkId(pk: Column, width: Long, keyType: DataType): Column = keyType match {
+    case ByteType | ShortType | IntegerType | LongType =>
+      val w = lit(width)
+      call_function("div", pk, w) - when(pk % w < 0, 1L).otherwise(0L)
+    case _ => floor(pk / lit(width)).cast(LongType)
+  }
 
   /** Hash-bucket chunk id for arbitrary (composite / non-numeric) PK
     * tables — the fallback when no numeric leading PK supports range

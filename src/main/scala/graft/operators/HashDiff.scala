@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.Canonical
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Keyless (multiset) table diff.
@@ -24,12 +24,13 @@ import org.apache.spark.sql.functions._
   *     2^14 buckets, then a join on bucket id. Its shuffle is bounded by
   *     the bucket count per map task, not by the row count; a shuffle of
   *     per-row fingerprints cannot combine (nearly every one is distinct).
-  *   - phase 2 (the rest of [[diff]]): each side keeps only the rows of
-  *     the bad buckets (a literal set of at most 2^14 ids, so
-  *     nothing unbounded reaches the driver), and only those rows pay for
-  *     the 128-bit fingerprint, the sample payload and the fingerprint
-  *     shuffle. Under pervasive drift every bucket is bad and phase 2 is
-  *     the full shuffled multiset join, never a broadcast.
+  *   - phase 2 (the rest of [[diff]]): [[TableDiff]]'s drill-down front
+  *     end keeps only the rows of the bad buckets on each side (a
+  *     semi-join on at most 2^14 ids, so nothing unbounded reaches the
+  *     driver), and only those rows pay for the 128-bit fingerprint, the
+  *     sample payload and the fingerprint shuffle. Under pervasive drift
+  *     every bucket is bad and phase 2 is the full shuffled multiset join;
+  *     only the id list may be broadcast, never the fingerprints.
   *
   * Collision discipline ([[graft.functions.Canonical]]): the clean verdict
   * and the bucket pruning rest on the 48-bit split-sum checksum and row
@@ -52,25 +53,22 @@ object HashDiff {
   /** Multiset diff of two homologous tables: rows whose fingerprint
     * multiplicity differs. Output: row_fp (lowercase hex), diff_kind,
     * up_cnt, down_cnt (0 when absent), sample serial payload from
-    * whichever side has the row. Phase 1 runs when this is called; an
-    * empty bad-bucket set returns an empty result that runs no job.
+    * whichever side has the row. Phase 1 runs when this is called; with
+    * no bad bucket, both sides prune to empty relations and the result
+    * runs no job.
     */
   def diff(up: DataFrame, down: DataFrame): DataFrame = {
-    val bad = TableDiff.badChunks(up, down, spec).select("chunk_id")
-      .collect().map(_.getLong(0)).toSeq
-
+    val (u, d) = TableDiff.badChunkSides(up, down, spec)
     // Rows with equal fingerprints serialize identically, so one min()
     // sample per fp and side equals the per-side min the oracle computes.
     def side(df: DataFrame, p: String): DataFrame = {
       val cols = TableDiff.fpCols(df)
-      df.filter(Canonical.chunkIdFromFp(Canonical.fingerprint48(cols), Buckets)
-          .isin(bad: _*))
-        .select(Canonical.fingerprintBytes(cols).as("fp"),
+      df.select(Canonical.fingerprintBytes(cols).as("fp"),
           Canonical.serialCsv(cols).as("vals"))
         .groupBy("fp")
         .agg(count(lit(1)).as(s"${p}_cnt"), min(col("vals")).as(s"${p}_vals"))
     }
-    val out = side(up, "up").join(side(down, "down"), Seq("fp"), "full_outer")
+    side(u, "up").join(side(d, "down"), Seq("fp"), "full_outer")
       .na.fill(0L, Seq("up_cnt", "down_cnt"))
       .filter(col("up_cnt") =!= col("down_cnt"))
       .select(lower(hex(col("fp"))).as("row_fp"),
@@ -78,8 +76,6 @@ object HashDiff {
           .otherwise(lit("extra_on_down")).as("diff_kind"),
         col("up_cnt"), col("down_cnt"),
         least(col("up_vals"), col("down_vals")).as("vals"))
-    if (bad.nonEmpty) out
-    else up.sparkSession.createDataFrame(java.util.List.of[Row](), out.schema)
   }
 
   /** Per-table summary for the report stage: both row counts and the

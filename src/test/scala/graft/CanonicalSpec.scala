@@ -180,9 +180,13 @@ class CanonicalSpec extends SparkSpec {
   }
 
   test("chunkId floors negatives correctly") {
-    val df = Seq(-1L, 0L, 499L, 500L).toDF("k")
-    val out = df.select(Canonical.chunkId(col("k"), 500).as("c"))
-      .as[Long].collect().toSeq
-    assert(out == Seq(-1L, 0L, 0L, 1L))
+    // the exact integral form and the floor of a fractional quotient
+    Seq(LongType, IntegerType, DoubleType, DecimalType(10, 1)).foreach { t =>
+      val df = Seq(-501L, -500L, -1L, 0L, 499L, 500L).toDF("k")
+        .select(col("k").cast(t).as("k"))
+      val out = df.select(Canonical.chunkId(col("k"), 500, t).as("c"))
+        .as[Long].collect().toSeq
+      assert(out == Seq(-2L, -1L, -1L, 0L, 0L, 1L), t)
+    }
   }
 }

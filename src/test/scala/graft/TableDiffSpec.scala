@@ -89,18 +89,80 @@ class TableDiffSpec extends SparkSpec {
 
   test("range tier keeps fractional and decimal keys at a chunk's top edge") {
     // chunk_id = floor(k / 10) puts k = 9.5 in chunk 0; a closed
-    // BETWEEN 0 AND 9 prune would drop it from the row pass
+    // BETWEEN 0 AND 9 prune would drop it from the row pass. A BIGINT
+    // above 2^53 at offset 4997 of a 5000-wide chunk has a double
+    // quotient that rounds into the next chunk, outside its range
     val t = spark.range(0, 40).select((col("id") + 0.5).as("k"),
       col("id").cast("string").as("v"))
-    Seq("double", "decimal(10,1)").foreach { tpe =>
-      val up = t.withColumn("k", col("k").cast(tpe))
+    val big = 1152921504611844997L
+    Seq(("double", t.withColumn("k", col("k").cast("double")), lit(9.5), 10L),
+      ("decimal(10,1)", t.withColumn("k", col("k").cast("decimal(10,1)")), lit(9.5), 10L),
+      ("bigint", t.withColumn("k", col("k").cast("long") + (big - 9)), lit(big), 5000L)
+    ).foreach { case (tpe, up, edge, width) =>
       val down = up.withColumn("v",
-        when(col("k") === 9.5, lit("drift")).otherwise(col("v")))
-      val s = TableDiff.DiffSpec(Seq("k"), "k", 10)
+        when(col("k") === edge, lit("drift")).otherwise(col("v")))
+      val s = TableDiff.DiffSpec(Seq("k"), "k", width)
       val two = TableDiff.rowDiff(up, down, s).collect().toSeq
       val flat = TableDiff.rowDiff(up, down, s, twoPhase = false).collect().toSeq
       assert(flat.map(_.get(1)) == Seq("value_mismatch"), tpe)
       assert(two == flat, tpe)
+    }
+  }
+
+  test("a replica with the same columns in another order compares equal") {
+    def reversed(df: DataFrame) = df.select(df.columns.reverse.toSeq.map(col): _*)
+    val same = reversed(orders)
+    assert(TableDiff.summary(orders, same, spec).collect()(0).getLong(2) == 0L)
+    assert(TableDiff.rowDiff(orders, same, spec).isEmpty)
+    assert(TableDiff.rowDiff(orders, same, spec, twoPhase = false).isEmpty)
+    assert(HashDiff.diff(orders, same).isEmpty)
+    // drift still shows, row for row, through the reordering
+    val down = Perturb.ordersDownstream(orders)
+    assert(TableDiff.rowDiff(orders, reversed(down), spec).collect().toSet ==
+      TableDiff.rowDiff(orders, down, spec).collect().toSet)
+  }
+
+  /** Runs `body` with the given session settings, then restores them. */
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.get(k) }
+    try { kv.foreach { case (k, v) => spark.conf.set(k, v) }; body }
+    finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  test("semi tier shuffles when auto-broadcast is off and equals the flat diff") {
+    // drift planted without a join, so the only join to broadcast is the prune's
+    val down = orders.filter(col("o_orderkey") % 97 =!= 1).withColumn("o_orderpriority",
+      when(col("o_orderkey") % 89 === 2, lit("drift")).otherwise(col("o_orderpriority")))
+    val hSpec = spec.copy(hashBuckets = Some(4096))
+    def sorted(df: DataFrame) = df.collect().toSeq.sortBy(_.getLong(0))
+    val flat = sorted(TableDiff.rowDiff(orders, down, hSpec, twoPhase = false))
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val semi = TableDiff.rowDiff(orders, down, hSpec)
+      assert(sorted(semi) == flat && flat.nonEmpty)
+      val plan = semi.queryExecution.executedPlan.toString
+      assert(plan.contains("LeftSemi") && !plan.contains("BroadcastExchange"), plan)
+    }
+  }
+
+  test("flat tier: more bad chunks than the prune cap joins the whole tables") {
+    // 150 000 one-key chunks, every one drifted: past the cap of 100 000
+    // collected ids, which then name only some of the bad chunks. With one
+    // shuffle partition and no broadcast, the chunk join is one sorted
+    // sort-merge output, so the collected ids are the lowest ones: they
+    // merge into a single range that a range prune would wrongly stop at
+    val n = 150000L
+    val up = spark.range(0, n).select(col("id").as("k"),
+      col("id").cast("string").as("v"))
+    val down = up.withColumn("v", concat(col("v"), lit("x")))
+    val s = TableDiff.DiffSpec(Seq("k"), "k", 1)
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.shuffle.partitions" -> "1") {
+      val two = TableDiff.rowDiff(up, down, s)
+      val flat = TableDiff.rowDiff(up, down, s, twoPhase = false)
+      assert(two.count() == n)
+      assert(two.exceptAll(flat).isEmpty && flat.exceptAll(two).isEmpty)
+      def plan(df: DataFrame) = df.queryExecution.optimizedPlan.toString.replaceAll("#\\d+", "")
+      assert(plan(two) == plan(flat), plan(two))
     }
   }
 
